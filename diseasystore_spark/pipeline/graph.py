@@ -188,6 +188,10 @@ def pagerank_integer(
                 .select("node", rank_expr)
                 .localCheckpoint()
             )
+    if iteration_strategy == "persist":
+        # every rank frame is checkpointed, so the pinned edge frame
+        # has no reader left: release it instead of leaking its cache
+        e.unpersist()
     return pr
 
 

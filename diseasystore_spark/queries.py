@@ -10400,9 +10400,17 @@ def q191_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for i in range(2):
         hdir = os.path.join(part, f"__half={i}")
-        src = next(f for f in os.listdir(hdir) if f.endswith(".parquet"))
         dst = os.path.join(sdir, f"{i}.parquet")
-        os.rename(os.path.join(hdir, src), dst)
+        if os.path.isdir(hdir):
+            src = next(f for f in os.listdir(hdir) if f.endswith(".parquet"))
+            os.rename(os.path.join(hdir, src), dst)
+        else:
+            # every event fell on the other side of the cutoff: an
+            # empty schema-only file keeps the two-batch shape
+            import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            pq.write_table(to_arrow_schema(events.schema).empty_table(), dst)
         os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
 
     stages = ["view", "click", "signup", "purchase"]

@@ -63,8 +63,10 @@ partitioned by ``month(valid_from)`` and a merge rewrites only months
 containing a changed row — ``update_snapshot`` is always scoped to a
 date range, so the rewrite is O(touched partitions), the same pruning
 a Delta ``MERGE`` on checksum would achieve. The merge plan itself
-(two anti joins + a semi join on ``checksum``) shuffles only on the
-checksum key and is AQE-friendly.
+is one full outer join of the current rows with the incoming rows on
+``checksum`` that classifies every row as kept, closed or inserted
+(Delta's single-join MERGE); it shuffles only on the checksum key and
+is AQE-friendly.
 
 Without the Delta jars in this environment the parquet+manifest
 layout is the honest equivalent; the class isolates all physical I/O
@@ -83,7 +85,7 @@ import uuid
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -99,6 +101,23 @@ LOGS_TABLE = "logs"
 #: partition-directory name parquet uses for a NULL partition value —
 #: a month key that can never be pruned by a date cutoff.
 NULL_MONTH = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _month_key(valid_from: Column) -> Column:
+    """The manifest month of ``valid_from``. NULL lands in the
+    NULL_MONTH segment (the directory partitionBy writes it to), so the
+    key says so too: a raw ``date_format`` would be Python None —
+    unsortable against the string months, and never matching the
+    manifest key. NULL_MONTH sorts after every "yyyy-MM", so a scoped
+    merge that changes such rows takes the unscoped fallback."""
+    return F.coalesce(F.date_format(valid_from, "yyyy-MM"), F.lit(NULL_MONTH))
+
+
+def _valid_at(ts) -> Column:
+    """The rows of the snapshot at transaction time ``ts``."""
+    return (F.col("from_ts") <= F.lit(ts)) & (
+        F.col("until_ts").isNull() | (F.col("until_ts") > F.lit(ts))
+    )
 
 
 class CommitConflictError(RuntimeError):
@@ -540,7 +559,8 @@ class ParquetFeatureStore:
         before any file is listed or opened (strictly earlier than
         Catalyst partition pruning, and the only LIST the read ever
         does is the one control-plane marker GET). Legacy versions
-        fall back to a directory read with partition discovery."""
+        fall back to a directory read with partition discovery; the
+        internal partition column is hidden either way."""
         if version is None:
             version = self._current_version(table_id)
         if version is None:
@@ -553,9 +573,10 @@ class ParquetFeatureStore:
             slice_ts=slice_ts,
         )
         if files is None:  # legacy layout
-            return self.spark.read.parquet(
-                self._version_dir(table_id, version)
-            )
+            df = self.spark.read.parquet(self._version_dir(table_id, version))
+            if month_max is not None and PARTITION_COL in df.columns:
+                df = df.where(F.col(PARTITION_COL) <= month_max)
+            return df.drop(PARTITION_COL)
         if not files:
             # every month pruned: empty frame with the version's schema
             allf = self._version_files(table_id, version)
@@ -563,8 +584,22 @@ class ParquetFeatureStore:
                 raise FileNotFoundError(
                     f"table {table_id} version {version} has no data files"
                 )
-            return self.spark.read.parquet(allf[0]).where(F.lit(False))
-        return self.spark.read.parquet(*files)
+            return self._read_files(allf[:1]).where(F.lit(False))
+        return self._read_files(files)
+
+    def _read_files(self, files: list[str]) -> DataFrame:
+        """Read an exact parquet file list without a schema-inference
+        job: Spark's writer leaves the row schema in every file's
+        footer (the same key Spark's own inference reads), so one
+        driver-side pyarrow footer read of the first file hands the
+        reader its schema. Files written by other tools lack the key
+        and fall back to inference."""
+        meta = pq.read_metadata(files[0]).metadata or {}
+        row_schema = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+        if row_schema is None:
+            return self.spark.read.parquet(*files)
+        schema = T.StructType.fromJson(json.loads(row_schema))
+        return self.spark.read.schema(schema).parquet(*files)
 
     def read_raw(
         self, table_id: str, max_valid_from=None, version: int | None = None
@@ -581,14 +616,9 @@ class ParquetFeatureStore:
             if max_valid_from is not None
             else None
         )
-        df = self._read_raw_partitioned(
+        return self._read_raw_partitioned(
             table_id, version=version, month_max=month_max
         )
-        if PARTITION_COL in df.columns:  # legacy directory layout
-            if month_max is not None:
-                df = df.where(F.col(PARTITION_COL) <= month_max)
-            df = df.drop(PARTITION_COL)
-        return df
 
     def get_table(
         self,
@@ -644,14 +674,7 @@ class ParquetFeatureStore:
             min_valid_until=min_valid_until,
             slice_ts=ts,
         )
-        if PARTITION_COL in raw.columns:  # legacy directory layout
-            if month_max is not None:
-                raw = raw.where(F.col(PARTITION_COL) <= month_max)
-            raw = raw.drop(PARTITION_COL)
-        return raw.where(
-            (F.col("from_ts") <= F.lit(ts))
-            & (F.col("until_ts").isNull() | (F.col("until_ts") > F.lit(ts)))
-        ).drop(*SCD2_COLUMNS)
+        return raw.where(_valid_at(ts)).drop(*SCD2_COLUMNS)
 
     # ------------------------------------------------------------- writes
     def _retain_floor_path(self, table_id: str) -> str:
@@ -763,12 +786,7 @@ class ParquetFeatureStore:
                 f"{floor}: that history was pruned (prune_history)"
             )
         raw = self.read_raw(table_id)
-        alive_a = (F.col("from_ts") <= F.lit(a)) & (
-            F.col("until_ts").isNull() | (F.col("until_ts") > F.lit(a))
-        )
-        alive_b = (F.col("from_ts") <= F.lit(b)) & (
-            F.col("until_ts").isNull() | (F.col("until_ts") > F.lit(b))
-        )
+        alive_a, alive_b = _valid_at(a), _valid_at(b)
         change = (
             F.when(~alive_a & alive_b, F.lit("added"))
             .when(alive_a & ~alive_b, F.lit("removed"))
@@ -944,7 +962,7 @@ class ParquetFeatureStore:
             files = [
                 os.path.join(tdir, f) for m in frag for f in months[m]
             ]
-            rows = self.spark.read.parquet(*files)
+            rows = self._read_files(files)
             self._write_version(
                 rows, table_id, changed_months=frag, base_version=base
             )
@@ -973,11 +991,13 @@ class ParquetFeatureStore:
             n += sum(1 for f in names if f.endswith(".parquet"))
         return n
 
-    def payload_columns(self, table_id: str) -> list[str]:
+    def payload_columns(
+        self, table_id: str, version: int | None = None
+    ) -> list[str]:
         """The table's data columns (SCD2 bookkeeping excluded)."""
         return [
             c
-            for c in self.read_raw(table_id).columns
+            for c in self.read_raw(table_id, version=version).columns
             if c not in SCD2_COLUMNS
         ]
 
@@ -1123,7 +1143,7 @@ class ParquetFeatureStore:
         # re-enters the retry loop — never a lost update.
         base = self._current_version(table_id)
         if base is not None:
-            existing_payload = set(self._payload_columns_at(table_id, base))
+            existing_payload = set(self.payload_columns(table_id, base))
             incoming_cols = set(data.columns)
             if existing_payload != incoming_cols:
                 extra = sorted(incoming_cols - existing_payload)
@@ -1182,13 +1202,6 @@ class ParquetFeatureStore:
             return
         self._merge_existing(incoming, table_id, ts, written_range, base)
 
-    def _payload_columns_at(self, table_id: str, version: int) -> list[str]:
-        return [
-            c
-            for c in self.read_raw(table_id, version=version).columns
-            if c not in SCD2_COLUMNS
-        ]
-
     def _append_only(
         self,
         incoming: DataFrame,
@@ -1201,9 +1214,7 @@ class ParquetFeatureStore:
         checksum and inserts nothing (the version bump is skipped)."""
         partitioned = self._scoped_write_ok(table_id, base)
         existing = self.read_raw(table_id, version=base)
-        is_current = (F.col("from_ts") <= F.lit(ts)) & (
-            F.col("until_ts").isNull() | (F.col("until_ts") > F.lit(ts))
-        )
+        is_current = _valid_at(ts)
         inserted = incoming.join(
             existing.where(is_current).select("checksum"),
             "checksum",
@@ -1226,17 +1237,7 @@ class ParquetFeatureStore:
             )
             return
 
-        # NULL valid_from lands in the NULL_MONTH segment (that is
-        # literally the directory partitionBy writes it to), so the
-        # changed-month key must say so too — a raw date_format would
-        # yield Python None here: unsortable against the string
-        # months, and a changed-months list that can never pop the
-        # manifest's NULL_MONTH key (silently dropping that month's
-        # carried rows).
-        month_of = F.coalesce(
-            F.date_format(F.col("valid_from"), "yyyy-MM"),
-            F.lit(NULL_MONTH),
-        )
+        month_of = _month_key(F.col("valid_from"))
         inserted = inserted.cache()
         try:
             changed_months = sorted(
@@ -1277,30 +1278,18 @@ class ParquetFeatureStore:
         written_range,
         base: int,
     ) -> None:
-        # The merge consumes ``incoming`` two-to-three times (the
-        # closed/inserted anti-joins, then kept's semi-join on a real
-        # change) — but ``incoming`` is usually an UPSTREAM COMPUTE
-        # (the engine hands the handler's source read / generation
-        # lazily), so each consumer would re-run it from scratch.
-        # Cache it for the merge's lifetime: one evaluation, spill-
-        # safe (MEMORY_AND_DISK), released in the finally (measured on
-        # the sf10 engine backfill: SCALE.md round-10).
-        incoming = incoming.cache()
-        try:
-            self._merge_existing_cached(
-                incoming, table_id, ts, written_range, base
-            )
-        finally:
-            incoming.unpersist()
+        """The checksum merge: ONE full outer join of the current rows
+        (months <= range end on a scoped merge) with ``incoming`` on
+        ``checksum`` classifies every row, as Delta's MERGE does:
 
-    def _merge_existing_cached(
-        self,
-        incoming: DataFrame,
-        table_id: str,
-        ts: datetime.datetime,
-        written_range,
-        base: int,
-    ) -> None:
+        - in both: kept verbatim;
+        - existing only, in the compared scope: closed at ``ts``;
+        - existing only, out of scope: kept verbatim;
+        - incoming only: inserted, open from ``ts``.
+
+        The insert side matches against ALL current rows, in scope or
+        not, so an incoming row equal to an out-of-scope current row is
+        never opened twice."""
         partitioned = self._scoped_write_ok(table_id, base)
         if not partitioned:
             # an unscoped compare must read the WHOLE table — a range
@@ -1311,14 +1300,10 @@ class ParquetFeatureStore:
             max_valid_from=written_range[1] if written_range else None,
             version=base,
         )
-        is_current = (F.col("from_ts") <= F.lit(ts)) & (
-            F.col("until_ts").isNull() | (F.col("until_ts") > F.lit(ts))
-        )
-        current = existing.where(is_current)
-        others = existing.where(~is_current)
-
-        close_candidates = current
-        in_scope = None
+        is_current = _valid_at(ts)
+        ts_lit = F.lit(ts).cast("timestamp")
+        payload = [c for c in existing.columns if c not in SCD2_COLUMNS]
+        in_scope = F.lit(True)
         if written_range is not None:
             # Only rows whose validity OVERLAPS the declared range are
             # in the compare's scope: ``data`` is the complete snapshot
@@ -1328,70 +1313,86 @@ class ParquetFeatureStore:
             # are NEVER closed by a scoped merge — the reference
             # reaches the same end state by re-including all current
             # out-of-range rows into the compared frame
-            # (R/DiseasystoreBase.R:195-212); scoping the closure
-            # keeps them out of the compare entirely, so a backfill
-            # at a new slice_ts neither closes nor rewrites earlier
-            # months (round-10: this was the sf10 backfill's 25 s —
-            # every month <= range_end was closed + rewritten). The
-            # predicate pushes to the parquet scan, so row groups of
-            # old months entirely before the range are skipped by
-            # min/max stats.
-            in_scope = (
-                F.col("valid_from") <= F.lit(written_range[1])
-            ) & (
+            # (R/DiseasystoreBase.R:195-212) — so a backfill at a new
+            # slice_ts neither closes nor rewrites earlier months, and
+            # out-of-scope rows of a changed month (a sub-month range
+            # update) are carried into its rewrite verbatim.
+            in_scope = (F.col("valid_from") <= F.lit(written_range[1])) & (
                 F.col("valid_until").isNull()
                 | (F.col("valid_until") > F.lit(written_range[0]))
             )
-            close_candidates = current.where(in_scope)
+            # Only a scoped compare can fall back (below) and read
+            # ``incoming`` a second time — usually an upstream compute
+            # handed in lazily, so keep its one evaluation.
+            incoming = incoming.cache()
 
-        incoming_keys = incoming.select("checksum")
-        closed = close_candidates.join(
-            incoming_keys, "checksum", "left_anti"
-        ).withColumn("until_ts", F.lit(ts).cast("timestamp"))
-        inserted = incoming.join(
-            current.select("checksum"), "checksum", "left_anti"
-        ).withColumns(
-            {
-                "from_ts": F.lit(ts).cast("timestamp"),
-                "until_ts": F.lit(None).cast("timestamp"),
-            }
+        incoming_rows = incoming.select(
+            "checksum", F.struct(*payload).alias("__in")
         )
 
         if not partitioned:
-            kept = current.join(incoming_keys, "checksum", "left_semi")
-            new_table = (
-                others.unionByName(kept)
-                .unionByName(closed)
-                .unionByName(inserted.select(*others.columns))
+            # Flat: the whole table is rewritten anyway, so the join
+            # carries full rows and the non-current rows ∪ the merged
+            # rows are one write.
+            joined = (
+                existing.where(is_current)
+                .withColumn("__ex", F.lit(True))
+                .join(incoming_rows, "checksum", "full_outer")
+            )
+            inserted = F.col("__ex").isNull()
+            exprs = {
+                c: F.when(inserted, F.col("__in")[c]).otherwise(F.col(c))
+                for c in payload
+            }
+            exprs["from_ts"] = F.when(inserted, ts_lit).otherwise(
+                F.col("from_ts")
+            )
+            exprs["until_ts"] = F.when(
+                F.col("__in").isNull(), ts_lit
+            ).otherwise(F.col("until_ts"))
+            merged = joined.select(
+                *[exprs.get(c, F.col(c)).alias(c) for c in existing.columns]
             )
             self._write_version(
-                new_table, table_id, changed_months=None, base_version=base
+                existing.where(~is_current).unionByName(merged),
+                table_id,
+                changed_months=None,
+                base_version=base,
             )
             return
 
-        # Partition-pruned merge: only months containing a closed or an
-        # inserted row change; everything else is linked forward. The
-        # change sets are cached so the months-collect and the write
-        # run the anti-joins once.
-        # Coalesce to NULL_MONTH for the same reason as the
-        # append-only path: NULL-valid_from rows live in that
-        # manifest segment. (NULL_MONTH sorts after every "yyyy-MM",
-        # so when such rows change, the written_range guard below
-        # routes the merge through the unscoped rewrite — correct,
-        # just unpruned.)
-        month_of = F.coalesce(
-            F.date_format(F.col("valid_from"), "yyyy-MM"),
-            F.lit(NULL_MONTH),
+        # Partition-pruned merge. The join reads only the current rows'
+        # checksum, month and scope and keeps only the changed rows:
+        # the closed rows' keys and the inserted rows, cached. The
+        # changed months are collected from that frame; only those
+        # months are rewritten from a pruned re-read (closing the
+        # matched keys), every other month is carried forward by
+        # manifest reference. Checksums are unique among current rows
+        # (``incoming`` is deduplicated and only unmatched rows open),
+        # so the re-read's join on the closed keys adds no rows.
+        changes = (
+            existing.where(is_current)
+            .select(
+                "checksum",
+                _month_key(F.col("valid_from")).alias("__m"),
+                in_scope.alias("__s"),
+            )
+            .join(incoming_rows, "checksum", "full_outer")
+            .where(
+                F.col("__m").isNull() | (F.col("__in").isNull() & F.col("__s"))
+            )
+            .select(
+                "checksum",
+                F.coalesce(
+                    "__m", _month_key(F.col("__in.valid_from"))
+                ).alias("__m"),
+                "__in",
+            )
+            .cache()
         )
-        closed = closed.cache()
-        inserted = inserted.cache()
         try:
             changed_months = sorted(
-                r["m"]
-                for r in closed.select(month_of.alias("m"))
-                .union(inserted.select(month_of.alias("m")))
-                .distinct()
-                .collect()
+                r["__m"] for r in changes.select("__m").distinct().collect()
             )
             if not changed_months:
                 return  # merge is a no-op: current version already correct
@@ -1403,47 +1404,40 @@ class ParquetFeatureStore:
                 # violation): the scoped compare would treat those months'
                 # surviving rows as absent. Redo unscoped — correct for
                 # any input, just without the pruning.
-                # incoming is already cached by the _merge_existing
-                # wrapper — re-enter the body directly, unscoped
-                return self._merge_existing_cached(
-                    incoming, table_id, ts, None, base
-                )
+                return self._merge_existing(incoming, table_id, ts, None, base)
 
-            # All closed/inserted rows lie in changed months by
-            # construction — reuse them; only kept/others re-read the
-            # (pruned) existing partitions.
-            in_changed = month_of.isin(changed_months)
-            part_existing = existing.where(in_changed)
-            part_current = part_existing.where(is_current)
-            if in_scope is not None:
-                # a changed month can also hold current rows OUTSIDE
-                # the compared range (e.g. a sub-month range update):
-                # they are neither closed nor checksum-matched against
-                # ``data`` — carry them into the rewrite verbatim.
-                part_kept = (
-                    part_current.where(in_scope)
-                    .join(incoming_keys, "checksum", "left_semi")
-                    .unionByName(part_current.where(~in_scope))
+            closed_keys = changes.where(F.col("__in").isNull()).select(
+                "checksum", F.lit(True).alias("__c")
+            )
+            rewritten = (
+                existing.where(
+                    _month_key(F.col("valid_from")).isin(changed_months)
                 )
-            else:
-                part_kept = part_current.join(
-                    incoming_keys, "checksum", "left_semi"
+                .join(closed_keys, "checksum", "left")
+                .withColumn(
+                    "until_ts",
+                    F.when(F.col("__c") & is_current, ts_lit).otherwise(
+                        F.col("until_ts")
+                    ),
                 )
-            part_others = part_existing.where(~is_current)
-            new_parts = (
-                part_others.unionByName(part_kept)
-                .unionByName(closed)
-                .unionByName(inserted.select(*part_others.columns))
+                .drop("__c")
+            )
+            inserted = changes.where(F.col("__in").isNotNull()).select(
+                "checksum",
+                "__in.*",
+                ts_lit.alias("from_ts"),
+                F.lit(None).cast("timestamp").alias("until_ts"),
             )
             self._write_version(
-                new_parts,
+                rewritten.unionByName(inserted),
                 table_id,
                 changed_months=changed_months,
                 base_version=base,
             )
         finally:
-            closed.unpersist()
-            inserted.unpersist()
+            changes.unpersist()
+            if written_range is not None:
+                incoming.unpersist()
 
     #: sentinel distinguishing "caller did not thread a base version"
     #: (legacy internal callers, resolved here) from an explicit None
@@ -1913,7 +1907,7 @@ class ParquetFeatureStore:
                 ).fetchone()
                 k, lo, hi, avg_span = row
             else:
-                df = self.spark.read.parquet(*files)
+                df = self._read_files(files)
                 kc = (
                     F.approx_count_distinct(
                         F.xxhash64(*[F.col(c) for c in keys])

@@ -128,7 +128,15 @@ def run_conformance_suite(
 
         def _group(item):
             loader, feats = item
-            return [(f, check_one(f, loader)) for f in feats]
+            out = []
+            for f in feats:
+                # name the feature: a bare worker exception says
+                # nothing about which one failed
+                try:
+                    out.append((f, check_one(f, loader)))
+                except Exception as e:
+                    raise AssertionError(f"feature {f}: {e}") from e
+            return out
 
         with ThreadPoolExecutor(
             max_workers=min(8, max(1, len(by_loader)))

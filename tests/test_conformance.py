@@ -182,3 +182,38 @@ def test_google_scaled_fixture_engine_plans(spark, tmp_path):
     assert "BroadcastHashJoin" in p3, p3
     # and the result is real at this scale
     assert kj_age.count() > 0
+
+
+def test_conformance_worker_failure_names_its_feature(spark, tmp_path):
+    """A feature whose compute raises inside a pool worker surfaces as
+    an AssertionError naming that feature, chained to the original
+    error."""
+    import pytest
+
+    from diseasystore_spark import Diseasystore, FeatureHandler, key_join_sum
+
+    def _ok(start_date, end_date, slice_ts, source_conn, ds):
+        return ds.spark.createDataFrame(
+            [("a", 1.0, D(2020, 1, 5), D(2020, 1, 8))],
+            "key_a string, n_ok double, valid_from date, valid_until date",
+        )
+
+    def _broken(start_date, end_date, slice_ts, source_conn, ds):
+        raise RuntimeError("deliberately broken")
+
+    class BrokenStore(Diseasystore):
+        _ds_map = {"n_ok": "ok_tbl", "n_broken": "broken_tbl"}
+        ok_tbl = FeatureHandler(compute=_ok, key_join=key_join_sum)
+        broken_tbl = FeatureHandler(compute=_broken, key_join=key_join_sum)
+
+    ds = BrokenStore(
+        spark,
+        target_conn=str(tmp_path / "store"),
+        source_conn="x",
+        slice_ts=D(2024, 1, 1),
+        verbose=False,
+    )
+    with pytest.raises(AssertionError, match="^feature n_broken: ") as err:
+        run_conformance_suite(ds, test_start_date=D(2020, 1, 5))
+    assert "deliberately broken" in str(err.value)
+    assert err.value.__cause__ is not None

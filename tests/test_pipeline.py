@@ -2430,6 +2430,45 @@ def test_pagerank_symmetric_graph_uniform(spark):
     assert len(ranks) == 1
 
 
+def test_pagerank_persist_strategy_releases_edge_cache(spark):
+    """The persist strategy pins the edge frame for the loop only: once
+    the result is consumed and dropped, no persisted RDD it made
+    outlives the call. Checkpointed rank frames leave Spark's weak
+    persistent-RDD map at a JVM GC; a cached frame never does. The ids
+    are read off the live map as one string: the map copy
+    ``getPersistentRDDs()`` returns would hold its RDDs strongly for as
+    long as its Python proxy lives."""
+    import gc
+    import time
+
+    from diseasystore_spark.pipeline.graph import pagerank_integer
+
+    sc = spark.sparkContext
+
+    def persistent() -> set[str]:
+        gc.collect()
+        sc._jvm.System.gc()
+        ids = sc._jsc.sc().persistentRdds().keys().mkString(",")
+        return set(filter(None, ids.split(",")))
+
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 8) for i in range(8)] + [(0, 4), (2, 6)],
+        "src int, dst int",
+    )
+    before = persistent()
+    rows = pagerank_integer(
+        edges, iterations=3, iteration_strategy="persist"
+    ).collect()
+    assert len(rows) == 8
+    leaked = persistent() - before
+    for _ in range(20):  # JVM GC is a hint: give the weak map time
+        if not leaked:
+            break
+        time.sleep(0.25)
+        leaked = persistent() - before
+    assert not leaked
+
+
 def test_semantic_dedup_keep_first_rule(spark):
     """Crafted 3-d embeddings with an obvious 2-cluster structure:
     the higher-id near-duplicate in each cluster is evicted by the

@@ -197,6 +197,21 @@ def test_scoped_merge_closes_vanished_rows_in_range(spark, pstore):
     snap1 = {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", t1).collect()}
     assert snap1 == {"a": 1.0, "b": 2.0, "c": 3.0}
 
+    # 'a' reopens, then vanishes again: the second close touches only
+    # the open interval, never the closed one sharing its checksum
+    t3, t4 = T(2024, 1, 3), T(2024, 1, 4)
+    scope = (D(2020, 1, 1), D(2020, 2, 28))
+    pstore.update_snapshot(_df(spark, ROWS_V1[:2]), "ds.t", t3, written_range=scope)
+    pstore.update_snapshot(_df(spark, scoped), "ds.t", t4, written_range=scope)
+    a_rows = sorted(
+        (r["from_ts"], r["until_ts"])
+        for r in pstore.read_raw("ds.t").where("key_id = 'a'").collect()
+    )
+    assert a_rows == [(t1, t2), (t3, t4)]
+    assert pstore.read_raw("ds.t").count() == 4
+    snap3 = {r["key_id"] for r in pstore.get_table("ds.t", t3).collect()}
+    assert snap3 == {"a", "b", "c"}
+
 
 def test_scoped_merge_falls_back_on_range_violation(spark, pstore):
     """Incoming rows past the declared range trip the unscoped-redo
@@ -544,9 +559,18 @@ def test_scoped_merge_never_touches_out_of_range_rows(spark, pstore):
     m1 = pstore._manifest_of("ds.t", v1)["months"]
 
     # NEW slice_ts, scoped to Feb 8..28: feb_mid revised, everything
-    # else untouched (out of range)
+    # else untouched (out of range). The incoming frame also repeats
+    # two out-of-scope current rows: they match as current rows and
+    # are neither re-opened nor closed.
     pstore.update_snapshot(
-        _df(spark, [("feb_mid", 9.0, D(2020, 2, 10), D(2020, 2, 20))]),
+        _df(
+            spark,
+            [
+                ("feb_mid", 9.0, D(2020, 2, 10), D(2020, 2, 20)),
+                rows[0],  # jan_a
+                rows[1],  # feb_early
+            ],
+        ),
         "ds.t",
         t2,
         written_range=(D(2020, 2, 8), D(2020, 2, 28)),
@@ -568,6 +592,14 @@ def test_scoped_merge_never_touches_out_of_range_rows(spark, pstore):
         "feb_mid": 9.0,     # in range: revised
         "mar_open": 4.0,    # after range: untouched
     }
+    # exactly one copy of each repeated out-of-scope row, still open
+    repeated = sorted(
+        (r["key_id"], r["from_ts"], r["until_ts"])
+        for r in pstore.read_raw("ds.t")
+        .where("key_id IN ('jan_a', 'feb_early')")
+        .collect()
+    )
+    assert repeated == [("feb_early", t1, None), ("jan_a", t1, None)]
     # t1's snapshot is untouched history
     snap1 = {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", t1).collect()}
     assert snap1 == {
@@ -846,3 +878,80 @@ def test_prune_history_keeps_manifest_stats_sound(spark, pstore):
     _assert_manifest_stats_sound(pstore, "ds.t")
     snap = {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", t[3]).collect()}
     assert snap == {"a": 9.0, "b": 2.0, "c": 3.5}
+
+
+def test_duplicate_incoming_rows_open_one_row(spark, pstore):
+    """Incoming duplicates (a revised row and a new row, each twice)
+    open exactly one row each."""
+    t1, t2 = T(2024, 1, 1), T(2024, 1, 2)
+    pstore.update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
+    revised = ("b", 9.0, D(2020, 2, 10), D(2020, 2, 20))
+    new = ("d", 4.0, D(2020, 2, 12), None)
+    pstore.update_snapshot(
+        _df(spark, [ROWS_V1[0], revised, revised, ROWS_V1[2], new, new]),
+        "ds.t",
+        t2,
+        written_range=(D(2020, 1, 1), D(2020, 3, 31)),
+    )
+    open_rows = sorted(
+        (r["key_id"], r["v"], r["from_ts"])
+        for r in pstore.read_raw("ds.t").where("until_ts IS NULL").collect()
+    )
+    assert open_rows == [
+        ("a", 1.0, t1), ("b", 9.0, t2), ("c", 3.0, t1), ("d", 4.0, t2),
+    ]
+
+
+def test_empty_range_snapshot_closes_only_in_scope_rows(spark, pstore):
+    """An empty snapshot of a range closes exactly the current rows
+    overlapping the range; the range's month is rewritten and every
+    other month keeps its manifest references."""
+    t1, t2 = T(2024, 1, 1), T(2024, 1, 2)
+    rows = [
+        ("jan", 1.0, D(2020, 1, 10), D(2020, 1, 20)),      # before range
+        ("feb_early", 2.0, D(2020, 2, 3), D(2020, 2, 6)),  # before range,
+                                                           # same month
+        ("feb_mid", 3.0, D(2020, 2, 10), D(2020, 2, 20)),  # in range
+        ("feb_open", 4.0, D(2020, 2, 12), None),           # in range
+        ("mar", 5.0, D(2020, 3, 10), None),                # after range
+    ]
+    pstore.update_snapshot(_df(spark, rows), "ds.t", t1)
+    m1 = pstore._manifest_of("ds.t", 1)["months"]
+    pstore.update_snapshot(
+        _df(spark, []), "ds.t", t2, written_range=(D(2020, 2, 8), D(2020, 2, 28))
+    )
+    m2 = pstore._manifest_of("ds.t", 2)["months"]
+    assert m2["2020-01"] == m1["2020-01"]
+    assert m2["2020-03"] == m1["2020-03"]
+    assert set(m2["2020-02"]).isdisjoint(m1["2020-02"])
+    closed = {
+        r["key_id"]
+        for r in pstore.read_raw("ds.t").where("until_ts IS NOT NULL").collect()
+    }
+    assert closed == {"feb_mid", "feb_open"}
+    snap2 = {r["key_id"] for r in pstore.get_table("ds.t", t2).collect()}
+    assert snap2 == {"jan", "feb_early", "mar"}
+    snap1 = {r["key_id"] for r in pstore.get_table("ds.t", t1).collect()}
+    assert snap1 == {r[0] for r in rows}
+
+
+def test_manifest_reads_launch_no_spark_job(spark, pstore, tmp_path):
+    """Reads resolved from a manifest take their schema from the file
+    footer Spark wrote: building the frame runs no Spark job (no
+    schema inference), and the schema is the one inference yields."""
+    flat = ParquetFeatureStore(spark, str(tmp_path / "flat"))
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    t1 = T(2024, 1, 1)
+    for store in (pstore, flat):
+        store.update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
+        files = store._version_files("ds.t", store._current_version("ds.t"))
+        before = scheduler.nextJobId()
+        raw = store.read_raw("ds.t")
+        pruned = store.read_raw("ds.t", max_valid_from=D(2019, 12, 31))
+        snap = store.get_table("ds.t", t1)
+        assert scheduler.nextJobId() == before
+        inferred = spark.read.parquet(*files).schema
+        assert raw.schema == inferred
+        assert pruned.schema == inferred
+        assert snap.columns == ["key_id", "v", "valid_from", "valid_until"]
+        assert {r["key_id"] for r in snap.collect()} == {"a", "b", "c"}

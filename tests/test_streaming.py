@@ -511,6 +511,51 @@ def test_funnel_stream_matches_batch_with_late_data(spark, tmp_path):
     ]
 
 
+def test_stream_funnel_query_survives_one_sided_cutoff(spark, tmp_path):
+    """q191 splits events at 2024-01-15 into two stream batches; with
+    every event before the cutoff the second half is an empty
+    schema-only file, and the result still matches the SQL oracle."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from diseasystore_spark.queries import ORACLE_Q191, QUERIES
+
+    TS = datetime.datetime
+    rows = [
+        (1, TS(2024, 1, 10, 9, 0), "view"),
+        (1, TS(2024, 1, 10, 9, 30), "click"),
+        (1, TS(2024, 1, 10, 10, 0), "signup"),
+        (2, TS(2024, 1, 10, 12, 0), "view"),
+        (2, TS(2024, 1, 10, 15, 0), "click"),  # outside the 2 h window
+        (3, TS(2024, 1, 10, 8, 0), "click"),
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(rows)), pa.int64()),
+                "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+                "user_id": pa.array([r[0] for r in rows], pa.int64()),
+                "event_type": [r[2] for r in rows],
+                "value": pa.array([1.0] * len(rows)),
+                "props": ["{}"] * len(rows),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    got = sorted(
+        tuple(r)
+        for r in QUERIES["q191_stream_funnel"](spark, str(tmp_path)).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'"
+    )
+    want = sorted(tuple(r) for r in con.execute(ORACLE_Q191).fetchall())
+    assert got == want
+    assert [r[2] for r in got] == [2, 1, 1, 0]
+
+
 def test_windowed_distinct_users_stream_within_envelope(spark, tmp_path):
     """Streaming HLL distinct-per-window must equal the batch run of
     the SAME plan exactly (deterministic sketch) and sit within the
