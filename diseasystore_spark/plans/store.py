@@ -326,7 +326,8 @@ class Diseasystore:
             max_valid_from=end_date,
             # sound because of the overlap clip right below: months
             # whose every row closed at-or-before start_date hold
-            # nothing the clip keeps (manifest month_stats pruning)
+            # nothing the clip keeps (pruned by the manifest's file
+            # stats records)
             min_valid_until=start_date,
         )
         # Clip to the study period. The reference theta-joins a 1-row

@@ -54,9 +54,19 @@ write order; referenced older files by induction from the commit that
 introduced them). GC is manifest-driven keep-2: files referenced only
 by dropped manifests are deleted file-by-file; an unreferenced
 segment directory (crash leftover) is swept only once clearly
-abandoned. Legacy layouts (``_CURRENT`` pointer, marker-names-a-dir)
-are still readable; the first write on top of one migrates the table
-to a manifest via an unscoped rewrite.
+abandoned.
+
+Per-file stats — one record per data file (Delta's ``add`` stats,
+Iceberg's data-file metrics): the manifest's ``file_stats`` maps every
+file it references to its row count, min ``from_ts``, max ``until_ts``
+(set only when every row is closed), max ``valid_until`` and whether
+any row is valid-open. A write reads the footer of each file it
+creates once; carried-forward files inherit their record. Month
+pruning, slice pruning, ``compact``'s fragmentation check and the
+table statistics all derive from these records, and the table
+statistics live in the marker too. Tables in the retired layouts (a
+version pointer file, a marker that names only a directory, a manifest
+without ``file_stats``) raise ``ValueError`` naming the table.
 
 Scale path: with ``partition_granularity="month"``, each version is
 partitioned by ``month(valid_from)`` and a merge rewrites only months
@@ -117,6 +127,72 @@ def _valid_at(ts) -> Column:
     """The rows of the snapshot at transaction time ``ts``."""
     return (F.col("from_ts") <= F.lit(ts)) & (
         F.col("until_ts").isNull() | (F.col("until_ts") > F.lit(ts))
+    )
+
+
+def _parsed(iso: str | None, parse):
+    """``parse(iso)``, or None when the stats field is absent or
+    unparseable: a bound that cannot be read never prunes."""
+    try:
+        return None if iso is None else parse(iso)
+    except ValueError:
+        return None
+
+
+def _footer_column(md, name: str, typ: type, end) -> tuple:
+    """``(null_count, bound)`` of column ``name`` from a parquet
+    footer's row-group statistics; ``bound`` is ``end`` (min or max) of
+    the non-null values, as ISO text. Either is None when the footer
+    cannot prove it: the column is missing, a row group lacks
+    statistics (INT96 timestamps carry none), or the values are not
+    exactly of type ``typ`` — a datetime IS-A date, but its ISO text
+    would not parse as a date at read time."""
+    if name not in md.schema.names:
+        return None, None
+    idx = md.schema.names.index(name)
+    nulls, vals, known = 0, [], True
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(idx).statistics
+        if st is None or not st.has_null_count:
+            return None, None
+        nulls += st.null_count
+        if st.has_min_max:
+            v = st.max if end is max else st.min
+            if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+                v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+            vals.append(v)
+        elif st.num_values:
+            known = False
+    if not known or not vals or any(type(v) is not typ for v in vals):
+        return nulls, None
+    return nulls, end(vals).isoformat()
+
+
+def _file_record(md) -> dict:
+    """One data file's stats record, read off its parquet footer. A
+    bound the footer cannot prove is None, so the file is never pruned
+    on it. ``max_until_ts`` is set only when every row is closed."""
+    _, min_from = _footer_column(md, "from_ts", datetime.datetime, min)
+    until_nulls, max_until = _footer_column(
+        md, "until_ts", datetime.datetime, max
+    )
+    valid_nulls, max_valid = _footer_column(
+        md, "valid_until", datetime.date, max
+    )
+    return {
+        "rows": md.num_rows,
+        "min_from_ts": min_from,
+        "max_until_ts": max_until if until_nulls == 0 else None,
+        "max_valid_until": max_valid,
+        "valid_open": bool(valid_nulls),
+    }
+
+
+def _retired_layout(table_id: str, version, layout: str) -> ValueError:
+    return ValueError(
+        f"table {table_id} version {version} is stored in a retired"
+        f" layout ({layout}), which this store no longer reads; drop and"
+        " rebuild the table"
     )
 
 
@@ -240,9 +316,8 @@ class ParquetFeatureStore:
     def _current_version(self, table_id: str) -> int | None:
         """Highest committed version: max marker in ``_commits/``
         (one control-plane LIST + max — exactly what a Delta log tail
-        read costs on an object store). Falls back to a legacy
-        ``_CURRENT`` pointer file for tables written by older
-        layouts."""
+        read costs on an object store); None when the table does not
+        exist."""
         versions = [
             int(f[: -len(".json")])
             for f in self.commit_backend.list(self._commits_dir(table_id))
@@ -251,39 +326,65 @@ class ParquetFeatureStore:
         if versions:
             return max(versions)
         pointer = os.path.join(self._table_dir(table_id), "_CURRENT")
-        if not os.path.exists(pointer):
-            return None
-        with open(pointer) as fh:
-            return int(fh.read().strip())
+        if os.path.exists(pointer):
+            with open(pointer) as fh:
+                raise _retired_layout(
+                    table_id, fh.read().strip(), "_CURRENT pointer"
+                )
+        return None
 
-    def _read_marker(self, table_id: str, version: int) -> dict | None:
-        """The commit marker (manifest included) for ``version``;
-        None when absent (legacy ``_v{N}``/``_CURRENT`` layouts, or a
-        marker GC'd because the table advanced 2+ versions)."""
+    def _manifest_of(self, table_id: str, version: int) -> dict | None:
+        """The version's commit marker, which is its manifest:
+        ``months`` (or ``files`` on the flat layout), ``dir``,
+        ``version``, ``file_stats`` and, when computed,
+        ``table_stats``. None when the marker is absent (never
+        committed, or GC'd because the table advanced 2+ versions)."""
         raw = self.commit_backend.get(
             os.path.join(self._commits_dir(table_id), f"{version}.json")
         )
         if raw is None:
             return None
-        return json.loads(raw)
+        manifest = json.loads(raw)
+        if "file_stats" not in manifest:
+            raise _retired_layout(
+                table_id, version, "a commit marker without file_stats"
+            )
+        return manifest
+
+    def _committed(self, table_id: str, version: int) -> dict:
+        """``_manifest_of`` a version that must exist."""
+        manifest = self._manifest_of(table_id, version)
+        if manifest is None:
+            raise FileNotFoundError(
+                f"table {table_id} has no committed version {version}"
+            )
+        return manifest
 
     def _version_dir(self, table_id: str, version: int) -> str:
-        """The segment directory CREATED by ``version``'s write (for
-        a manifest version this holds the changed months only —
-        resolve full content via ``_version_files``); legacy layout
-        fallback: ``_v{N}``."""
-        marker = self._read_marker(table_id, version)
-        name = marker["dir"] if marker else f"_v{version}"
-        return os.path.join(self._table_dir(table_id), name)
+        """The segment directory CREATED by ``version``'s write (it
+        holds the changed months only — resolve full content via
+        ``_version_files``)."""
+        manifest = self._committed(table_id, version)
+        return os.path.join(self._table_dir(table_id), manifest["dir"])
 
-    def _manifest_of(self, table_id: str, version: int) -> dict | None:
-        """The version's manifest (``{"months": {...}}`` or
-        ``{"files": [...]}``), or None when the version predates the
-        manifest layout (legacy dir-marker / bare ``_v{N}``)."""
-        marker = self._read_marker(table_id, version)
-        if marker and ("months" in marker or "files" in marker):
-            return marker
-        return None
+    @staticmethod
+    def _month_stats(manifest: dict) -> dict[str, dict]:
+        """``{month: {"max_until": iso | None, "open": bool}}`` of a
+        month-layout manifest, derived from its file records: the
+        month's max ``valid_until`` (None when a file cannot prove its
+        bound) and whether any of its rows is valid-open. The NULL
+        month is left out: it is never pruned."""
+        out = {}
+        for m, refs in manifest.get("months", {}).items():
+            if m == NULL_MONTH:
+                continue
+            recs = [manifest["file_stats"][r] for r in refs]
+            maxes = [r["max_valid_until"] for r in recs]
+            out[m] = {
+                "max_until": None if None in maxes else max(maxes),
+                "open": any(r["valid_open"] for r in recs),
+            }
+        return out
 
     def _version_files(
         self,
@@ -292,85 +393,58 @@ class ParquetFeatureStore:
         month_max: str | None = None,
         min_valid_until: datetime.date | None = None,
         slice_ts: datetime.datetime | None = None,
-    ) -> list[str] | None:
+    ) -> list[str]:
         """Absolute parquet paths making up ``version``, pruned at
         the MANIFEST to months ``<= month_max`` (NULL-month files are
-        never pruned — their rows carry no ``valid_from``). None for
-        legacy layouts (read those via directory listing).
+        never pruned — their rows carry no ``valid_from``). Every
+        pruning decision below derives from the file records, and a
+        bound a record cannot prove (None, or unparseable) never
+        prunes.
 
-        ``min_valid_until`` additionally drops months whose write-time
-        validity stats prove every row CLOSED at-or-before it (no
-        open rows, ``max(valid_until) <= min_valid_until``) — sound
-        ONLY for consumers that filter ``valid_until > min OR
-        valid_until IS NULL`` downstream (the study-period overlap
-        clip). Months without stats are never pruned.
+        ``min_valid_until`` additionally drops months whose records
+        prove every row CLOSED at-or-before it (no valid-open rows,
+        ``max(valid_until) <= min_valid_until``) — sound ONLY for
+        consumers that filter ``valid_until > min OR valid_until IS
+        NULL`` downstream (the study-period overlap clip).
 
         ``slice_ts`` prunes on the TRANSACTION axis: files whose
-        write-time footer stats prove every row invisible to the
-        snapshot at that instant — all rows closed at-or-before it
-        (``until_stats``), or all rows created after it
-        (``from_stats``) — are dropped. Unconditionally sound for
-        any consumer applying the snapshot predicate ``from_ts <=
-        slice_ts AND (until_ts IS NULL OR until_ts > slice_ts)``;
-        files without stats are never pruned."""
-        manifest = self._manifest_of(table_id, version)
-        if manifest is None:
-            return None
-        tdir = self._table_dir(table_id)
+        record proves every row invisible to the snapshot at that
+        instant — all rows closed at-or-before it (``max_until_ts``),
+        or all rows created after it (``min_from_ts``) — are dropped.
+        Unconditionally sound for any consumer applying the snapshot
+        predicate ``from_ts <= slice_ts AND (until_ts IS NULL OR
+        until_ts > slice_ts)``."""
+        manifest = self._committed(table_id, version)
         if "files" in manifest:
             rels = manifest["files"]
         else:
-            stats = (
-                manifest.get("month_stats") or {}
-                if min_valid_until is not None
-                else {}
-            )
-
-            def closed_before_window(m: str) -> bool:
-                s = stats.get(m)
-                if s is None or s.get("open") or s.get("max_until") is None:
-                    return False
-                try:
-                    mx = datetime.date.fromisoformat(s["max_until"])
-                except ValueError:
-                    # Fail OPEN: an unparseable max_until (e.g. a
-                    # stats entry written by a different version)
-                    # means "not prunable", never a crashed read
-                    # (ADVICE r10).
-                    return False
-                return mx <= min_valid_until
-
+            closed = set()
+            if min_valid_until is not None:
+                for m, s in self._month_stats(manifest).items():
+                    mx = _parsed(s["max_until"], datetime.date.fromisoformat)
+                    if not s["open"] and mx and mx <= min_valid_until:
+                        closed.add(m)
             rels = [
                 f
                 for m, fs in manifest["months"].items()
-                if (
-                    month_max is None or m == NULL_MONTH or m <= month_max
-                )
-                and not (m != NULL_MONTH and closed_before_window(m))
+                if (month_max is None or m == NULL_MONTH or m <= month_max)
+                and m not in closed
                 for f in fs
             ]
         if slice_ts is not None:
-            ustats = manifest.get("until_stats") or {}
-            fstats = manifest.get("from_stats") or {}
-            if ustats or fstats:
 
-                def invisible_at_slice(r: str) -> bool:
-                    u = ustats.get(r)
-                    if u is not None:
-                        try:
-                            if datetime.datetime.fromisoformat(u) <= slice_ts:
-                                return True  # every row closed by then
-                        except ValueError:
-                            pass  # fail open: not prunable
-                    f = fstats.get(r)
-                    if f is not None:
-                        try:
-                            return datetime.datetime.fromisoformat(f) > slice_ts
-                        except ValueError:
-                            return False
-                    return False
+            def visible_at_slice(r: str) -> bool:
+                rec = manifest["file_stats"][r]
+                parse = datetime.datetime.fromisoformat
+                closed_by = _parsed(rec["max_until_ts"], parse)
+                opened = _parsed(rec["min_from_ts"], parse)
+                return not (
+                    (closed_by is not None and closed_by <= slice_ts)
+                    or (opened is not None and opened > slice_ts)
+                )
 
-                rels = [r for r in rels if not invisible_at_slice(r)]
+            rels = [r for r in rels if visible_at_slice(r)]
+        tdir = self._table_dir(table_id)
         return [os.path.join(tdir, r) for r in rels]
 
     def _put_if_absent(self, path: str, data: bytes) -> bool:
@@ -412,8 +486,6 @@ class ParquetFeatureStore:
           they reference are deleted ONLY when no retained manifest
           still references them (unchanged months live on by
           reference across many versions);
-        - a stale legacy (dir-naming) marker drops its whole
-          directory, as before;
         - segment directories named by NO marker at all are crash
           leftovers — swept only once older than
           ``_ORPHAN_RETENTION_SECS``, never a concurrent writer's
@@ -442,81 +514,56 @@ class ParquetFeatureStore:
             except ValueError:
                 continue
 
-        live_files: set[str] = set()
-        live_dirs: set[str] = set()
-        for v, m in markers.items():
-            if v < version - 1:
-                continue
-            refs = self._manifest_refs(m)
-            live_files.update(refs)
-            if m.get("stats"):
-                live_files.add(m["stats"])
-            if m.get("dir"):
-                live_dirs.add(m["dir"])
-            live_dirs.update(r.split("/", 1)[0] for r in refs)
-
+        live_files = {
+            r
+            for v, m in markers.items()
+            if v >= version - 1
+            for r in self._manifest_refs(m)
+        }
         for v, m in sorted(markers.items()):
             if v >= version - 1:
                 continue
-            refs = self._manifest_refs(m)
-            if refs or "files" in m or "months" in m:
-                dead = [r for r in refs if r not in live_files]
-                if m.get("stats") and m["stats"] not in live_files:
-                    dead.append(m["stats"])
-                for rel in dead:
-                    abspath = os.path.join(tdir, rel)
-                    for victim in (
-                        abspath,
-                        # Hadoop LocalFileSystem checksum sibling
-                        os.path.join(
-                            os.path.dirname(abspath),
-                            f".{os.path.basename(abspath)}.crc",
-                        ),
-                    ):
-                        try:
-                            os.unlink(victim)
-                        except FileNotFoundError:
-                            pass
-                    # prune now-empty month/segment dirs (never tdir)
-                    parent = os.path.dirname(abspath)
-                    while len(parent) > len(tdir):
-                        try:
-                            os.rmdir(parent)
-                        except OSError:
-                            break
-                        parent = os.path.dirname(parent)
-            elif m.get("dir") and m["dir"] not in live_dirs:
-                shutil.rmtree(
-                    os.path.join(tdir, m["dir"]), ignore_errors=True
-                )
+            for rel in self._manifest_refs(m):
+                if rel in live_files:
+                    continue
+                abspath = os.path.join(tdir, rel)
+                for victim in (
+                    abspath,
+                    # Hadoop LocalFileSystem checksum sibling
+                    os.path.join(
+                        os.path.dirname(abspath),
+                        f".{os.path.basename(abspath)}.crc",
+                    ),
+                ):
+                    try:
+                        os.unlink(victim)
+                    except FileNotFoundError:
+                        pass
+                # prune now-empty month/segment dirs (never tdir)
+                parent = os.path.dirname(abspath)
+                while len(parent) > len(tdir):
+                    try:
+                        os.rmdir(parent)
+                    except OSError:
+                        break
+                    parent = os.path.dirname(parent)
             self.commit_backend.delete(os.path.join(cdir, f"{v}.json"))
 
-        committed_dirs = live_dirs | {
-            m["dir"] for m in markers.values() if m.get("dir")
+        # segments named by a marker, or holding a live file whose
+        # introducing marker is long gone
+        committed_dirs = {m.get("dir") for m in markers.values()} | {
+            r.split("/", 1)[0] for r in live_files
         }
         now = time.time()
         for entry in os.listdir(tdir):
             if not entry.startswith("_v") or entry in committed_dirs:
                 continue
             path = os.path.join(tdir, entry)
-            if not os.path.isdir(path):
-                continue
-            stem, _, token = entry[2:].partition("-")
-            try:
-                v = int(stem)
-            except ValueError:
-                continue
-            if not token:
-                # Legacy bare ``_v{N}``: committed via the old
-                # _CURRENT pointer — its name is its version.
-                if v < version - 1:
-                    shutil.rmtree(path, ignore_errors=True)
-                continue
             try:
                 age = now - os.path.getmtime(path)
             except OSError:
                 continue
-            if age > self._ORPHAN_RETENTION_SECS:
+            if os.path.isdir(path) and age > self._ORPHAN_RETENTION_SECS:
                 shutil.rmtree(path, ignore_errors=True)
 
     # ------------------------------------------------------------ catalog
@@ -554,13 +601,11 @@ class ParquetFeatureStore:
         min_valid_until: datetime.date | None = None,
         slice_ts: datetime.datetime | None = None,
     ) -> DataFrame:
-        """Scan a committed version. Manifest versions resolve to an
+        """Scan a committed version: its manifest resolves it to an
         exact FILE list — ``month_max`` prunes months at the manifest,
         before any file is listed or opened (strictly earlier than
         Catalyst partition pruning, and the only LIST the read ever
-        does is the one control-plane marker GET). Legacy versions
-        fall back to a directory read with partition discovery; the
-        internal partition column is hidden either way."""
+        does is the one control-plane marker GET)."""
         if version is None:
             version = self._current_version(table_id)
         if version is None:
@@ -572,11 +617,6 @@ class ParquetFeatureStore:
             min_valid_until=min_valid_until,
             slice_ts=slice_ts,
         )
-        if files is None:  # legacy layout
-            df = self.spark.read.parquet(self._version_dir(table_id, version))
-            if month_max is not None and PARTITION_COL in df.columns:
-                df = df.where(F.col(PARTITION_COL) <= month_max)
-            return df.drop(PARTITION_COL)
         if not files:
             # every month pruned: empty frame with the version's schema
             allf = self._version_files(table_id, version)
@@ -637,24 +677,24 @@ class ParquetFeatureStore:
         clip's upper bound costs zero scan and zero listing).
 
         ``min_valid_until`` (a date): the LOWER-bound twin — months
-        whose write-time validity stats prove every row closed
-        at-or-before it (``month_stats``: no open rows,
-        ``max(valid_until) <= min``) are pruned at the manifest too.
+        whose file records prove every row closed at-or-before it (no
+        valid-open rows, ``max(valid_until) <= min``) are pruned at the
+        manifest too.
         ONLY pass this when the caller filters the result with the
         half-open overlap clip (``valid_until > min OR NULL``), as
         the engine's study-period clip does: the pruned rows are
         exactly those the clip would drop, so a narrow window reads
         O(window + open-row months), not O(history).
 
-        The TRANSACTION axis prunes automatically (round 11): the
-        writer clusters closed rows into their own files
-        (``__vc=c``) and records per-file ``until_stats`` /
-        ``from_stats``, so files whose every row is invisible at
-        ``slice_ts`` — closed at-or-before it, or created after it —
-        are dropped at the manifest. The predicate above would
-        discard those rows anyway, so this is sound for every
-        caller; a current-slice read of a long-history table scans
-        O(live rows), not O(closed history).
+        The TRANSACTION axis prunes automatically: the writer clusters
+        closed rows into their own files (``__vc=c``) and each file's
+        record carries its max ``until_ts`` and min ``from_ts``, so
+        files whose every row is invisible at ``slice_ts`` — closed
+        at-or-before it, or created after it — are dropped at the
+        manifest. The predicate above would discard those rows
+        anyway, so this is sound for every caller; a current-slice
+        read of a long-history table scans O(live rows), not
+        O(closed history).
         """
         ts = normalize_slice_ts(slice_ts)
         floor = self.retain_floor(table_id)
@@ -852,7 +892,7 @@ class ParquetFeatureStore:
         is a NO-OP: no version bump, no write. Under
         ``max_records_per_file`` the convergence target per month is
         the knob-achievable ``ceil(rows / N)`` (row counts from the
-        parquet footers), not 1 — and a month is also fragmented
+        file records), not 1 — and a month is also fragmented
         whenever any single file exceeds the knob (files written
         before the knob was set or lowered), so the size cap is
         enforced retroactively. The flat layout always rewrites, to
@@ -880,55 +920,25 @@ class ParquetFeatureStore:
         ):
             months = manifest["months"]
             tdir = self._table_dir(table_id)
-            cached_rows: dict = manifest.get("file_rows") or {}
-
-            def vc_of(ref: str) -> str | None:
-                # the transaction-cluster value of a ref's path
-                # (``__vc=c`` / ``__vc=o``), None for pre-round-11 refs
-                for comp in ref.split("/"):
-                    if comp.startswith(f"{TXN_CLUSTER_COL}="):
-                        return comp
-                return None
-
-            def groups_of(fs: list[str]) -> dict[str | None, list[str]]:
-                out: dict[str | None, list[str]] = {}
-                for f in fs:
-                    out.setdefault(vc_of(f), []).append(f)
-                return out
 
             def is_fragmented(fs: list[str]) -> bool:
                 # Fragmentation is judged PER transaction-cluster
                 # group: a rewrite deterministically emits one file
                 # per (month, __vc) present, so a month holding one
                 # closed-rows file and one open-rows file is the
-                # converged state, not fragmentation. A month mixing
-                # pre-cluster (no __vc) refs with anything else gets
-                # one migration rewrite.
-                groups = groups_of(fs)
-                if None in groups and len(fs) > 1:
-                    return True
+                # converged state, not fragmentation. A month's files
+                # all come from the one segment that last rewrote it,
+                # so a file's directory names its (month, __vc) group.
+                groups: dict[str, list[str]] = {}
+                for f in fs:
+                    groups.setdefault(os.path.dirname(f), []).append(f)
                 # Knobless: fragmented iff any group has more than one
-                # file — no footer reads, so the common all-compact
-                # sweep stays metadata-only.
+                # file.
                 if self.max_records_per_file is None:
                     return any(len(g) > 1 for g in groups.values())
-                # With the file-size knob set, row counts come from
-                # the manifest's write-time cache (ADVICE r9 — the
-                # all-compact sweep stays metadata-only for knob-set
-                # stores too); parquet footers only for files written
-                # before the cache existed, and on any footer failure
-                # fall back to the knobless rule.
-                try:
-                    counts = {
-                        f: cached_rows[f]
-                        if f in cached_rows
-                        else pq.ParquetFile(
-                            os.path.join(tdir, f)
-                        ).metadata.num_rows
-                        for f in fs
-                    }
-                except Exception:
-                    return any(len(g) > 1 for g in groups.values())
+                # Row counts come from the file records, so the
+                # all-compact sweep opens no footer.
+                counts = {f: manifest["file_stats"][f]["rows"] for f in fs}
                 # Any single file over the cap is fragmentation even
                 # when the file COUNT already equals the achievable
                 # target (e.g. files [N+5, 1], or files written before
@@ -980,16 +990,7 @@ class ParquetFeatureStore:
                 changed_months=None,
                 base_version=base,
             )
-        new_version = (base or 0) + 1
-        files = self._version_files(table_id, new_version)
-        if files is not None:
-            return len(files)
-        n = 0  # legacy layout fallback
-        for root, _dirs, names in os.walk(
-            self._version_dir(table_id, new_version)
-        ):
-            n += sum(1 for f in names if f.endswith(".parquet"))
-        return n
+        return len(self._version_files(table_id, (base or 0) + 1))
 
     def payload_columns(
         self, table_id: str, version: int | None = None
@@ -1259,16 +1260,13 @@ class ParquetFeatureStore:
             inserted.unpersist()
 
     def _scoped_write_ok(self, table_id: str, base: int | None) -> bool:
-        """Month-scoped (pruned) writes need a manifest base to carry
-        unchanged months forward by reference. A legacy-layout base
-        (dir marker / ``_CURRENT``) takes one unscoped full rewrite —
-        the migration write — and is manifest from then on."""
+        """Month-scoped (pruned) writes need a month-layout base to
+        carry unchanged months forward by reference. A flat-layout base
+        takes one unscoped full rewrite — the migration write — and is
+        month-partitioned from then on."""
         if self.partition_granularity != "month":
             return False
-        if base is None:
-            return True
-        m = self._manifest_of(table_id, base)
-        return m is not None and "months" in m
+        return base is None or "months" in self._committed(table_id, base)
 
     def _merge_existing(
         self,
@@ -1439,17 +1437,12 @@ class ParquetFeatureStore:
             if written_range is not None:
                 incoming.unpersist()
 
-    #: sentinel distinguishing "caller did not thread a base version"
-    #: (legacy internal callers, resolved here) from an explicit None
-    #: ("I observed the table absent — claim version 1").
-    _BASE_UNSET = object()
-
     def _write_version(
         self,
         new_table: DataFrame,
         table_id: str,
         changed_months: list[str] | None,
-        base_version=_BASE_UNSET,
+        base_version: int | None,
     ) -> None:
         """Write a new immutable segment directory and commit the
         version by putting its MANIFEST marker.
@@ -1461,6 +1454,12 @@ class ParquetFeatureStore:
         copies; the Iceberg pattern). Commit cost is therefore
         O(changed months), independent of the table's total span.
 
+        Every file the write creates gets its stats record from one
+        read of its footer; carried-forward files inherit theirs from
+        the base manifest. A footer that cannot be read fails the
+        attempt before the commit, and the attempt's segment is
+        removed.
+
         The segment name carries a per-attempt token so two writers
         racing for the same version number can never scribble into
         each other's files; the conditional-put marker commit decides
@@ -1469,7 +1468,8 @@ class ParquetFeatureStore:
 
         ``base_version`` is the version the caller's merge plan was
         DERIVED from (captured once at the top of the write attempt
-        and threaded through its reads); the commit always claims
+        and threaded through its reads; None when the caller observed
+        the table absent); the commit always claims
         ``base_version + 1`` — the Delta/Iceberg readVersion pattern.
         Re-resolving the current version here instead would open a
         lost-update window: a competitor committing base+1 between our
@@ -1482,16 +1482,65 @@ class ParquetFeatureStore:
         wins version N+1, keep-2 GC cannot have deleted version N's
         files (that would require a commit of N+2 or later to have
         already happened, which would have made our put lose)."""
-        prev = (
-            self._current_version(table_id)
-            if base_version is self._BASE_UNSET
-            else base_version
-        )
-        version = (prev or 0) + 1
+        version = (base_version or 0) + 1
         dirname = f"_v{version}-{uuid.uuid4().hex[:8]}"
         tdir = self._table_dir(table_id)
         out_dir = os.path.join(tdir, dirname)
+        base = None
+        if changed_months is not None and base_version is not None:
+            base = self._manifest_of(table_id, base_version)
+            if base is None:
+                # Base marker vanished (GC'd: competitors advanced 2+
+                # versions) — our conditional put is doomed anyway;
+                # surface the retryable conflict.
+                raise CommitConflictError(table_id, version)
 
+        try:
+            body = self._write_segment(new_table, tdir, dirname)
+            if base is not None:
+                carried = {
+                    m: fs
+                    for m, fs in base["months"].items()
+                    if m not in changed_months
+                }
+                body["months"] = carried | body["months"]
+            inherited = base["file_stats"] if base is not None else {}
+            file_stats = {
+                r: inherited[r]
+                if r in inherited
+                else _file_record(pq.read_metadata(os.path.join(tdir, r)))
+                for r in self._manifest_refs(body)
+            }
+            manifest = {
+                "version": version,
+                "dir": dirname,
+                **body,
+                "file_stats": file_stats,
+            }
+            table_stats = self._write_stats(
+                [os.path.join(tdir, r) for r in file_stats],
+                new_table.columns,
+                sum(rec["rows"] for rec in file_stats.values()),
+            )
+            if table_stats is not None:
+                manifest["table_stats"] = table_stats
+        except BaseException:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
+        try:
+            self._commit_version(table_id, version, manifest)
+        except CommitConflictError:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
+
+    def _write_segment(
+        self, new_table: DataFrame, tdir: str, dirname: str
+    ) -> dict:
+        """Write ``new_table`` into the new segment directory
+        ``dirname`` and list the files it created:
+        ``{"months": {month: [relpath, ...]}}`` on the month layout,
+        ``{"files": [relpath, ...]}`` on the flat one."""
+        out_dir = os.path.join(tdir, dirname)
         if self.partition_granularity == "month":
             # One shuffle on the partition key -> one file per month
             # instead of (upstream partitions x months) tiny files.
@@ -1512,15 +1561,13 @@ class ParquetFeatureStore:
             # already closed (until_ts set) cluster into their own
             # files (``__vc=c``) apart from the live rows (``__vc=o``),
             # so a month's ever-growing bitemporal history never
-            # shares a file with its current snapshot. The write-time
-            # footer pass below records each all-closed file's
-            # max(until_ts) in the manifest (``until_stats``), and
+            # shares a file with its current snapshot. Each all-closed
+            # file's record carries its max(until_ts), and
             # ``get_table(slice_ts)`` drops files whose every row
             # closed at-or-before the slice BEFORE Spark ever lists
             # them — a current-slice read scans O(live rows), not
-            # O(history) (round-11; the validity-axis month_stats
-            # twin landed round 10). Still one shuffle on the month
-            # key: each month task writes into both subdirs.
+            # O(history). Still one shuffle on the month key: each
+            # month task writes into both subdirs.
             cluster_txn = "until_ts" in partitioned.columns
             part_cols = [PARTITION_COL]
             if cluster_txn:
@@ -1544,185 +1591,24 @@ class ParquetFeatureStore:
                 )
             writer.parquet(out_dir)
             self._scrub_job_droppings(out_dir)
-            months = self._segment_months(tdir, dirname)
-            if changed_months is not None and prev is not None:
-                base_manifest = self._manifest_of(table_id, prev)
-                if base_manifest is None or "months" not in base_manifest:
-                    # Base marker vanished (GC'd: competitors advanced
-                    # 2+ versions) — our conditional put is doomed
-                    # anyway; surface the retryable conflict. (A legacy
-                    # base never reaches here: the merge paths fall
-                    # back to a full rewrite for those.)
-                    shutil.rmtree(out_dir, ignore_errors=True)
-                    raise CommitConflictError(table_id, version)
-                carried = dict(base_manifest["months"])
-                for m in changed_months:
-                    carried.pop(m, None)
-                carried.update(months)
-                months = carried
-            body: dict = {"months": months}
-        else:
-            writer = new_table.write.mode("overwrite")
-            if self.max_records_per_file is not None:
-                # Same file-size knob as the partitioned branch — a
-                # flat table is exactly the case where one coalesced
-                # multi-GB file would otherwise slip through.
-                writer = writer.option(
-                    "maxRecordsPerFile", str(self.max_records_per_file)
-                )
-            writer.parquet(out_dir)
-            self._scrub_job_droppings(out_dir)
-            body = {
-                "files": sorted(
-                    f"{dirname}/{f}"
-                    for f in os.listdir(out_dir)
-                    if f.endswith(".parquet")
-                )
-            }
-        manifest = {"version": version, "dir": dirname, **body}
-        # Per-file row counts, cached in the manifest so later
-        # compact() fragmentation checks are metadata-only (ADVICE
-        # r9): carried-forward files inherit their count from the
-        # base manifest (zero footer reads for unchanged months),
-        # fresh files read one parquet footer each — footers this
-        # version was about to read for _STATS anyway.
-        known: dict[str, int] = {}
-        base_stats: dict[str, dict] = {}
-        base_months: dict[str, list] = {}
-        base_until: dict[str, str] = {}
-        base_from: dict[str, str] = {}
-        if prev is not None:
-            base_m = self._manifest_of(table_id, prev)
-            if base_m is not None:
-                known = base_m.get("file_rows") or {}
-                base_stats = base_m.get("month_stats") or {}
-                base_months = base_m.get("months") or {}
-                base_until = base_m.get("until_stats") or {}
-                base_from = base_m.get("from_stats") or {}
-        file_rows: dict[str, int] | None = {}
-        fresh_md: dict[str, object] = {}
-        until_stats: dict[str, str] = {}
-        from_stats: dict[str, str] = {}
-        for r in self._manifest_refs(manifest):
-            cnt = known.get(r)
-            if cnt is None:
-                try:
-                    md = pq.ParquetFile(os.path.join(tdir, r)).metadata
-                except Exception:
-                    file_rows = None
-                    break
-                fresh_md[r] = md
-                cnt = md.num_rows
-                u, fr = self._txn_axis_stats(md)
-                if u is not None:
-                    until_stats[r] = u
-                if fr is not None:
-                    from_stats[r] = fr
-            else:
-                # carried-forward file: inherit its transaction-axis
-                # stats from the base manifest, zero footer reads
-                if r in base_until:
-                    until_stats[r] = base_until[r]
-                if r in base_from:
-                    from_stats[r] = base_from[r]
-            file_rows[r] = int(cnt)
-        if file_rows is not None:
-            manifest["file_rows"] = file_rows
-            # Transaction-axis file stats (round 11): ``until_stats``
-            # maps refs whose EVERY row is closed to the file's
-            # max(until_ts); ``from_stats`` maps refs to min(from_ts).
-            # ``get_table(slice_ts)`` drops refs proven invisible at
-            # the slice (all closed at-or-before it, or all opened
-            # after it) before Spark lists a single file. Absence of
-            # an entry = never pruned; a file_rows failure above
-            # disables both (conservative).
-            if until_stats:
-                manifest["until_stats"] = until_stats
-            if from_stats:
-                manifest["from_stats"] = from_stats
-        if file_rows is not None and "months" in manifest:
-            # Per-month validity stats, from the same footers the
-            # row-count pass just opened: {"max_until": iso, "open":
-            # bool}. A month with no open rows (NULL valid_until) and
-            # max(valid_until) <= a reader's window start can be
-            # pruned at the MANIFEST on overlap-clipped snapshot reads
-            # (see get_table's min_valid_until) — narrow study-period
-            # reads stop scanning all of history. A month is omitted
-            # (= never pruned) when any footer lacks valid_until
-            # statistics; carried-forward months inherit their entry
-            # from the base manifest, zero footer reads.
-            month_stats: dict[str, dict] = {}
-            for m, fs in manifest["months"].items():
-                if m == NULL_MONTH:
-                    continue  # NULL-valid_from rows: never pruned
-                if base_months.get(m) == fs:
-                    if m in base_stats:
-                        month_stats[m] = base_stats[m]
-                    continue
-                mx = None
-                has_open = False
-                ok = True
-                for f in fs:
-                    md = fresh_md.get(f)
-                    if md is None:
-                        ok = False
-                        break
-                    try:
-                        idx = next(
-                            i
-                            for i in range(md.num_columns)
-                            if md.schema.column(i).name == "valid_until"
-                        )
-                    except StopIteration:
-                        ok = False
-                        break
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(idx).statistics
-                        if st is None or not st.has_null_count:
-                            ok = False
-                            break
-                        if st.null_count:
-                            has_open = True
-                        elif not st.has_min_max:
-                            ok = False
-                            break
-                        else:
-                            v = st.max
-                            # type() is deliberate: datetime.datetime
-                            # IS-A datetime.date, but its isoformat()
-                            # would be rejected by date.fromisoformat
-                            # at read time — a timestamp-typed
-                            # valid_until must disable the stats, not
-                            # poison them (ADVICE r10).
-                            if type(v) is not datetime.date:
-                                ok = False
-                                break
-                            mx = v if mx is None or v > mx else mx
-                    if not ok:
-                        break
-                if ok and (has_open or mx is not None):
-                    month_stats[m] = {
-                        "max_until": mx.isoformat() if mx else None,
-                        "open": has_open,
-                    }
-            if month_stats:
-                manifest["month_stats"] = month_stats
-        all_files = [
-            os.path.join(tdir, r) for r in self._manifest_refs(manifest)
-        ]
-        if self._write_stats(
-            all_files,
-            os.path.join(out_dir, "_STATS.json"),
-            total_rows=(
-                sum(file_rows.values()) if file_rows is not None else None
-            ),
-        ):
-            manifest["stats"] = f"{dirname}/_STATS.json"
-        try:
-            self._commit_version(table_id, version, manifest)
-        except CommitConflictError:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise
+            return {"months": self._segment_months(tdir, dirname)}
+        writer = new_table.write.mode("overwrite")
+        if self.max_records_per_file is not None:
+            # Same file-size knob as the partitioned branch — a
+            # flat table is exactly the case where one coalesced
+            # multi-GB file would otherwise slip through.
+            writer = writer.option(
+                "maxRecordsPerFile", str(self.max_records_per_file)
+            )
+        writer.parquet(out_dir)
+        self._scrub_job_droppings(out_dir)
+        return {
+            "files": sorted(
+                f"{dirname}/{f}"
+                for f in os.listdir(out_dir)
+                if f.endswith(".parquet")
+            )
+        }
 
     @staticmethod
     def _scrub_job_droppings(out_dir: str) -> None:
@@ -1736,75 +1622,6 @@ class ParquetFeatureStore:
                 os.unlink(os.path.join(out_dir, name))
             except FileNotFoundError:
                 pass
-
-    @staticmethod
-    def _txn_axis_stats(md) -> tuple[str | None, str | None]:
-        """Transaction-axis footer stats of one fresh parquet file:
-        ``(max_until_iso, min_from_iso)``.
-
-        ``max_until_iso`` is set ONLY when every row group proves
-        every row closed (``until_ts`` null_count == 0 with min/max
-        present) — it licenses dropping the whole file for any
-        snapshot read at ``slice_ts >= max_until``. ``min_from_iso``
-        licenses dropping the file for any read at ``slice_ts <
-        min_from`` (as-of reads of older slices skip files written
-        later). Either is None when the footer can't prove it
-        (missing column, missing statistics, INT96 timestamps, open
-        rows, zero row groups)."""
-        try:
-            idx = next(
-                i
-                for i in range(md.num_columns)
-                if md.schema.column(i).name == "until_ts"
-            )
-            fidx = next(
-                i
-                for i in range(md.num_columns)
-                if md.schema.column(i).name == "from_ts"
-            )
-        except StopIteration:
-            return None, None
-        if md.num_row_groups == 0:
-            return None, None
-
-        def _naive_utc(v) -> datetime.datetime | None:
-            if type(v) is not datetime.datetime:
-                return None
-            if v.tzinfo is not None:
-                v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-            return v
-
-        mx: datetime.datetime | None = None
-        mn: datetime.datetime | None = None
-        all_closed = True
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if (
-                st is None
-                or not st.has_null_count
-                or st.null_count
-                or not st.has_min_max
-            ):
-                all_closed = False
-            elif all_closed:
-                v = _naive_utc(st.max)
-                if v is None:
-                    all_closed = False
-                else:
-                    mx = v if mx is None or v > mx else mx
-            fst = md.row_group(rg).column(fidx).statistics
-            if fst is None or not fst.has_min_max:
-                mn = None
-                break
-            fv = _naive_utc(fst.min)
-            if fv is None:
-                mn = None
-                break
-            mn = fv if mn is None or fv < mn else mn
-        return (
-            mx.isoformat() if all_closed and mx is not None else None,
-            mn.isoformat() if mn is not None else None,
-        )
 
     @staticmethod
     def _segment_months(tdir: str, dirname: str) -> dict[str, list[str]]:
@@ -1837,51 +1654,30 @@ class ParquetFeatureStore:
     _STATS_DRIVER_MAX_ROWS = 50_000_000
 
     def _write_stats(
-        self,
-        files: list[str],
-        stats_path: str,
-        total_rows: int | None = None,
-    ) -> bool:
-        """Persist table statistics next to the version's own segment
-        (``_STATS.json`` — leading underscore, so parquet readers skip
-        it): row count, approx distinct key tuples (``key_*``
-        columns), validity span, mean row span. The analog of an
-        RDBMS ANALYZE, computed at WRITE time so query-time planning
-        decisions (the interlace auto-bucketing width,
+        self, files: list[str], columns: list[str], n: int
+    ) -> dict | None:
+        """Table statistics of a version, kept in its commit marker:
+        row count, approx distinct key tuples (``key_*`` columns),
+        validity span, mean row span. The analog of an RDBMS ANALYZE,
+        computed at WRITE time so query-time planning decisions (the
+        interlace auto-bucketing width,
         ``operators/interlace.py:width_from_stats``) cost zero extra
         jobs. ``files`` is the version's COMPLETE file list from its
-        manifest — carried-forward months included. Returns True when
-        stats were written (the manifest then records the path).
+        manifest — carried-forward months included — ``columns`` the
+        table's columns and ``n`` its row count, summed from the file
+        records.
 
-        Cost discipline: the row count comes FREE from the parquet
-        footers (pyarrow metadata, no data read — and it covers
-        carried-forward unchanged months too); the key-cardinality /
-        span aggregation is a driver-side DuckDB scan of just the key
-        + validity columns for ordinary tables (no Spark job, ~ms),
-        escalating to a column-pruned Spark aggregation only above
+        Cost discipline: the key-cardinality / span aggregation is a
+        driver-side DuckDB scan of just the key + validity columns for
+        ordinary tables (no Spark job, ~ms), escalating to a
+        column-pruned Spark aggregation only above
         ``_STATS_DRIVER_MAX_ROWS``. Stats are advisory: any failure
-        is swallowed and the readers treat the table as stats-less.
+        gives None and the readers treat the table as stats-less.
         """
-        if not files:
-            return False
-        try:
-            schema = pq.ParquetFile(files[0]).schema_arrow
-            if "valid_from" not in schema.names:
-                return False
-            # the caller usually hands the footer-derived total down
-            # (it cached per-file counts in the manifest already) —
-            # only recount when it could not
-            n = (
-                total_rows
-                if total_rows is not None
-                else sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-            )
-        except Exception:
-            return False
-        if not n:
-            return False
-        keys = [c for c in schema.names if c.startswith("key_")]
-        has_until = "valid_until" in schema.names
+        if not n or "valid_from" not in columns:
+            return None
+        keys = [c for c in columns if c.startswith("key_")]
+        has_until = "valid_until" in columns
         try:
             if n <= self._STATS_DRIVER_MAX_ROWS:
                 import duckdb
@@ -1928,12 +1724,12 @@ class ParquetFeatureStore:
                 ).first()
                 k, lo, hi, avg_span = r["k"], r["lo"], r["hi"], r["avg_span"]
         except Exception:
-            return False
+            return None
         if lo is None or hi is None:
-            return False
+            return None
         if hasattr(lo, "date"):
             lo, hi = lo.date(), hi.date()
-        stats = {
+        return {
             "n": int(n),
             "k": int(k or 1),
             "lo": str(lo),
@@ -1941,32 +1737,14 @@ class ParquetFeatureStore:
             "span_days": max((hi - lo).days, 1),
             "avg_span": float(avg_span or 0.0),
         }
-        with open(stats_path, "w") as fh:
-            json.dump(stats, fh)
-        return True
 
     def table_stats(self, table_id: str) -> dict | None:
-        """Read the current version's write-time statistics (see
-        ``_write_stats``); None when absent (pre-stats tables). The
-        stats path comes from the manifest; legacy versions fall back
-        to ``<version_dir>/_STATS.json``."""
+        """The current version's write-time statistics (see
+        ``_write_stats``), read from its commit marker; None when the
+        table does not exist or has none."""
         cur = self._current_version(table_id)
-        if cur is None:
-            return None
-        marker = self._read_marker(table_id, cur)
-        if marker is not None and ("months" in marker or "files" in marker):
-            rel = marker.get("stats")
-            if rel is None:
-                return None
-            path = os.path.join(self._table_dir(table_id), rel)
-        else:
-            path = os.path.join(
-                self._version_dir(table_id, cur), "_STATS.json"
-            )
-        if not os.path.exists(path):
-            return None
-        with open(path) as fh:
-            return json.load(fh)
+        manifest = self._manifest_of(table_id, cur) if cur else None
+        return (manifest or {}).get("table_stats")
 
     # --------------------------------------------------------------- logs
     # The log table is driver-side metadata: one row per completed

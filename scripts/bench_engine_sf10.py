@@ -203,17 +203,15 @@ def main() -> None:
     kept_months = [m for m in all_months if m <= "2020-06"]
     n_total = sum(len(man["months"][m]) for m in all_months)
     n_kept = sum(len(man["months"][m]) for m in kept_months)
-    # transaction-axis accounting (round 11): files proven invisible
-    # at slice2 by the manifest's until/from stats are additionally
-    # dropped — mirror the reader's rule here so the pin is exact
-    ustats = man.get("until_stats") or {}
-    fstats = man.get("from_stats") or {}
-
+    # transaction-axis accounting: files whose stats record proves
+    # them invisible at slice2 (max until_ts / min from_ts) are
+    # additionally dropped — mirror the reader's rule here so the pin
+    # is exact
     def txn_visible(r: str, ts) -> bool:
-        u = ustats.get(r)
+        rec = man["file_stats"][r]
+        u, f = rec["max_until_ts"], rec["min_from_ts"]
         if u is not None and T.fromisoformat(u) <= ts:
             return False
-        f = fstats.get(r)
         return f is None or T.fromisoformat(f) <= ts
 
     n_kept_visible = sum(
@@ -257,9 +255,9 @@ def main() -> None:
     # Round-11 transaction-axis pins: the table now carries closed
     # history, but (a) a CURRENT-slice full read opens ZERO
     # closed-cluster files (every closed row closed at-or-before
-    # slice3 — until_stats pruning), and (b) an AS-OF read at slice1
+    # slice3 — max until_ts pruning), and (b) an AS-OF read at slice1
     # opens none of the open-cluster files the revision wrote
-    # (from_stats pruning) while the closed-history files still
+    # (min from_ts pruning) while the closed-history files still
     # answer it.
     man3 = store._manifest_of(tid, store._current_version(tid))
     cur_files = store.get_table(tid, slice3).inputFiles()

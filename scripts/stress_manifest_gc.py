@@ -104,12 +104,14 @@ def main() -> None:
                 live.update(
                     os.path.join(tdir, r) for r in store._manifest_refs(m)
                 )
-                if m.get("stats"):
-                    live.add(os.path.join(tdir, m["stats"]))
+                # one stats record per referenced file, nothing else
+                assert set(m["file_stats"]) == set(
+                    store._manifest_refs(m)
+                ), f"rev {rev}: file_stats out of step with the manifest"
         on_disk = set()
         for r, _dirs, files in os.walk(tdir):
             for f in files:
-                if f.endswith(".parquet") or f == "_STATS.json":
+                if not f.startswith("."):
                     p = os.path.join(r, f)
                     if "_commits" not in p:
                         on_disk.add(p)

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import datetime
 import inspect
+import json
 import os
 import time
 
@@ -182,12 +183,13 @@ def test_persistent_loser_raises_after_bounded_retries(
     assert attempts["n"] == ParquetFeatureStore._COMMIT_RETRIES
 
 
-def test_legacy_pointer_layout_still_readable(spark, store_root, mkstore):
-    """Tables written by the old ``_CURRENT`` + ``_v{N}`` layout read
-    transparently (fallbacks in _current_version/_version_dir); the
-    first new-protocol write moves them onto the marker log."""
+def test_legacy_layouts_rejected_naming_table(spark, store_root, mkstore):
+    """The retired on-disk layouts are no longer read: a hand-built
+    ``_CURRENT`` + ``_v1`` table, a commit marker that names only a
+    directory and a manifest marker without ``file_stats`` each make
+    ``get_table`` and ``update_snapshot`` raise ``ValueError`` naming
+    the table, and neither call writes anything."""
     be = mkstore()
-    # hand-build a legacy table
     tdir = os.path.join(store_root, "ds", "t")
     os.makedirs(tdir, exist_ok=True)
     df = _df(spark, [("a", 1.0)]).selectExpr(
@@ -198,18 +200,43 @@ def test_legacy_pointer_layout_still_readable(spark, store_root, mkstore):
         "cast(NULL as timestamp) AS until_ts",
     )
     df.write.parquet(os.path.join(tdir, "_v1"))
-    with open(os.path.join(tdir, "_CURRENT"), "w") as fh:
+    cdir = be._commits_dir("ds.t")
+
+    def state():
+        files = sorted(
+            os.path.relpath(os.path.join(d, f), store_root)
+            for d, _dirs, names in os.walk(store_root)
+            for f in names
+        )
+        return files, sorted(be.commit_backend.list(cdir))
+
+    def assert_rejected():
+        before = state()
+        with pytest.raises(ValueError, match=r"table ds\.t version 1 "):
+            be.get_table("ds.t", T(2024, 1, 5))
+        with pytest.raises(ValueError, match=r"table ds\.t version 1 "):
+            be.update_snapshot(_df(spark, [("a", 2.0)]), "ds.t", T(2024, 1, 6))
+        assert state() == before
+
+    pointer = os.path.join(tdir, "_CURRENT")
+    with open(pointer, "w") as fh:
         fh.write("1")
+    assert_rejected()
+    os.unlink(pointer)
 
-    assert be._current_version("ds.t") == 1
-    assert be.table_exists("ds.t")
-    assert _snap(be, T(2024, 1, 5)) == {("a", 1.0)}
-
-    be.update_snapshot(_df(spark, [("a", 2.0)]), "ds.t", T(2024, 1, 6))
-    assert be._current_version("ds.t") == 2
-    assert be._read_marker("ds.t", 2) is not None
-    assert _snap(be, T(2024, 1, 5)) == {("a", 1.0)}
-    assert _snap(be, T(2024, 1, 6)) == {("a", 2.0)}
+    parts = sorted(
+        f"_v1/{f}"
+        for f in os.listdir(os.path.join(tdir, "_v1"))
+        if f.endswith(".parquet")
+    )
+    for marker in (
+        {"dir": "_v1"},
+        {"version": 1, "dir": "_v1", "files": parts},
+    ):
+        be.commit_backend.put(
+            os.path.join(cdir, "1.json"), json.dumps(marker).encode()
+        )
+        assert_rejected()
 
 
 def test_vanished_base_manifest_surfaces_as_retryable_conflict(
@@ -327,6 +354,8 @@ def test_gc_spares_young_inflight_attempt_dirs(spark, store_root, mkstore):
     markers."""
     be = mkstore()
     be.update_snapshot(_df(spark, [("a", 1.0)]), "ds.t", T(2024, 1, 1))
+    v1_dir = be._version_dir("ds.t", 1)
+    assert os.path.isdir(v1_dir)
 
     # a concurrent writer's in-flight attempt for version 2 — data
     # partially written, marker not yet put, mtime = now
@@ -341,7 +370,7 @@ def test_gc_spares_young_inflight_attempt_dirs(spark, store_root, mkstore):
     # v3's GC sweeps versions < 2: the COMMITTED v1 dir goes, the
     # young uncommitted v2 attempt stays
     assert os.path.isdir(inflight), "GC swept a live writer's attempt dir"
-    assert not os.path.isdir(be._version_dir("ds.t", 1))
+    assert not os.path.isdir(v1_dir)
 
     # once clearly abandoned (older than the retention window) it is
     # swept by the next commit

@@ -470,6 +470,86 @@ def test_compact_enforces_size_cap_retroactively(spark, pstore):
     assert snap == {(f"k{i}", float(i)) for i in range(35)}
 
 
+def test_update_reads_each_new_footer_once_and_stats_live_in_marker(
+    spark, pstore, monkeypatch
+):
+    """A month-layout update builds every new file's stats record from
+    ONE read of its footer (carried-forward files inherit theirs), and
+    the table statistics live in the commit marker: no ``_STATS.json``
+    is written, and ``table_stats`` still returns the write-time
+    ANALYZE figures."""
+    from collections import Counter
+
+    from diseasystore_spark.storage import scd2 as scd2_mod
+
+    opened: Counter = Counter()
+    real_pf, real_md = scd2_mod.pq.ParquetFile, scd2_mod.pq.read_metadata
+
+    def counting_pf(path, *a, **kw):
+        opened[str(path)] += 1
+        return real_pf(path, *a, **kw)
+
+    def counting_md(path, *a, **kw):
+        opened[str(path)] += 1
+        return real_md(path, *a, **kw)
+
+    monkeypatch.setattr(scd2_mod.pq, "ParquetFile", counting_pf)
+    monkeypatch.setattr(scd2_mod.pq, "read_metadata", counting_md)
+    revised = [("a", 9.0, D(2020, 1, 10), D(2020, 1, 25))] + ROWS_V1[1:]
+    updates = [
+        (ROWS_V1, T(2024, 1, 1), None),
+        (revised, T(2024, 2, 1), (D(2020, 1, 1), D(2020, 1, 31))),
+    ]
+    tdir = pstore._table_dir("ds.t")
+    for version, (rows, ts, rng) in enumerate(updates, start=1):
+        opened.clear()
+        pstore.update_snapshot(_df(spark, rows), "ds.t", ts, written_range=rng)
+        man = pstore._manifest_of("ds.t", version)
+        new = {
+            os.path.join(tdir, r)
+            for fs in man["months"].values()
+            for r in fs
+            if r.startswith(man["dir"] + "/")
+        }
+        assert new
+        assert {p: opened[p] for p in new} == {p: 1 for p in new}
+    monkeypatch.undo()
+
+    assert not [
+        f for _d, _s, names in os.walk(tdir) for f in names if "_STATS" in f
+    ]
+    assert set(man) == {"version", "dir", "months", "file_stats", "table_stats"}
+    # rows: a@1.0 (closed), a@9.0, b, c; valid_until NULL counts as
+    # valid_from: spans 10, 15, 10, 0 days
+    assert pstore.table_stats("ds.t") == {
+        "n": 4,
+        "k": 3,
+        "lo": "2020-01-10",
+        "hi": "2020-03-10",
+        "span_days": 60,
+        "avg_span": 8.75,
+    }
+
+
+def test_unreadable_new_footer_fails_the_write_before_commit(
+    spark, pstore, monkeypatch
+):
+    """A new file whose footer cannot be read fails the write: nothing
+    is committed and the attempt's segment directory is removed."""
+    from diseasystore_spark.storage import scd2 as scd2_mod
+
+    def unreadable(path, *a, **kw):
+        raise OSError(f"cannot read footer of {path}")
+
+    monkeypatch.setattr(scd2_mod.pq, "read_metadata", unreadable)
+    with pytest.raises(OSError, match="cannot read footer"):
+        pstore.update_snapshot(_df(spark, ROWS_V1), "ds.t", T(2024, 1, 1))
+    monkeypatch.undo()
+    assert pstore._current_version("ds.t") is None
+    tdir = pstore._table_dir("ds.t")
+    assert not [e for e in os.listdir(tdir) if e.startswith("_v")]
+
+
 def test_compact_sweep_is_metadata_only_and_stable_under_knob_churn(
     spark, pstore, monkeypatch
 ):
@@ -498,7 +578,7 @@ def test_compact_sweep_is_metadata_only_and_stable_under_knob_churn(
     v = pstore._current_version("ds.t")
     man = pstore._manifest_of("ds.t", v)
     refs = [f for fs in man["months"].values() for f in fs]
-    assert set(man.get("file_rows", {})) >= set(refs)
+    assert set(man["file_stats"]) >= set(refs)
 
     pstore.compact("ds.t")  # converge once
     v1 = pstore._current_version("ds.t")
@@ -634,7 +714,7 @@ def test_min_valid_until_prunes_closed_months_at_manifest(spark, pstore):
         ("e", 5.0, D(2020, 5, 2), D(2020, 5, 9)),    # May
     ]
     pstore.update_snapshot(_df(spark, rows), "ds.t", t1)
-    ms = pstore._manifest_of("ds.t", 1).get("month_stats")
+    ms = pstore._month_stats(pstore._manifest_of("ds.t", 1))
     assert ms is not None
     assert ms["2020-01"] == {"max_until": "2020-01-20", "open": False}
     assert ms["2020-04"]["open"] is True
@@ -667,7 +747,7 @@ def test_min_valid_until_prunes_closed_months_at_manifest(spark, pstore):
     pstore.max_records_per_file = 2
     pstore.compact("ds.t")
     v = pstore._current_version("ds.t")
-    ms2 = pstore._manifest_of("ds.t", v).get("month_stats")
+    ms2 = pstore._month_stats(pstore._manifest_of("ds.t", v))
     assert ms2["2020-01"] == {"max_until": "2020-01-20", "open": False}
     assert ms2["2020-04"]["open"] is True
     window3 = pstore.get_table("ds.t", t1, min_valid_until=D(2020, 5, 1))
@@ -684,7 +764,8 @@ def test_min_valid_until_prunes_closed_months_at_manifest(spark, pstore):
         pstore._commits_dir("ds.t"), f"{pstore._current_version('ds.t')}.json"
     )
     marker = _json.loads(pstore.commit_backend.get(marker_path))
-    marker["month_stats"]["2020-01"]["max_until"] = "2020-01-20T00:00:00"
+    for ref in marker["months"]["2020-01"]:
+        marker["file_stats"][ref]["max_valid_until"] = "2020-01-20T00:00:00"
     pstore.commit_backend.put(marker_path, _json.dumps(marker).encode())
     w4 = pstore.get_table("ds.t", t1, min_valid_until=D(2020, 5, 1))
     assert "2020-01" in months_of(w4)  # not prunable, but readable
@@ -766,10 +847,11 @@ def test_until_ts_axis_prunes_closed_history_files(spark, pstore):
 
 
 def _assert_manifest_stats_sound(pstore, table_id):
-    """Invariant: every month_stats / until_stats / from_stats entry
-    in the CURRENT manifest matches what the referenced parquet files
-    actually contain (recomputed here from the raw footers via
-    pyarrow, independent of the writer's code path)."""
+    """Invariant: every field of every file record in the CURRENT
+    manifest, and the month stats derived from them, match what the
+    referenced parquet files actually contain (recomputed here from
+    the raw column values via pyarrow, independent of the writer's
+    code path)."""
     import datetime as dt
 
     import pyarrow.parquet as pq
@@ -777,14 +859,10 @@ def _assert_manifest_stats_sound(pstore, table_id):
     v = pstore._current_version(table_id)
     m = pstore._manifest_of(table_id, v)
     tdir = pstore._table_dir(table_id)
-    ms = m.get("month_stats") or {}
-    us = m.get("until_stats") or {}
-    fs_ = m.get("from_stats") or {}
+    ms = pstore._month_stats(m)
 
     def col_vals(path, col):
-        import pyarrow.parquet as pq2
-
-        t = pq2.read_table(path, columns=[col])
+        t = pq.read_table(path, columns=[col])
         vals = t.column(0).to_pylist()
         return [
             v.astimezone(dt.timezone.utc).replace(tzinfo=None)
@@ -793,31 +871,33 @@ def _assert_manifest_stats_sound(pstore, table_id):
             for v in vals
         ]
 
+    def iso_max(vals):
+        vals = [x for x in vals if x is not None]
+        return max(vals).isoformat() if vals else None
+
+    refs_all = {r for fs in m["months"].values() for r in fs}
+    assert set(m["file_stats"]) == refs_all
     for month, refs in m["months"].items():
-        # month_stats: max(valid_until) / any-open over ALL the
-        # month's rows
-        if month in ms:
-            vu = [
-                x
-                for r in refs
-                for x in col_vals(f"{tdir}/{r}", "valid_until")
-            ]
-            has_open = any(x is None for x in vu)
-            mx = max((x for x in vu if x is not None), default=None)
-            assert ms[month]["open"] == has_open, month
-            expect = mx.isoformat() if (mx and not has_open) else ms[month]["max_until"]
-            if not has_open:
-                assert ms[month]["max_until"] == expect, month
+        vu_month = []
         for r in refs:
+            rec = m["file_stats"][r]
             ut = col_vals(f"{tdir}/{r}", "until_ts")
             ft = col_vals(f"{tdir}/{r}", "from_ts")
-            if r in us:
-                assert all(x is not None for x in ut), r
-                assert dt.datetime.fromisoformat(us[r]) == max(ut), r
-            if r in fs_:
-                assert dt.datetime.fromisoformat(fs_[r]) == min(
-                    x for x in ft if x is not None
-                ), r
+            vu = col_vals(f"{tdir}/{r}", "valid_until")
+            vu_month += vu
+            assert rec["rows"] == len(ft), r
+            assert rec["min_from_ts"] == min(ft).isoformat(), r
+            closed = all(x is not None for x in ut)
+            assert rec["max_until_ts"] == (iso_max(ut) if closed else None), r
+            assert rec["max_valid_until"] == iso_max(vu), r
+            assert rec["valid_open"] == any(x is None for x in vu), r
+        if month not in ms:  # the NULL month: never pruned
+            continue
+        # month stats: max(valid_until) / any-open over ALL the
+        # month's rows
+        assert ms[month]["open"] == any(x is None for x in vu_month), month
+        if not ms[month]["open"]:
+            assert ms[month]["max_until"] == iso_max(vu_month), month
 
 
 def test_prune_history_keeps_manifest_stats_sound(spark, pstore):
@@ -844,9 +924,9 @@ def test_prune_history_keeps_manifest_stats_sound(spark, pstore):
     ]
     pstore.update_snapshot(_df(spark, rows2), "ds.t", t[1])
     _assert_manifest_stats_sound(pstore, "ds.t")
-    ms = pstore._manifest_of(
-        "ds.t", pstore._current_version("ds.t")
-    ).get("month_stats")
+    ms = pstore._month_stats(
+        pstore._manifest_of("ds.t", pstore._current_version("ds.t"))
+    )
     assert ms["2020-01"] == {"max_until": "2020-01-31", "open": False}
 
     # prune everything closed at-or-before t2: drops the old 'a' row,
@@ -854,9 +934,9 @@ def test_prune_history_keeps_manifest_stats_sound(spark, pstore):
     dropped = pstore.prune_history("ds.t", t[1])
     assert dropped == 1
     _assert_manifest_stats_sound(pstore, "ds.t")
-    ms2 = pstore._manifest_of(
-        "ds.t", pstore._current_version("ds.t")
-    ).get("month_stats")
+    ms2 = pstore._month_stats(
+        pstore._manifest_of("ds.t", pstore._current_version("ds.t"))
+    )
     assert ms2["2020-01"] == {"max_until": "2020-01-12", "open": False}
     # a min_valid_until read AFTER the prune uses the refreshed bound:
     # January now prunable at a window the stale stats would have kept
