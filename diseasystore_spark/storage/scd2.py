@@ -19,6 +19,10 @@ time-travel alone cannot do that). Layout:
         __vm=YYYY-MM/__vc={c|o}/part-*.parquet        (month-partitioned;
                                                        __vc clusters closed
                                                        vs open rows)
+        __vc={c|o}/part-*.parquet                     (packed bin: a small
+                                                       month-scoped rewrite,
+                                                       listed under each of
+                                                       its months)
         part-*.parquet                                (flat)
     <root>/<schema>/<table>/_commits/{N}.json      -- marker + MANIFEST
     <root>/<schema>/logs/*.parquet                 -- append-only log sink
@@ -72,7 +76,12 @@ Scale path: with ``partition_granularity="month"``, each version is
 partitioned by ``month(valid_from)`` and a merge rewrites only months
 containing a changed row — ``update_snapshot`` is always scoped to a
 date range, so the rewrite is O(touched partitions), the same pruning
-a Delta ``MERGE`` on checksum would achieve. The merge plan itself
+a Delta ``MERGE`` on checksum would achieve. A rewrite that small
+(at most ``_PACK_MAX_ROWS`` rows) is written as one packed bin instead
+of one directory per month, and every month of the bin lists the same
+files; the ref sets of any two months are therefore equal or disjoint,
+and a rewrite always covers every month sharing a file with a changed
+one (``_rewrite_set``). The merge plan itself
 is one full outer join of the current rows with the incoming rows on
 ``checksum`` that classifies every row as kept, closed or inserted
 (Delta's single-join MERGE); it shuffles only on the checksum key and
@@ -394,12 +403,15 @@ class ParquetFeatureStore:
         min_valid_until: datetime.date | None = None,
         slice_ts: datetime.datetime | None = None,
     ) -> list[str]:
-        """Absolute parquet paths making up ``version``, pruned at
-        the MANIFEST to months ``<= month_max`` (NULL-month files are
-        never pruned — their rows carry no ``valid_from``). Every
-        pruning decision below derives from the file records, and a
-        bound a record cannot prove (None, or unparseable) never
-        prunes.
+        """Absolute parquet paths making up ``version``, each listed
+        once, pruned at the MANIFEST to months ``<= month_max``
+        (NULL-month files are never pruned — their rows carry no
+        ``valid_from``). A packed bin's files are listed under each of
+        its months, so they are read whenever any of those months is
+        kept: pruning yields a superset of the kept months' rows, which
+        the callers' clip narrows. Every pruning decision below derives
+        from the file records, and a bound a record cannot prove (None,
+        or unparseable) never prunes.
 
         ``min_valid_until`` additionally drops months whose records
         prove every row CLOSED at-or-before it (no valid-open rows,
@@ -424,13 +436,15 @@ class ParquetFeatureStore:
                     mx = _parsed(s["max_until"], datetime.date.fromisoformat)
                     if not s["open"] and mx and mx <= min_valid_until:
                         closed.add(m)
-            rels = [
-                f
-                for m, fs in manifest["months"].items()
-                if (month_max is None or m == NULL_MONTH or m <= month_max)
-                and m not in closed
-                for f in fs
-            ]
+            rels = list(
+                dict.fromkeys(
+                    f
+                    for m, fs in manifest["months"].items()
+                    if (month_max is None or m == NULL_MONTH or m <= month_max)
+                    and m not in closed
+                    for f in fs
+                )
+            )
         if slice_ts is not None:
 
             def visible_at_slice(r: str) -> bool:
@@ -467,12 +481,31 @@ class ParquetFeatureStore:
 
     @staticmethod
     def _manifest_refs(manifest: dict) -> list[str]:
-        """Every data-file relpath a marker's manifest references."""
+        """Every data-file relpath a marker's manifest references, each
+        once (a packed bin's files are listed under several months)."""
         if "files" in manifest:
             return list(manifest["files"])
-        if "months" in manifest:
-            return [f for fs in manifest["months"].values() for f in fs]
-        return []
+        return list(
+            dict.fromkeys(
+                f for fs in manifest.get("months", {}).values() for f in fs
+            )
+        )
+
+    @staticmethod
+    def _rewrite_set(manifest: dict, months) -> tuple[list[str], int]:
+        """The months a rewrite of ``months`` must cover, and the rows
+        the base holds in them: ``months`` plus every month sharing a
+        file with one of them (a packed bin is rewritten whole, so no
+        carried-forward month keeps a reference to a rewritten file).
+        Ref sets are equal or disjoint, so one step closes the set."""
+        held = manifest["months"]
+        refs = {r for m in months for r in held.get(m, ())}
+        closure = set(months) | {
+            m for m, fs in held.items() if refs.intersection(fs)
+        }
+        return sorted(closure), sum(
+            manifest["file_stats"][r]["rows"] for r in refs
+        )
 
     def _commit_version(
         self, table_id: str, version: int, manifest: dict
@@ -673,8 +706,9 @@ class ParquetFeatureStore:
 
         ``max_valid_from`` (a date): on a month-partitioned table,
         months strictly after it are pruned at the MANIFEST — the file
-        list handed to Spark never contains them (the study-period
-        clip's upper bound costs zero scan and zero listing).
+        list handed to Spark never contains them, unless they share a
+        packed bin with a kept month (the study-period clip's upper
+        bound costs zero scan and zero listing).
 
         ``min_valid_until`` (a date): the LOWER-bound twin — months
         whose file records prove every row closed at-or-before it (no
@@ -884,9 +918,10 @@ class ParquetFeatureStore:
 
         Month-partitioned manifest tables compact PARTIALLY by
         default: the manifest already knows each month's file count,
-        so only months holding more than one file are read and
-        rewritten — every already-compact month is carried forward by
-        reference, making the op O(fragmented months), the same
+        so only months holding more than one file (and the months
+        sharing a packed bin with them) are read and rewritten — every
+        already-compact month is carried forward by reference, making
+        the op O(fragmented months), the same
         pruning discipline as the merge itself (``full=True`` forces
         the old whole-table rewrite). A table with nothing fragmented
         is a NO-OP: no version bump, no write. Under
@@ -964,17 +999,19 @@ class ParquetFeatureStore:
                     for g in groups.values()
                 )
 
-            frag = sorted(
-                m for m, fs in months.items() if is_fragmented(fs)
-            )
+            frag = [m for m, fs in months.items() if is_fragmented(fs)]
             if not frag:
-                return sum(len(fs) for fs in months.values())
-            files = [
-                os.path.join(tdir, f) for m in frag for f in months[m]
-            ]
-            rows = self._read_files(files)
+                return len(self._manifest_refs(manifest))
+            # No row count: compact converges to one file per (month,
+            # cluster) group, so it writes the per-month layout, and a
+            # packed bin it must rewrite is unpacked.
+            frag, _ = self._rewrite_set(manifest, frag)
+            files = dict.fromkeys(f for m in frag for f in months[m])
             self._write_version(
-                rows, table_id, changed_months=frag, base_version=base
+                self._read_files([os.path.join(tdir, f) for f in files]),
+                table_id,
+                changed_months=frag,
+                base_version=base,
             )
         elif self.partition_granularity == "month":
             current = self.read_raw(table_id, version=base)
@@ -1213,7 +1250,12 @@ class ParquetFeatureStore:
         """Insert rows not already current at ``ts``; never close
         anything. Replay-idempotent: a re-merged batch matches on
         checksum and inserts nothing (the version bump is skipped)."""
-        partitioned = self._scoped_write_ok(table_id, base)
+        manifest = (
+            self._committed(table_id, base)
+            if self.partition_granularity == "month"
+            else {}
+        )
+        partitioned = "months" in manifest
         existing = self.read_raw(table_id, version=base)
         is_current = _valid_at(ts)
         inserted = incoming.join(
@@ -1241,32 +1283,27 @@ class ParquetFeatureStore:
         month_of = _month_key(F.col("valid_from"))
         inserted = inserted.cache()
         try:
-            changed_months = sorted(
-                r["m"]
-                for r in inserted.select(month_of.alias("m")).distinct().collect()
-            )
-            if not changed_months:
+            per_month = {
+                r["m"]: r["n"]
+                for r in inserted.groupBy(month_of.alias("m"))
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            if not per_month:
                 return
-            new_parts = existing.where(month_of.isin(changed_months)).unionByName(
+            rewrite, n = self._rewrite_set(manifest, per_month)
+            new_parts = existing.where(month_of.isin(rewrite)).unionByName(
                 inserted
             )
             self._write_version(
                 new_parts,
                 table_id,
-                changed_months=changed_months,
+                changed_months=rewrite,
                 base_version=base,
+                rows=n + sum(per_month.values()),
             )
         finally:
             inserted.unpersist()
-
-    def _scoped_write_ok(self, table_id: str, base: int | None) -> bool:
-        """Month-scoped (pruned) writes need a month-layout base to
-        carry unchanged months forward by reference. A flat-layout base
-        takes one unscoped full rewrite — the migration write — and is
-        month-partitioned from then on."""
-        if self.partition_granularity != "month":
-            return False
-        return base is None or "months" in self._committed(table_id, base)
 
     def _merge_existing(
         self,
@@ -1285,14 +1322,19 @@ class ParquetFeatureStore:
         - existing only, out of scope: kept verbatim;
         - incoming only: inserted, open from ``ts``.
 
-        The insert side matches against ALL current rows, in scope or
-        not, so an incoming row equal to an out-of-scope current row is
-        never opened twice."""
-        partitioned = self._scoped_write_ok(table_id, base)
-        if not partitioned:
-            # an unscoped compare must read the WHOLE table — a range
-            # scope is only sound when untouched months carry forward
-            written_range = None
+        The insert side matches against every current row the compare
+        reads, in scope or not, so an incoming row equal to an
+        out-of-scope current row is never opened twice. On a scoped
+        merge those are the current rows of months up to the range's
+        last month, plus the NULL month; an incoming row equal to a
+        later month's row is a clip-contract violation, which the
+        unscoped fallback below catches.
+
+        On the month layout only the changed months — closed over the
+        packed bins they share (``_rewrite_set``) — are rewritten. A
+        flat-layout base under a month store takes the same merge,
+        scope included, but rewrites every row: the migration write,
+        month-partitioned from then on."""
         existing = self.read_raw(
             table_id,
             max_valid_from=written_range[1] if written_range else None,
@@ -1301,34 +1343,16 @@ class ParquetFeatureStore:
         is_current = _valid_at(ts)
         ts_lit = F.lit(ts).cast("timestamp")
         payload = [c for c in existing.columns if c not in SCD2_COLUMNS]
-        in_scope = F.lit(True)
         if written_range is not None:
-            # Only rows whose validity OVERLAPS the declared range are
-            # in the compare's scope: ``data`` is the complete snapshot
-            # of range-overlapping rows (the engine compute contract),
-            # so absence outside the range carries no information.
-            # Rows entirely before range_start (or after range_end)
-            # are NEVER closed by a scoped merge — the reference
-            # reaches the same end state by re-including all current
-            # out-of-range rows into the compared frame
-            # (R/DiseasystoreBase.R:195-212) — so a backfill at a new
-            # slice_ts neither closes nor rewrites earlier months, and
-            # out-of-scope rows of a changed month (a sub-month range
-            # update) are carried into its rewrite verbatim.
-            in_scope = (F.col("valid_from") <= F.lit(written_range[1])) & (
-                F.col("valid_until").isNull()
-                | (F.col("valid_until") > F.lit(written_range[0]))
-            )
             # Only a scoped compare can fall back (below) and read
             # ``incoming`` a second time — usually an upstream compute
             # handed in lazily, so keep its one evaluation.
             incoming = incoming.cache()
-
         incoming_rows = incoming.select(
             "checksum", F.struct(*payload).alias("__in")
         )
 
-        if not partitioned:
+        if self.partition_granularity != "month":
             # Flat: the whole table is rewritten anyway, so the join
             # carries full rows and the non-current rows ∪ the merged
             # rows are one write.
@@ -1359,18 +1383,52 @@ class ParquetFeatureStore:
             )
             return
 
-        # Partition-pruned merge. The join reads only the current rows'
-        # checksum, month and scope and keeps only the changed rows:
-        # the closed rows' keys and the inserted rows, cached. The
-        # changed months are collected from that frame; only those
-        # months are rewritten from a pruned re-read (closing the
-        # matched keys), every other month is carried forward by
-        # manifest reference. Checksums are unique among current rows
-        # (``incoming`` is deduplicated and only unmatched rows open),
-        # so the re-read's join on the closed keys adds no rows.
+        manifest = self._committed(table_id, base)
+        migrating = "months" not in manifest
+        current = existing.where(is_current)
+        in_scope = F.lit(True)
+        if written_range is not None:
+            # Only rows whose validity OVERLAPS the declared range are
+            # in the compare's scope: ``data`` is the complete snapshot
+            # of range-overlapping rows (the engine compute contract),
+            # so absence outside the range carries no information.
+            # Rows entirely before range_start (or after range_end)
+            # are NEVER closed by a scoped merge — the reference
+            # reaches the same end state by re-including all current
+            # out-of-range rows into the compared frame
+            # (R/DiseasystoreBase.R:195-212) — so a backfill at a new
+            # slice_ts neither closes nor rewrites earlier months, and
+            # out-of-scope rows of a changed month (a sub-month range
+            # update) are carried into its rewrite verbatim.
+            in_scope = (F.col("valid_from") <= F.lit(written_range[1])) & (
+                F.col("valid_until").isNull()
+                | (F.col("valid_until") > F.lit(written_range[0]))
+            )
+            # Match only against the rows a per-month read pruned to
+            # the range's last month holds (plus the NULL month): a
+            # packed bin or a flat base also holds later months, and a
+            # match there would hide a clip-violating row from the
+            # fallback below.
+            stop = (
+                written_range[1].replace(day=1) + datetime.timedelta(days=31)
+            ).replace(day=1)
+            current = current.where(
+                F.col("valid_from").isNull()
+                | (F.col("valid_from") < F.lit(stop))
+            )
+
+        # The join reads only the current rows' checksum, month and
+        # scope and keeps only the changed rows: the closed rows' keys
+        # and the inserted rows, cached. One aggregation of that frame
+        # yields the changed months and the inserted rows per month;
+        # only the rewrite set is rewritten from a pruned re-read
+        # (closing the matched keys), every other month is carried
+        # forward by manifest reference. Checksums are unique among
+        # current rows (``incoming`` is deduplicated and only
+        # unmatched rows open), so the re-read's join on the closed
+        # keys adds no rows.
         changes = (
-            existing.where(is_current)
-            .select(
+            current.select(
                 "checksum",
                 _month_key(F.col("valid_from")).alias("__m"),
                 in_scope.alias("__s"),
@@ -1389,29 +1447,37 @@ class ParquetFeatureStore:
             .cache()
         )
         try:
-            changed_months = sorted(
-                r["__m"] for r in changes.select("__m").distinct().collect()
-            )
-            if not changed_months:
+            inserted_per_month = {
+                r["__m"]: r["n"]
+                for r in changes.groupBy("__m")
+                .agg(F.count("__in").alias("n"))
+                .collect()
+            }
+            changed_months = sorted(inserted_per_month)
+            if not changed_months and not migrating:
                 return  # merge is a no-op: current version already correct
 
-            if written_range is not None and changed_months[-1] > written_range[
-                1
-            ].strftime("%Y-%m"):
+            if written_range is not None and changed_months and changed_months[
+                -1
+            ] > written_range[1].strftime("%Y-%m"):
                 # ``data`` reached past the declared range (clip-contract
                 # violation): the scoped compare would treat those months'
                 # surviving rows as absent. Redo unscoped — correct for
                 # any input, just without the pruning.
                 return self._merge_existing(incoming, table_id, ts, None, base)
 
+            rewrite, rows = None, None
+            if not migrating:
+                rewrite, rows = self._rewrite_set(manifest, changed_months)
+                existing = existing.where(
+                    _month_key(F.col("valid_from")).isin(rewrite)
+                )
+                rows += sum(inserted_per_month.values())
             closed_keys = changes.where(F.col("__in").isNull()).select(
                 "checksum", F.lit(True).alias("__c")
             )
             rewritten = (
-                existing.where(
-                    _month_key(F.col("valid_from")).isin(changed_months)
-                )
-                .join(closed_keys, "checksum", "left")
+                existing.join(closed_keys, "checksum", "left")
                 .withColumn(
                     "until_ts",
                     F.when(F.col("__c") & is_current, ts_lit).otherwise(
@@ -1429,13 +1495,29 @@ class ParquetFeatureStore:
             self._write_version(
                 rewritten.unionByName(inserted),
                 table_id,
-                changed_months=changed_months,
+                changed_months=rewrite,
                 base_version=base,
+                rows=rows,
             )
         finally:
             changes.unpersist()
             if written_range is not None:
                 incoming.unpersist()
+
+    #: at or below this row count a month-scoped rewrite is written as
+    #: one packed bin (one file per ``__vc`` cluster) instead of one
+    #: directory per month: a small write is bound by file and
+    #: directory creation, and its readers by files opened. Above it,
+    #: months keep their own files, so month pruning stays exact where
+    #: it saves real scan work. A one-month revision of a packed table
+    #: rewrites the whole bin in one task; measured with
+    #: ``scripts/bench_scd2_packing.py`` (24 months, 4 cores), that
+    #: stays faster than the per-month rewrite up to ~75k rows per bin
+    #: and turns slower between ~94k and 200k, so the constant sits
+    #: below that crossover. The price is on narrow reads: a one-month
+    #: read of a bin decodes the whole bin's cluster (+~10 ms at 48k
+    #: rows).
+    _PACK_MAX_ROWS = 50_000
 
     def _write_version(
         self,
@@ -1443,6 +1525,7 @@ class ParquetFeatureStore:
         table_id: str,
         changed_months: list[str] | None,
         base_version: int | None,
+        rows: int | None = None,
     ) -> None:
         """Write a new immutable segment directory and commit the
         version by putting its MANIFEST marker.
@@ -1453,6 +1536,17 @@ class ParquetFeatureStore:
         month — zero data I/O for unchanged months (no links, no
         copies; the Iceberg pattern). Commit cost is therefore
         O(changed months), independent of the table's total span.
+        ``changed_months`` must be closed over shared files
+        (``_rewrite_set``): a carried month that shares a file with a
+        rewritten one raises before anything is written, since the new
+        manifest would read that file's rows twice or drop them.
+
+        ``rows`` is the row count of ``new_table`` when the caller
+        knows it without a job. A month-scoped rewrite of at most
+        ``_PACK_MAX_ROWS`` rows is written as one packed bin — one file
+        per ``__vc`` cluster, listed under every one of
+        ``changed_months`` — instead of one directory per month: at
+        that size the write is bound by file creation, not bytes.
 
         Every file the write creates gets its stats record from one
         read of its footer; carried-forward files inherit theirs from
@@ -1495,14 +1589,30 @@ class ParquetFeatureStore:
                 # surface the retryable conflict.
                 raise CommitConflictError(table_id, version)
 
+            carried = {
+                m: fs
+                for m, fs in base["months"].items()
+                if m not in changed_months
+            }
+            rewritten = {
+                r for m in changed_months for r in base["months"].get(m, ())
+            }
+            if any(rewritten.intersection(fs) for fs in carried.values()):
+                raise RuntimeError(
+                    f"table {table_id}: rewriting months {changed_months}"
+                    " would leave carried months referencing rewritten files"
+                )
+        pack = (
+            changed_months is not None
+            and rows is not None
+            and rows <= self._PACK_MAX_ROWS
+        )
+
         try:
-            body = self._write_segment(new_table, tdir, dirname)
+            body = self._write_segment(
+                new_table, tdir, dirname, changed_months if pack else None
+            )
             if base is not None:
-                carried = {
-                    m: fs
-                    for m, fs in base["months"].items()
-                    if m not in changed_months
-                }
                 body["months"] = carried | body["months"]
             inherited = base["file_stats"] if base is not None else {}
             file_stats = {
@@ -1534,29 +1644,32 @@ class ParquetFeatureStore:
             raise
 
     def _write_segment(
-        self, new_table: DataFrame, tdir: str, dirname: str
+        self,
+        new_table: DataFrame,
+        tdir: str,
+        dirname: str,
+        pack_months: list[str] | None = None,
     ) -> dict:
         """Write ``new_table`` into the new segment directory
         ``dirname`` and list the files it created:
         ``{"months": {month: [relpath, ...]}}`` on the month layout,
-        ``{"files": [relpath, ...]}`` on the flat one."""
+        ``{"files": [relpath, ...]}`` on the flat one. With
+        ``pack_months`` the rows are written as one packed bin and
+        every one of those months lists all of its files."""
         out_dir = os.path.join(tdir, dirname)
         if self.partition_granularity == "month":
             # One shuffle on the partition key -> one file per month
-            # instead of (upstream partitions x months) tiny files.
-            # At real scale, repartition(N, col) with N sized for
-            # ~128 MB files per month is the knob.
-            # Sorting by valid_until (open rows last) tightens parquet
-            # row-group min/max stats so the scoped merge's
-            # close-candidate predicate (valid_until > range_start OR
-            # NULL) skips row groups of long-closed rows.
-            sort_cols = [F.col(PARTITION_COL)]
-            if "valid_until" in new_table.columns:
-                sort_cols.append(F.col("valid_until").asc_nulls_last())
-            partitioned = new_table.withColumn(
-                PARTITION_COL,
-                F.date_format(F.col("valid_from"), "yyyy-MM"),
-            )
+            # instead of (upstream partitions x months) tiny files; a
+            # packed bin shuffles into one task -> one file per
+            # cluster. A giant month is split by
+            # ``max_records_per_file``.
+            partitioned, part_cols = new_table, []
+            if pack_months is None:
+                partitioned = partitioned.withColumn(
+                    PARTITION_COL,
+                    F.date_format(F.col("valid_from"), "yyyy-MM"),
+                )
+                part_cols.append(PARTITION_COL)
             # Second partition level — the TRANSACTION axis: rows
             # already closed (until_ts set) cluster into their own
             # files (``__vc=c``) apart from the live rows (``__vc=o``),
@@ -1566,21 +1679,29 @@ class ParquetFeatureStore:
             # ``get_table(slice_ts)`` drops files whose every row
             # closed at-or-before the slice BEFORE Spark ever lists
             # them — a current-slice read scans O(live rows), not
-            # O(history). Still one shuffle on the month key: each
-            # month task writes into both subdirs.
-            cluster_txn = "until_ts" in partitioned.columns
-            part_cols = [PARTITION_COL]
-            if cluster_txn:
+            # O(history). Still one shuffle: each task writes into
+            # both subdirs.
+            if "until_ts" in partitioned.columns:
                 partitioned = partitioned.withColumn(
                     TXN_CLUSTER_COL,
                     F.when(F.col("until_ts").isNotNull(), F.lit("c"))
                     .otherwise(F.lit("o")),
                 )
                 part_cols.append(TXN_CLUSTER_COL)
-                # tighten until_ts row-group stats inside closed files
-                sort_cols.append(F.col("until_ts").asc_nulls_last())
-            partitioned = partitioned.repartition(
-                PARTITION_COL
+            # Sorting by valid_until (open rows last) tightens parquet
+            # row-group min/max stats so the scoped merge's
+            # close-candidate predicate (valid_until > range_start OR
+            # NULL) skips row groups of long-closed rows; until_ts
+            # tightens them inside closed files.
+            sort_cols = [F.col(c) for c in part_cols[:1]] + [
+                F.col(c).asc_nulls_last()
+                for c in ("valid_until", "until_ts")
+                if c in partitioned.columns
+            ]
+            partitioned = (
+                partitioned.repartition(1)
+                if pack_months is not None
+                else partitioned.repartition(PARTITION_COL)
             ).sortWithinPartitions(*sort_cols)
             writer = partitioned.write.partitionBy(*part_cols).mode(
                 "overwrite"
@@ -1591,7 +1712,10 @@ class ParquetFeatureStore:
                 )
             writer.parquet(out_dir)
             self._scrub_job_droppings(out_dir)
-            return {"months": self._segment_months(tdir, dirname)}
+            if pack_months is None:
+                return {"months": self._segment_months(tdir, dirname)}
+            files = self._segment_files(tdir, out_dir)
+            return {"months": {m: files for m in pack_months}}
         writer = new_table.write.mode("overwrite")
         if self.max_records_per_file is not None:
             # Same file-size knob as the partitioned branch — a
@@ -1637,15 +1761,20 @@ class ParquetFeatureStore:
             # walk: months may nest a ``__vc=`` transaction-cluster
             # level below the month dir (round 11)
             mdir = os.path.join(seg, entry)
-            files = sorted(
-                os.path.relpath(os.path.join(root, f), tdir)
-                for root, _dirs, names in os.walk(mdir)
-                for f in names
-                if f.endswith(".parquet")
-            )
+            files = ParquetFeatureStore._segment_files(tdir, mdir)
             if files:
                 out[month] = files
         return out
+
+    @staticmethod
+    def _segment_files(tdir: str, top: str) -> list[str]:
+        """Relpaths (to ``tdir``) of the parquet files under ``top``."""
+        return sorted(
+            os.path.relpath(os.path.join(root, f), tdir)
+            for root, _dirs, names in os.walk(top)
+            for f in names
+            if f.endswith(".parquet")
+        )
 
     #: above this row count the stats aggregation runs as a Spark job
     #: instead of a driver-side DuckDB scan (the scan reads only key +

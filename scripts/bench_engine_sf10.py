@@ -201,8 +201,13 @@ def main() -> None:
     man = store._manifest_of(tid, store._current_version(tid))
     all_months = sorted(man["months"])
     kept_months = [m for m in all_months if m <= "2020-06"]
-    n_total = sum(len(man["months"][m]) for m in all_months)
-    n_kept = sum(len(man["months"][m]) for m in kept_months)
+
+    def refs(months) -> set[str]:
+        # distinct files: a packed bin is listed under each of its months
+        return {r for m in months for r in man["months"][m]}
+
+    n_total = len(refs(all_months))
+    n_kept = len(refs(kept_months))
     # transaction-axis accounting: files whose stats record proves
     # them invisible at slice2 (max until_ts / min from_ts) are
     # additionally dropped — mirror the reader's rule here so the pin
@@ -214,12 +219,7 @@ def main() -> None:
             return False
         return f is None or T.fromisoformat(f) <= ts
 
-    n_kept_visible = sum(
-        1
-        for m in kept_months
-        for r in man["months"][m]
-        if txn_visible(r, slice2)
-    )
+    n_kept_visible = sum(1 for r in refs(kept_months) if txn_visible(r, slice2))
     pruned_df = store.get_table(
         tid, slice2, max_valid_from=D(2020, 6, 30)
     )
@@ -261,8 +261,8 @@ def main() -> None:
     # answer it.
     man3 = store._manifest_of(tid, store._current_version(tid))
     cur_files = store.get_table(tid, slice3).inputFiles()
-    n_closed_files = sum(
-        1 for fs in man3["months"].values() for r in fs if "__vc=c" in r
+    n_closed_files = len(
+        {r for fs in man3["months"].values() for r in fs if "__vc=c" in r}
     )
     assert n_closed_files > 0, "revision produced no closed files"
     assert not any("__vc=c" in f for f in cur_files), (

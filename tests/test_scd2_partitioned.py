@@ -772,7 +772,7 @@ def test_min_valid_until_prunes_closed_months_at_manifest(spark, pstore):
     assert "2020-02" not in months_of(w4)  # other stats still apply
 
 
-def test_until_ts_axis_prunes_closed_history_files(spark, pstore):
+def test_until_ts_axis_prunes_closed_history_files(spark, pstore, monkeypatch):
     """Round-11 transaction-axis pruning (VERDICT r10 item 1): the
     writer clusters closed rows into ``__vc=c`` files and records
     per-file until/from stats in the manifest, so ``get_table``
@@ -782,7 +782,10 @@ def test_until_ts_axis_prunes_closed_history_files(spark, pstore):
     OLD slice never opens files created after it. Pinned via
     inputFiles(); snapshot contents stay exact at every slice,
     including across compaction. Mirrors the reference's snapshot
-    predicate ``R/2_FeatureHandler.R:90-96``."""
+    predicate ``R/2_FeatureHandler.R:90-96``. Pinned to the per-month
+    layout; ``test_until_ts_axis_prunes_packed_bins`` is its packed
+    twin."""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     t1, t2, t3 = T(2024, 1, 1), T(2024, 2, 1), T(2024, 3, 1)
     keys = [(m, k) for m in (1, 2, 3) for k in range(3)]
 
@@ -846,6 +849,70 @@ def test_until_ts_axis_prunes_closed_history_files(spark, pstore):
     check_all()
 
 
+def test_until_ts_axis_prunes_packed_bins(spark, pstore):
+    """Packed twin of ``test_until_ts_axis_prunes_closed_history_files``:
+    the same three slices on a table whose merges are small enough to
+    pack. Each merge writes one bin — one file per ``__vc`` cluster —
+    listed under all three months, and the scoped February revision
+    rewrites the whole bin. Snapshots stay exact at every slice and
+    across a full compaction, no file is read twice, and the current
+    slice opens no closed-cluster file."""
+    t1, t2, t3 = T(2024, 1, 1), T(2024, 2, 1), T(2024, 3, 1)
+    keys = [(m, k) for m in (1, 2, 3) for k in range(3)]
+
+    def gen(v, months=(1, 2, 3)):
+        return [
+            (f"k{m}_{k}", v, D(2020, m, 10), D(2020, m, 20))
+            for m, k in keys
+            if m in months
+        ]
+
+    pstore.update_snapshot(_df(spark, gen(1.0)), "ds.t", t1)
+    pstore.update_snapshot(_df(spark, gen(2.0)), "ds.t", t2)
+    m2 = pstore._manifest_of("ds.t", 2)
+    bin2 = m2["months"]["2020-01"]
+    assert m2["months"]["2020-02"] == bin2 == m2["months"]["2020-03"]
+    assert sorted(f.split("/")[1] for f in bin2) == ["__vc=c", "__vc=o"]
+    assert all(f.startswith(m2["dir"] + "/") for f in bin2)
+    pstore.update_snapshot(
+        _df(spark, gen(3.0, months=(2,))),
+        "ds.t",
+        t3,
+        written_range=(D(2020, 2, 1), D(2020, 2, 28)),
+    )
+    # the February revision rewrote the whole bin, January and March
+    # included: no month still references a file of the old bin
+    m3 = pstore._manifest_of("ds.t", 3)
+    bin3 = m3["months"]["2020-02"]
+    assert m3["months"]["2020-01"] == bin3 == m3["months"]["2020-03"]
+    assert set(bin3).isdisjoint(bin2)
+    assert all(f.startswith(m3["dir"] + "/") for f in bin3)
+    _assert_manifest_stats_sound(pstore, "ds.t")
+
+    def clusters(df):
+        files = df.inputFiles()
+        assert len(files) == len(set(files)), files
+        return {p.split("__vc=")[1].split("/")[0] for p in files}
+
+    def snap(ts):
+        return {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", ts).collect()}
+
+    def check_all():
+        assert clusters(pstore.get_table("ds.t", t3)) == {"o"}
+        assert snap(t3) == {
+            f"k{m}_{k}": (3.0 if m == 2 else 2.0) for m, k in keys
+        }
+        assert snap(t2) == {f"k{m}_{k}": 2.0 for m, k in keys}
+        assert clusters(pstore.get_table("ds.t", t1)) == {"c"}
+        assert snap(t1) == {f"k{m}_{k}": 1.0 for m, k in keys}
+        # 9 rows per full slice + 3 February revisions, each once
+        assert pstore.read_raw("ds.t").count() == 21
+
+    check_all()
+    pstore.compact("ds.t", full=True)
+    check_all()
+
+
 def _assert_manifest_stats_sound(pstore, table_id):
     """Invariant: every field of every file record in the CURRENT
     manifest, and the month stats derived from them, match what the
@@ -877,6 +944,12 @@ def _assert_manifest_stats_sound(pstore, table_id):
 
     refs_all = {r for fs in m["months"].values() for r in fs}
     assert set(m["file_stats"]) == refs_all
+    # a packed bin is listed whole under each of its months: the ref
+    # sets of any two months are equal or disjoint
+    ref_sets = [set(fs) for fs in m["months"].values()]
+    for a in ref_sets:
+        for b in ref_sets:
+            assert a == b or a.isdisjoint(b), (a, b)
     for month, refs in m["months"].items():
         vu_month = []
         for r in refs:
@@ -1035,3 +1108,145 @@ def test_manifest_reads_launch_no_spark_job(spark, pstore, tmp_path):
         assert pruned.schema == inferred
         assert snap.columns == ["key_id", "v", "valid_from", "valid_until"]
         assert {r["key_id"] for r in snap.collect()} == {"a", "b", "c"}
+
+
+def _packed(spark, store, rows, t0, t1):
+    """Write ``rows`` at ``t1`` over an earlier revision of every row
+    at ``t0``, so the ``t1`` merge changes every month at once and
+    packs them into one bin."""
+    store.update_snapshot(
+        _df(spark, [(k, v - 1, vf, vu) for k, v, vf, vu in rows]), "ds.t", t0
+    )
+    store.update_snapshot(_df(spark, rows), "ds.t", t1)
+    months = store._manifest_of("ds.t", store._current_version("ds.t"))[
+        "months"
+    ]
+    assert len({tuple(fs) for fs in months.values()}) == 1, months
+    return months
+
+
+def _each_row_once(store):
+    ids = [(r["key_id"], r["from_ts"]) for r in store.read_raw("ds.t").collect()]
+    assert len(ids) == len(set(ids)), sorted(ids)
+    return len(ids)
+
+
+def test_append_only_merge_on_packed_base_rewrites_whole_bin(spark, pstore):
+    """An append-only merge that touches one month of a packed bin
+    rewrites the whole bin (carrying the other months would keep
+    references to rewritten files), and every row appears once."""
+    t0, t1, t2 = T(2024, 1, 1), T(2024, 1, 2), T(2024, 1, 3)
+    bin1 = _packed(spark, pstore, ROWS_V1, t0, t1)
+    new = ("d", 4.0, D(2020, 2, 12), None)
+    pstore.update_snapshot(_df(spark, [new]), "ds.t", t2, close_absent=False)
+    months = pstore._manifest_of("ds.t", pstore._current_version("ds.t"))[
+        "months"
+    ]
+    assert months["2020-01"] == months["2020-02"] == months["2020-03"]
+    assert set(months["2020-01"]).isdisjoint(bin1["2020-01"])
+    _assert_manifest_stats_sound(pstore, "ds.t")
+    assert _each_row_once(pstore) == 7
+    snap = {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", t2).collect()}
+    assert snap == {"a": 1.0, "b": 2.0, "c": 3.0, "d": 4.0}
+    snap0 = {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", t0).collect()}
+    assert snap0 == {"a": 0.0, "b": 1.0, "c": 2.0}
+
+
+def test_compact_on_packed_base_counts_each_file_once(spark, pstore):
+    """Under ``max_records_per_file``, compaction rewrites the
+    oversized month and carries the packed bin by reference; the file
+    count it returns lists the bin's files once, though two months
+    list them."""
+    t0, t1 = T(2024, 1, 1), T(2024, 1, 2)
+    small = [("j", 1.0, D(2020, 1, 10), None), ("f", 2.0, D(2020, 2, 10), None)]
+    bin1 = _packed(spark, pstore, small, t0, t1)
+    pstore.update_snapshot(
+        _df(spark, small + [(f"m{i}", 1.0, D(2020, 3, 10), None) for i in range(12)]),
+        "ds.t",
+        t1,
+        written_range=(D(2020, 3, 1), D(2020, 3, 31)),
+    )
+    v = pstore._current_version("ds.t")
+    pstore.max_records_per_file = 5
+    n = pstore.compact("ds.t")
+    assert pstore._current_version("ds.t") == v + 1
+    months = pstore._manifest_of("ds.t", v + 1)["months"]
+    assert months["2020-01"] == months["2020-02"] == bin1["2020-01"]
+    assert len(months["2020-03"]) == 3
+    assert n == len({r for fs in months.values() for r in fs}) == 5
+    _assert_manifest_stats_sound(pstore, "ds.t")
+    assert _each_row_once(pstore) == 16
+    assert pstore.compact("ds.t") == n  # converged: a no-op
+    assert pstore._current_version("ds.t") == v + 1
+
+
+def test_write_version_refuses_to_split_a_packed_bin(spark, pstore):
+    """Rewriting one month of a packed bin while carrying the others
+    would leave them referencing rewritten files; ``_write_version``
+    refuses before any Spark job or file write."""
+    t0, t1 = T(2024, 1, 1), T(2024, 1, 2)
+    _packed(spark, pstore, ROWS_V1, t0, t1)
+    v = pstore._current_version("ds.t")
+    tdir = pstore._table_dir("ds.t")
+    before = sorted(os.listdir(tdir))
+    feb = pstore.read_raw("ds.t").where("month(valid_from) = 2")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    job = scheduler.nextJobId()
+    with pytest.raises(RuntimeError, match="carried months"):
+        pstore._write_version(
+            feb, "ds.t", changed_months=["2020-02"], base_version=v, rows=2
+        )
+    assert scheduler.nextJobId() == job
+    assert sorted(os.listdir(tdir)) == before
+    assert pstore._current_version("ds.t") == v
+
+
+@pytest.mark.parametrize("violating", [False, True])
+def test_scoped_update_is_layout_independent(spark, pstore, tmp_path, violating):
+    """A range-scoped update gives the same snapshots whatever layout
+    holds its base: a flat table (the migration write), per-month
+    files or one packed bin. In range, only in-scope rows close; an
+    incoming row past the range falls back to the unscoped compare on
+    every layout, even where the base holds that row in a file the
+    scoped read opens."""
+    from diseasystore_spark.storage.backends import MemoryCommitBackend
+
+    memory = isinstance(pstore.commit_backend, MemoryCommitBackend)
+
+    def store(name, granularity):
+        root = str(tmp_path / name)
+        kw = {"commit_backend": MemoryCommitBackend.shared(root)} if memory else {}
+        return ParquetFeatureStore(
+            spark, root, partition_granularity=granularity, **kw
+        )
+
+    t0, t1, t2 = T(2024, 1, 1), T(2024, 1, 2), T(2024, 1, 3)
+    store("flat", None).update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
+    pstore.update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
+    packed = store("packed", "month")
+    _packed(spark, packed, ROWS_V1, t0, t1)
+    bases = {"flat": store("flat", "month"), "month": pstore, "packed": packed}
+
+    data = [("a", 9.0, D(2020, 1, 10), D(2020, 1, 20))]
+    if violating:
+        data.append(ROWS_V1[2])  # March, unchanged: past the range
+    for st in bases.values():
+        st.update_snapshot(
+            _df(spark, data),
+            "ds.t",
+            t2,
+            written_range=(D(2020, 1, 1), D(2020, 1, 31)),
+        )
+
+    def snap(st, ts):
+        return {r["key_id"]: r["v"] for r in st.get_table("ds.t", ts).collect()}
+
+    want = {"a": 9.0, "c": 3.0} if violating else {"a": 9.0, "b": 2.0, "c": 3.0}
+    assert {n: snap(st, t2) for n, st in bases.items()} == dict.fromkeys(
+        bases, want
+    )
+    assert {n: snap(st, t1) for n, st in bases.items()} == dict.fromkeys(
+        bases, {"a": 1.0, "b": 2.0, "c": 3.0}
+    )
+    flat = bases["flat"]
+    assert "months" in flat._manifest_of("ds.t", flat._current_version("ds.t"))
