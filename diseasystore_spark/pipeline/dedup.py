@@ -317,11 +317,12 @@ def minhash_signatures(
     instead of ``num_hashes``.
 
     Physical shape: explode the (pre-deduped, per-row
-    ``array_distinct``) shingle array and aggregate ``num_hashes``
-    ``min`` columns by id. Every per-shingle hash then runs as a
-    whole-stage-codegen projection — the earlier narrow-map form kept
-    the hashes inside ``transform``/``zip_with`` lambdas, which
-    execute on the INTERPRETED expression path (measured at sf0.1:
+    ``array_distinct``) shingle array and aggregate one
+    ``array(min(...), ...)`` of ``num_hashes`` mins by id. Every
+    per-shingle hash then runs as a whole-stage-codegen projection —
+    the earlier narrow-map form kept the hashes inside
+    ``transform``/``zip_with`` lambdas, which execute on the
+    INTERPRETED expression path (measured at sf0.1:
     the q23 signature stage burned 15+ CPU-seconds; the codegen form
     halves it). The min aggregates are map-side combinable and a
     document's exploded shingles never leave their partition, so the
@@ -335,37 +336,26 @@ def minhash_signatures(
     df = spread(df)
     ex = df.select(
         F.col(id_col),
-        F.explode(
-            F.array_remove(
-                F.array_distinct(word_ngrams(text_col, n)), ""
-            )
+        F.expr(
+            f"explode(array_remove(array_distinct({_ngram_sql(text_col, n)}), ''))"
         ).alias("_s"),
     )
+    # Each signature is ONE SQL expression: Column calls cost a Py4J
+    # round trip per node at build time, SQL text costs one per
+    # expression. Integer seed literals keep the hash inputs int-typed.
     if not portable:
-        mins = [
-            F.min(F.xxhash64(F.col("_s"), F.lit(i))).alias(f"_h{i}")
-            for i in range(num_hashes)
-        ]
+        mins = [f"min(xxhash64(_s, {i}))" for i in range(num_hashes)]
     else:
         p = _PORTABLE_P
-        m = F.md5(F.col("_s"))
-        a = F.conv(F.substring(m, 1, 8), 16, 10).cast("bigint") % p
-        b = F.conv(F.substring(m, 9, 8), 16, 10).cast("bigint") % p
-        ex = ex.select(F.col(id_col), a.alias("_a"), b.alias("_b"))
-        mins = [
-            F.min((F.col("_a") + F.lit(i) * F.col("_b")) % p).alias(f"_h{i}")
-            for i in range(num_hashes)
-        ]
-    return (
-        ex.groupBy(id_col)
-        .agg(*mins)
-        .select(
+        half = "cast(conv(substring(md5(_s), {}, 8), 16, 10) as bigint) % {}"
+        ex = ex.select(
             F.col(id_col),
-            F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias(
-                "sig"
-            ),
+            F.expr(half.format(1, p)).alias("_a"),
+            F.expr(half.format(9, p)).alias("_b"),
         )
-    )
+        mins = [f"min((_a + {i} * _b) % {p})" for i in range(num_hashes)]
+    sig = F.expr(f"array({', '.join(mins)})").alias("sig")
+    return ex.groupBy(id_col).agg(sig)
 
 
 def _cap_buckets(band_rows: DataFrame, max_bucket: int | None) -> DataFrame:
@@ -387,19 +377,48 @@ def _first_band_match(bands: int, rows_per_band: int) -> Column:
     """CASE expression giving the first band index whose signature
     slices agree between sig_a and sig_b (NULL when none do)."""
 
-    def _band_match(bb: int) -> Column:
-        cond = None
-        for r in range(rows_per_band):
-            eq = F.col("sig_a")[bb * rows_per_band + r] == F.col("sig_b")[
-                bb * rows_per_band + r
-            ]
-            cond = eq if cond is None else cond & eq
+    def band_eq(bb: int) -> str:
+        # left-deep, as Column ``&`` chains build it (the parser would
+        # balance a flat AND chain)
+        cond = ""
+        for k in range(bb * rows_per_band, (bb + 1) * rows_per_band):
+            eq = f"sig_a[{k}] = sig_b[{k}]"
+            cond = f"({cond}) AND ({eq})" if cond else eq
         return cond
 
-    first_match = F.when(_band_match(0), F.lit(0))
-    for bb in range(1, bands):
-        first_match = first_match.when(_band_match(bb), F.lit(bb))
-    return first_match
+    whens = " ".join(f"WHEN {band_eq(bb)} THEN {bb}" for bb in range(bands))
+    return F.expr(f"CASE {whens} END")
+
+
+def _band_rows(
+    sigs: DataFrame,
+    id_col: str,
+    bands: int,
+    rows_per_band: int,
+    portable: bool,
+    out_id: str,
+    out_sig: str,
+) -> DataFrame:
+    """(out_id, out_sig, band, bucket): one row per signature band,
+    ``bucket`` hashing the band's slice of ``sig`` (md5 of the
+    '|'-joined values when ``portable``, else xxhash64). One explode
+    expression, built as SQL text in a single Py4J call."""
+
+    def bucket(b: int) -> str:
+        cells = [f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band)]
+        if portable:
+            cast = ", ".join(f"cast({c} as string)" for c in cells)
+            return f"md5(concat_ws('|', {cast}))"
+        return f"xxhash64({', '.join(cells)})"
+
+    structs = ", ".join(
+        f"struct({b} AS band, {bucket(b)} AS bucket)" for b in range(bands)
+    )
+    ids = F.col(id_col) if out_id == id_col else F.col(id_col).alias(out_id)
+    sig = F.col("sig") if out_sig == "sig" else F.col("sig").alias(out_sig)
+    return sigs.select(
+        ids, sig, F.expr(f"explode(array({structs}))").alias("bb")
+    ).select(out_id, out_sig, F.col("bb.band"), F.col("bb.bucket"))
 
 
 def minhash_lsh_pairs(
@@ -434,36 +453,18 @@ def minhash_lsh_pairs(
     matching bands stay under it.
     """
     rows_per_band = num_hashes // bands
-    # Signatures feed both sides of the candidate self-join; the
-    # signature plan is a narrow map (no reusable exchange), so
-    # materialize it once. (id + num_hashes longs) per doc is tiny.
+    # Signatures feed both sides of the candidate self-join; their
+    # plan ends in the signature groupBy's exchange. Measured on q23
+    # (sf0.002), dropping this pin only moves its 3 jobs into the
+    # sink (build 0.41 s + sink 0.88 s, against 0.99 s + 0.29 s with
+    # it): the total does not change. (id + num_hashes longs) per doc
+    # is tiny.
     sigs = minhash_signatures(
         df, id_col, text_col, num_hashes, n, portable
     ).localCheckpoint()
-
-    def _bucket(b: int) -> Column:
-        cols = [
-            F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)
-        ]
-        if portable:
-            return F.md5(F.concat_ws("|", *[c.cast("string") for c in cols]))
-        return F.xxhash64(*cols)
-
-    band_rows = sigs.select(
-        F.col(id_col),
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"), _bucket(b).alias("bucket")
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(F.col(id_col), "sig", F.col("bb.band"), F.col("bb.bucket"))
-    band_rows = _cap_buckets(band_rows, max_bucket)
+    band_rows = _cap_buckets(_band_rows(
+        sigs, id_col, bands, rows_per_band, portable, id_col, "sig"
+    ), max_bucket)
 
     a = band_rows.select(
         F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"), "band", "bucket"
@@ -553,32 +554,12 @@ def minhash_lsh_join(
             right, id_col, text_col, num_hashes, n, portable
         ).localCheckpoint()
 
-    def _bucket(b: int) -> Column:
-        cols = [
-            F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)
-        ]
-        if portable:
-            return F.md5(F.concat_ws("|", *[c.cast("string") for c in cols]))
-        return F.xxhash64(*cols)
-
-    def _bandify(sigs: DataFrame, out_id: str, out_sig: str) -> DataFrame:
-        return sigs.select(
-            F.col(id_col).alias(out_id),
-            F.col("sig").alias(out_sig),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"), _bucket(b).alias("bucket")
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(out_id, out_sig, F.col("bb.band"), F.col("bb.bucket"))
-
-    a = _cap_buckets(_bandify(sig_l, "left_id", "sig_a"), max_bucket)
-    b = _cap_buckets(_bandify(sig_r, "right_id", "sig_b"), max_bucket)
+    a = _cap_buckets(_band_rows(
+        sig_l, id_col, bands, rows_per_band, portable, "left_id", "sig_a"
+    ), max_bucket)
+    b = _cap_buckets(_band_rows(
+        sig_r, id_col, bands, rows_per_band, portable, "right_id", "sig_b"
+    ), max_bucket)
 
     est = F.expr(
         "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)), 0, "

@@ -4,6 +4,21 @@ Local-mode testing defaults; on a real cluster the same settings are
 sane starting points (AQE re-plans shuffle partition counts at
 runtime, so ``spark.sql.shuffle.partitions`` is a ceiling, not a
 tuning knob).
+
+PySpark's DataFrame origin capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+every Column call records its Python call site in the JVM: about six
+Py4J round trips per expression node, paid on the driver while a
+query is *built*, before any Spark job runs (a warm build of the q23
+MinHash query sent ~4,300 commands with it, ~1,250 without). Results
+are identical either way. What is lost is the Python call site in the
+"== DataFrame ==" context of ANSI runtime errors: with capture on, a
+divide by zero names the Python file and line of the ``/``; off, it
+names a JVM frame. The package's own errors name the feature, table
+or query regardless. To get the context back, pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
+PySpark reads the flag once per process, at the first Column call
+made under an active session.
 """
 
 from __future__ import annotations
@@ -42,6 +57,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # Origin capture costs ~6 Py4J round trips per Column call at
+        # build time, for an error-context line only; see the module
+        # docstring (re-enable through ``extra_conf``).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -4,9 +4,12 @@ job/stage counts, and (optionally) the formatted plan. Usage:
     python scripts/profile_query.py [sf_dir] query [query ...]
     PROFILE_REPEAT=3 python scripts/profile_query.py sf_dir q82_triangle_counts
 
-Prints one line per run: query, wall seconds, #jobs, #stages, #tasks.
-The construction phase (eager probes, localCheckpoints) is timed
+Prints one line per run: query, wall seconds, #jobs, #stages, #tasks,
+and the Py4J commands the build phase sent to the JVM. The
+construction phase (eager probes, localCheckpoints) is timed
 separately from the noop-sink action so the cost split is visible.
+A build that runs no Spark job is all driver-JVM traffic: run with
+PROFILE_REPEAT=2 and read the second (warm) run's ``py4j`` count.
 """
 
 from __future__ import annotations
@@ -24,8 +27,19 @@ def main() -> int:
     names = sys.argv[2:]
     repeat = int(os.environ.get("PROFILE_REPEAT", "1"))
 
+    import py4j.clientserver
+
     from diseasystore_spark.queries import QUERIES
     from diseasystore_spark.session import get_spark
+
+    sent = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    py4j.clientserver.ClientServerConnection.send_command = counting
 
     spark = get_spark("profile")
     sc = spark.sparkContext
@@ -49,9 +63,11 @@ def main() -> int:
         for i in range(repeat):
             group = f"prof-{name}-{i}"
             sc.setJobGroup(group, name)
+            sent[0] = 0
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t_build = time.perf_counter() - t0
+            n_py4j = sent[0]
             t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t_sink = time.perf_counter() - t1
@@ -71,7 +87,8 @@ def main() -> int:
             print(
                 f"{name} run{i}: total={t_build + t_sink:.3f}s "
                 f"(build={t_build:.3f} sink={t_sink:.3f}) "
-                f"jobs={len(job_ids)} stages={n_stages} tasks={n_tasks}",
+                f"jobs={len(job_ids)} stages={n_stages} tasks={n_tasks} "
+                f"py4j={n_py4j}",
                 flush=True,
             )
             sc.setJobGroup(None, None)

@@ -1,0 +1,62 @@
+"""Driver-side build cost of registry queries, in Py4J round trips.
+
+Building a query sends its Catalyst tree to the JVM over Py4J, one
+command per Column call (plus PySpark's own bookkeeping). That cost is
+paid before any Spark job runs, so plan and value tests never see it.
+These tests pin the command count of a *warm* build (the second call,
+after store and checkpoint set-up) so a change that goes back to
+per-node Column building, or re-enables per-call origin capture,
+fails here.
+"""
+
+from __future__ import annotations
+
+import gc
+
+import py4j.clientserver
+
+from diseasystore_spark.queries import QUERIES
+
+SF = "/root/testdata/sf0.001"
+
+
+def _warm_build_commands(spark, monkeypatch, name: str) -> int:
+    fn = QUERIES[name]
+    fn(spark, SF)  # cold: store writes, checkpoints, class loading
+    gc.collect()
+    sent = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(
+            py4j.clientserver.ClientServerConnection, "send_command", counting
+        )
+        fn(spark, SF)
+    return sent[0]
+
+
+def test_get_spark_turns_origin_capture_off(spark):
+    """Every ``get_spark`` session (the ``spark`` fixture is one) runs
+    with PySpark's per-Column-call origin capture off (about six round
+    trips per expression node with it on)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_warm_q23_build_is_a_few_hundred_commands(spark, monkeypatch):
+    """q23 (MinHash LSH) builds its signature aggregate, band explode
+    and first-band CASE as one SQL expression each: ~330 commands,
+    against ~4,300 with per-node Column building and origin capture."""
+    n = _warm_build_commands(spark, monkeypatch, "q23_minhash_lsh")
+    assert 0 < n <= 600, n
+
+
+def test_warm_q02_build_stays_under_1100_commands(spark, monkeypatch):
+    """q02 (engine read, interlace, delta count) runs no Spark job when
+    built warm; all of its build is driver-JVM traffic: ~600-850
+    commands, against ~1,550 with origin capture on."""
+    n = _warm_build_commands(spark, monkeypatch, "q02_prevalence_by_nation")
+    assert 0 < n <= 1100, n
