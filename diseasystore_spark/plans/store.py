@@ -58,7 +58,12 @@ class Diseasystore:
     """Base feature store. Subclasses declare ``_ds_map`` (feature name
     -> handler attribute name) and ``FeatureHandler`` class attributes,
     exactly like the reference's private fields
-    (``tests/testthat/test-DiseasystoreBase.R:107-145`` pattern)."""
+    (``tests/testthat/test-DiseasystoreBase.R:107-145`` pattern).
+
+    Features are stored by a :class:`ParquetFeatureStore` under
+    ``target_conn`` in its one SCD2 layout, each write sized to its
+    rows; ``partition_granularity`` (``None`` or ``"month"``) is passed
+    through and validated there, and both values mean that layout."""
 
     _ds_map: dict[str, str] = {}
     _observables_regex: str = r"^n_(?=\w)"
@@ -343,74 +348,28 @@ class Diseasystore:
         range_end: datetime.date,
         slice_ts: Any,
     ) -> None:
-        """One missing range: compute, union untouched pre-range rows,
-        SCD2-merge, log (``R/DiseasystoreBase.R:175-240``)."""
-        ts = normalize_slice_ts(slice_ts)
-        handler = self.handler(feature_loader)
-        computed = handler.compute(
+        """One missing range: compute, SCD2-merge, log
+        (``R/DiseasystoreBase.R:175-240``). The merge is scoped to the
+        range (``written_range``): it closes only rows whose validity
+        overlaps it and carries later months forward unread, so rows
+        outside the range stay untouched — the end state the reference
+        reaches by re-including the current out-of-range rows into the
+        compared frame (``:195-212``), without re-reading the table on
+        every write."""
+        computed = self.handler(feature_loader).compute(
             start_date=range_start,
             end_date=range_end,
             slice_ts=slice_ts,
             source_conn=self.source_conn,
             ds=self,
         )
-
-        # On a month-partitioned backend the merge itself is scoped to
-        # partitions at-or-before month(range_end) (``written_range``),
-        # so rows in later months are carried forward structurally and
-        # the re-include only needs months the merge will compare.
-        scoped = self.backend.partition_granularity == "month"
-        if not scoped and self.backend.table_exists(target_table):
-            # FLAT backends run an UNSCOPED compare (everything absent
-            # from ``data`` closes), so every row CURRENT at this
-            # slice_ts that lies outside the computed range must be
-            # re-included or the merge would close it. The reference
-            # does exactly this from its current-snapshot read
-            # (``:195-212``: rows entirely *before* the range,
-            # ``valid_until <= start AND valid_from < end``); we also
-            # keep rows entirely *after* the range so a backward
-            # extension (backfilling an earlier gap) cannot close
-            # still-valid future rows. NOTE the predicate is
-            # is-current-at-ts, NOT ``from_ts == ts``: rows kept open
-            # from an EARLIER slice (a prior range computed at an
-            # older slice_ts whose checksums matched) are current too,
-            # and filtering them out silently closed them at the new
-            # slice (round-10 regression test: the Feb–Apr rows of the
-            # 'full2' flow in test_partitioned_engine_matches_
-            # unpartitioned).
-            # MONTH-PARTITIONED backends need no re-include at all:
-            # the scoped merge's closure is bounded to range-
-            # overlapping rows (``written_range`` contract,
-            # storage/scd2.py), so out-of-range rows are structurally
-            # untouched — same end state as the reference's re-include
-            # without re-reading the table on every write.
-            # Kept set must be the EXACT complement of the scoped
-            # merge's in_scope predicate (storage/scd2.py:
-            # valid_from <= range_end AND (valid_until IS NULL OR
-            # valid_until > range_start)) — hence STRICT
-            # valid_from > range_end here. With >=, a row whose
-            # valid_from == range_end was kept open forever on the
-            # flat backend while the partitioned backend (whose
-            # overlap clip says the row IS in compute's scope)
-            # closed it when absent from the recompute (ADVICE r10).
-            existing = (
-                self.backend.get_table(target_table, ts)
-                .where(
-                    (F.col("valid_until") <= F.lit(range_start))
-                    | (F.col("valid_from") > F.lit(range_end))
-                )
-            )
-            updated = existing.unionByName(computed)
-        else:
-            updated = computed
-
         message = f"ds-range: {range_start} - {range_end}"
         try:
             self.backend.update_snapshot(
-                updated,
+                computed,
                 target_table,
                 slice_ts,
-                written_range=(range_start, range_end) if scoped else None,
+                written_range=(range_start, range_end),
             )
         except Exception:
             self.backend.append_log(

@@ -48,7 +48,6 @@ def _store(spark: SparkSession, sf_dir: str) -> TpchDiseasystore:
             source_conn=sf_dir,
             slice_ts=SLICE_TS,
             verbose=False,
-            partition_granularity="month",
         )
     return _DS_CACHE[key]
 
@@ -277,7 +276,6 @@ def q31_snapshot_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_conn=tempfile.mkdtemp(prefix="ds_rev_"),
         source_conn=sf_dir,
         verbose=False,
-        partition_granularity="month",
     )
     slice_a, slice_b = datetime.date(2024, 1, 15), datetime.date(2024, 2, 15)
     snap_a = ds.get_feature("n_rev_orders", START, END, slice_ts=slice_a)
@@ -4722,7 +4720,6 @@ def q100_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         target_conn=tempfile.mkdtemp(prefix="ds_rev2_"),
         source_conn=sf_dir,
         verbose=False,
-        partition_granularity="month",
     )
     slice_a = datetime.date(2024, 1, 15)
     slice_b = datetime.date(2024, 2, 15)

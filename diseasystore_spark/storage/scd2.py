@@ -16,14 +16,14 @@ Spark design — logical snapshots, not physical versions: the
 time-travel alone cannot do that). Layout:
 
     <root>/<schema>/<table>/_v{N}-{token}/...      -- immutable data segment
-        __vm=YYYY-MM/__vc={c|o}/part-*.parquet        (month-partitioned;
-                                                       __vc clusters closed
-                                                       vs open rows)
-        __vc={c|o}/part-*.parquet                     (packed bin: a small
-                                                       month-scoped rewrite,
-                                                       listed under each of
-                                                       its months)
-        part-*.parquet                                (flat)
+        __vc={c|o}/part-*.parquet                     (packed bin: a write of
+                                                       at most _PACK_MAX_ROWS
+                                                       rows, listed under each
+                                                       of its months; __vc
+                                                       clusters closed vs
+                                                       open rows)
+        __vm=YYYY-MM/__vc={c|o}/part-*.parquet        (per-month: a larger
+                                                       write)
     <root>/<schema>/<table>/_commits/{N}.json      -- marker + MANIFEST
     <root>/<schema>/logs/*.parquet                 -- append-only log sink
 
@@ -72,16 +72,23 @@ statistics live in the marker too. Tables in the retired layouts (a
 version pointer file, a marker that names only a directory, a manifest
 without ``file_stats``) raise ``ValueError`` naming the table.
 
-Scale path: with ``partition_granularity="month"``, each version is
-partitioned by ``month(valid_from)`` and a merge rewrites only months
-containing a changed row — ``update_snapshot`` is always scoped to a
-date range, so the rewrite is O(touched partitions), the same pruning
-a Delta ``MERGE`` on checksum would achieve. A rewrite that small
-(at most ``_PACK_MAX_ROWS`` rows) is written as one packed bin instead
-of one directory per month, and every month of the bin lists the same
-files; the ref sets of any two months are therefore equal or disjoint,
-and a rewrite always covers every month sharing a file with a changed
-one (``_rewrite_set``). The merge plan itself
+Scale path: one layout, sized to the rows each write holds. Every
+version is listed per ``month(valid_from)`` (rows without one, and
+tables without the column, sit in ``NULL_MONTH``), and a merge
+rewrites only months containing a changed row — ``update_snapshot`` is
+scoped to a date range, so the rewrite is O(touched partitions), the
+same pruning a Delta ``MERGE`` on checksum would achieve. A write of at
+most ``_PACK_MAX_ROWS`` rows is one packed bin instead of one
+directory per month (Delta's bin-packing), and every month of the bin
+lists the same files (the marker stores the list once and the months
+name it, ``_encode_manifest``); the ref sets of any two months are
+therefore equal or disjoint, and a rewrite always covers every month
+sharing a file with a changed one (``_rewrite_set``). A cold write
+does not count its rows first: it writes one bin, lists it under
+every month its footers' ``valid_from`` range spans, and only a bin
+above the constant is re-laid out per month. Manifests of the retired
+flat layout (a ``files`` list) are still read, and their next write
+migrates them. The merge plan itself
 is one full outer join of the current rows with the incoming rows on
 ``checksum`` that classifies every row as kept, closed or inserted
 (Delta's single-join MERGE); it shuffles only on the checksum key and
@@ -100,6 +107,7 @@ import os
 import shutil
 import time
 import uuid
+from collections import Counter
 
 import pandas as pd
 import pyarrow as pa
@@ -122,14 +130,30 @@ LOGS_TABLE = "logs"
 NULL_MONTH = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _month_key(valid_from: Column) -> Column:
-    """The manifest month of ``valid_from``. NULL lands in the
-    NULL_MONTH segment (the directory partitionBy writes it to), so the
-    key says so too: a raw ``date_format`` would be Python None —
-    unsortable against the string months, and never matching the
-    manifest key. NULL_MONTH sorts after every "yyyy-MM", so a scoped
-    merge that changes such rows takes the unscoped fallback."""
-    return F.coalesce(F.date_format(valid_from, "yyyy-MM"), F.lit(NULL_MONTH))
+def _month_key(columns: list[str], prefix: str = "") -> Column:
+    """The manifest month of a frame's ``valid_from`` (named
+    ``prefix + "valid_from"``). NULL lands in the NULL_MONTH segment
+    (the directory partitionBy writes it to), so the key says so too: a
+    raw ``date_format`` would be Python None — unsortable against the
+    string months, and never matching the manifest key. NULL_MONTH
+    sorts after every "yyyy-MM", so a scoped merge that changes such
+    rows takes the unscoped fallback. A table without ``valid_from``
+    keeps every row in NULL_MONTH."""
+    if "valid_from" not in columns:
+        return F.lit(NULL_MONTH)
+    return F.coalesce(
+        F.date_format(F.col(prefix + "valid_from"), "yyyy-MM"),
+        F.lit(NULL_MONTH),
+    )
+
+
+def _month_range(lo: str, hi: str) -> list[str]:
+    """Every "yyyy-MM" month from ``lo`` to ``hi``, both included."""
+    out, y, m = [], int(lo[:4]), int(lo[5:7])
+    while f"{y:04d}-{m:02d}" <= hi:
+        out.append(f"{y:04d}-{m:02d}")
+        y, m = (y + 1, 1) if m == 12 else (y, m + 1)
+    return out
 
 
 def _valid_at(ts) -> Column:
@@ -195,6 +219,58 @@ def _file_record(md) -> dict:
         "max_valid_until": max_valid,
         "valid_open": bool(valid_nulls),
     }
+
+
+def _encode_manifest(manifest: dict) -> bytes:
+    """A commit marker's bytes. A file list that several months share —
+    a packed bin — is written once, under ``bins``, and each of its
+    months names it by index: a bin spanning decades of ``valid_from``
+    would otherwise repeat its list under every month."""
+    months = manifest.get("months", {})
+    shared = Counter(tuple(fs) for fs in months.values())
+    bins = [fs for fs, n in shared.items() if n > 1]
+    if not bins:
+        return json.dumps(manifest).encode()
+    index = {fs: i for i, fs in enumerate(bins)}
+    months = {m: index.get(tuple(fs), fs) for m, fs in months.items()}
+    return json.dumps({**manifest, "months": months, "bins": bins}).encode()
+
+
+def _decode_manifest(raw: bytes) -> dict:
+    """A commit marker's manifest, with every month resolved to its
+    file list (``_encode_manifest``'s inverse)."""
+    manifest = json.loads(raw)
+    bins = manifest.pop("bins", None)
+    if bins:
+        manifest["months"] = {
+            m: bins[v] if isinstance(v, int) else v
+            for m, v in manifest["months"].items()
+        }
+    return manifest
+
+
+def _bin_months(footers) -> list[str] | None:
+    """The months a packed bin is listed under, read off its files'
+    footers: every month from its least to its greatest ``valid_from``,
+    plus NULL_MONTH when a row has none (every row, on a table without
+    the column, and the one empty file of an empty table). None when a
+    footer cannot bound ``valid_from`` — a TIMESTAMP ``valid_from``
+    included: its footer values are UTC, while ``_month_key`` takes the
+    month in the session time zone, so only Spark may place its rows."""
+    lo, hi, null = [], [], False
+    for md in footers:
+        if "valid_from" not in md.schema.names:
+            return [NULL_MONTH]
+        nulls, first = _footer_column(md, "valid_from", datetime.date, min)
+        _, last = _footer_column(md, "valid_from", datetime.date, max)
+        if nulls is None or (first is None and nulls < md.num_rows):
+            return None
+        null = null or nulls > 0
+        if first is not None:
+            lo.append(first[:7])
+            hi.append(last[:7])
+    months = _month_range(min(lo), max(hi)) if lo else []
+    return months + [NULL_MONTH] if null or not months else months
 
 
 def _retired_layout(table_id: str, version, layout: str) -> ValueError:
@@ -272,12 +348,16 @@ TXN_CLUSTER_COL = "__vc"
 
 
 class ParquetFeatureStore:
-    """SCD2 storage. ``partition_granularity="month"`` enables the
-    scale layout: each version is hive-partitioned by
-    ``month(valid_from)``; merges rewrite only partitions whose rows
+    """SCD2 storage in one layout: each version is listed per
+    ``month(valid_from)``; a write of at most ``_PACK_MAX_ROWS`` rows is
+    one packed bin listed under each of its months, a larger one has a
+    directory per month. Merges rewrite only the months whose rows
     changed and carry the untouched months forward by MANIFEST
     REFERENCE (no links, no copies) — the Iceberg pattern, and the
-    equivalent of a Delta MERGE touching only affected files."""
+    equivalent of a Delta MERGE touching only affected files.
+
+    ``partition_granularity`` is still accepted, ``None`` or
+    ``"month"``; both mean this one layout."""
 
     def __init__(
         self,
@@ -293,7 +373,6 @@ class ParquetFeatureStore:
             raise ValueError("max_records_per_file must be >= 1")
         self.spark = spark
         self.root = root
-        self.partition_granularity = partition_granularity
         #: the file-size knob at real scale (Spark's own
         #: maxRecordsPerFile): a giant month splits into bounded
         #: files at write time instead of one task emitting one
@@ -344,16 +423,20 @@ class ParquetFeatureStore:
 
     def _manifest_of(self, table_id: str, version: int) -> dict | None:
         """The version's commit marker, which is its manifest:
-        ``months`` (or ``files`` on the flat layout), ``dir``,
-        ``version``, ``file_stats`` and, when computed,
-        ``table_stats``. None when the marker is absent (never
-        committed, or GC'd because the table advanced 2+ versions)."""
+        ``months``, ``dir``, ``version``, ``file_stats`` and, when
+        computed, ``table_stats``. Every month maps to its file list;
+        on disk a packed bin's list is stored once (``bins``) and its
+        months name it (``_encode_manifest``). A table written in the
+        retired flat layout lists ``files`` instead of ``months``; it is
+        read as is and its next write migrates it. None when the marker
+        is absent (never committed, or GC'd because the table advanced
+        2+ versions)."""
         raw = self.commit_backend.get(
             os.path.join(self._commits_dir(table_id), f"{version}.json")
         )
         if raw is None:
             return None
-        manifest = json.loads(raw)
+        manifest = _decode_manifest(raw)
         if "file_stats" not in manifest:
             raise _retired_layout(
                 table_id, version, "a commit marker without file_stats"
@@ -382,17 +465,21 @@ class ParquetFeatureStore:
         month-layout manifest, derived from its file records: the
         month's max ``valid_until`` (None when a file cannot prove its
         bound) and whether any of its rows is valid-open. The NULL
-        month is left out: it is never pruned."""
-        out = {}
+        month is left out: it is never pruned. A packed bin's months
+        share one file list, and its stats are derived once."""
+        out, by_refs = {}, {}
         for m, refs in manifest.get("months", {}).items():
             if m == NULL_MONTH:
                 continue
-            recs = [manifest["file_stats"][r] for r in refs]
-            maxes = [r["max_valid_until"] for r in recs]
-            out[m] = {
-                "max_until": None if None in maxes else max(maxes),
-                "open": any(r["valid_open"] for r in recs),
-            }
+            key = tuple(refs)
+            if key not in by_refs:
+                recs = [manifest["file_stats"][r] for r in refs]
+                maxes = [r["max_valid_until"] for r in recs]
+                by_refs[key] = {
+                    "max_until": None if None in maxes else max(maxes),
+                    "open": any(r["valid_open"] for r in recs),
+                }
+            out[m] = by_refs[key]
         return out
 
     def _version_files(
@@ -507,6 +594,11 @@ class ParquetFeatureStore:
             manifest["file_stats"][r]["rows"] for r in refs
         )
 
+    @staticmethod
+    def _manifest_rows(manifest: dict) -> int:
+        """The rows a version holds, summed from its file records."""
+        return sum(rec["rows"] for rec in manifest["file_stats"].values())
+
     def _commit_version(
         self, table_id: str, version: int, manifest: dict
     ) -> None:
@@ -526,7 +618,7 @@ class ParquetFeatureStore:
         """
         cdir = self._commits_dir(table_id)
         marker = os.path.join(cdir, f"{version}.json")
-        if not self._put_if_absent(marker, json.dumps(manifest).encode()):
+        if not self._put_if_absent(marker, _encode_manifest(manifest)):
             raise CommitConflictError(table_id, version)
         tdir = self._table_dir(table_id)
 
@@ -543,7 +635,7 @@ class ParquetFeatureStore:
             if raw is None:
                 continue
             try:
-                markers[v] = json.loads(raw)
+                markers[v] = _decode_manifest(raw)
             except ValueError:
                 continue
 
@@ -811,7 +903,8 @@ class ParquetFeatureStore:
         keep = existing.where(
             F.col("until_ts").isNull() | (F.col("until_ts") > F.lit(cutoff))
         )
-        dropped = existing.count() - keep.count()
+        kept = keep.count()
+        dropped = self._manifest_rows(self._committed(table_id, base)) - kept
         # Persist the retain floor BEFORE physically dropping history:
         # a crash between the two steps then fails loud (floor set,
         # data intact — reads below the cutoff refused) instead of
@@ -825,7 +918,11 @@ class ParquetFeatureStore:
             )
         if dropped:
             self._write_version(
-                keep, table_id, changed_months=None, base_version=base
+                keep,
+                table_id,
+                changed_months=None,
+                base_version=base,
+                rows=kept,
             )
         return dropped
 
@@ -890,50 +987,36 @@ class ParquetFeatureStore:
             )
         )
 
-    def compact(
-        self,
-        table_id: str,
-        files_per_partition: int = 1,
-        full: bool = False,
-    ) -> int:
+    def compact(self, table_id: str, full: bool = False) -> int:
         """Retrying wrapper over ``_compact_attempt`` (see its
         docstring)."""
         return self._with_commit_retry(
-            lambda: self._compact_attempt(
-                table_id, files_per_partition, full=full
-            )
+            lambda: self._compact_attempt(table_id, full=full)
         )
 
-    def _compact_attempt(
-        self,
-        table_id: str,
-        files_per_partition: int = 1,
-        full: bool = False,
-    ) -> int:
+    def _compact_attempt(self, table_id: str, full: bool = False) -> int:
         """Rewrite fragmented storage into a bounded file count — the
         small-file maintenance op (Delta OPTIMIZE analog). Incremental
         merges accumulate one-or-more files per write; after many
         writes a snapshot read opens hundreds of tiny parquet files,
         and at cluster scale the task-per-file floor dominates.
 
-        Month-partitioned manifest tables compact PARTIALLY by
-        default: the manifest already knows each month's file count,
-        so only months holding more than one file (and the months
-        sharing a packed bin with them) are read and rewritten — every
-        already-compact month is carried forward by reference, making
-        the op O(fragmented months), the same
-        pruning discipline as the merge itself (``full=True`` forces
-        the old whole-table rewrite). A table with nothing fragmented
-        is a NO-OP: no version bump, no write. Under
-        ``max_records_per_file`` the convergence target per month is
-        the knob-achievable ``ceil(rows / N)`` (row counts from the
-        file records), not 1 — and a month is also fragmented
-        whenever any single file exceeds the knob (files written
-        before the knob was set or lowered), so the size cap is
-        enforced retroactively. The flat layout always rewrites, to
-        ``files_per_partition`` files total — or more when the
-        file-size knob splits them (the knob wins; it exists to cap
-        file size).
+        Compaction is PARTIAL by default: the manifest already knows
+        each month's file count, so only months holding more than one
+        file per transaction cluster (and the months sharing a packed
+        bin with them) are read and rewritten — every already-compact
+        month is carried forward by reference, making the op
+        O(fragmented months), the same pruning discipline as the merge
+        itself (``full=True`` forces a whole-table rewrite, as does a
+        base in the retired flat layout). The rewrite is sized to its
+        rows like every write: a fragmented bin is re-packed, not
+        unpacked. A table with nothing fragmented is a NO-OP: no
+        version bump, no write. Under ``max_records_per_file`` the
+        convergence target per group is the knob-achievable
+        ``ceil(rows / N)`` (row counts from the file records), not 1 —
+        and a group is also fragmented whenever any single file
+        exceeds the knob (files written before the knob was set or
+        lowered), so the size cap is enforced retroactively.
 
         Logical content is untouched (every snapshot at every
         ``slice_ts`` is bit-identical before and after — the rewrite
@@ -943,27 +1026,21 @@ class ParquetFeatureStore:
         Returns the number of data files in the current version after
         the op.
         """
-        if files_per_partition <= 0:
-            raise ValueError("files_per_partition must be positive")
         base = self._current_version(table_id)
-        manifest = self._manifest_of(table_id, base) if base else None
-        if (
-            self.partition_granularity == "month"
-            and not full
-            and manifest is not None
-            and "months" in manifest
-        ):
-            months = manifest["months"]
-            tdir = self._table_dir(table_id)
+        manifest = self._committed(table_id, base)
+        if full or "months" not in manifest:
+            rewrite, rows = None, self._manifest_rows(manifest)
+            frame = self.read_raw(table_id, version=base)
+        else:
 
             def is_fragmented(fs: list[str]) -> bool:
                 # Fragmentation is judged PER transaction-cluster
                 # group: a rewrite deterministically emits one file
-                # per (month, __vc) present, so a month holding one
-                # closed-rows file and one open-rows file is the
+                # per (month or bin, __vc) present, so a month holding
+                # one closed-rows file and one open-rows file is the
                 # converged state, not fragmentation. A month's files
                 # all come from the one segment that last rewrote it,
-                # so a file's directory names its (month, __vc) group.
+                # so a file's directory names its group.
                 groups: dict[str, list[str]] = {}
                 for f in fs:
                     groups.setdefault(os.path.dirname(f), []).append(f)
@@ -999,35 +1076,26 @@ class ParquetFeatureStore:
                     for g in groups.values()
                 )
 
+            months = manifest["months"]
             frag = [m for m, fs in months.items() if is_fragmented(fs)]
             if not frag:
                 return len(self._manifest_refs(manifest))
-            # No row count: compact converges to one file per (month,
-            # cluster) group, so it writes the per-month layout, and a
-            # packed bin it must rewrite is unpacked.
-            frag, _ = self._rewrite_set(manifest, frag)
-            files = dict.fromkeys(f for m in frag for f in months[m])
-            self._write_version(
-                self._read_files([os.path.join(tdir, f) for f in files]),
-                table_id,
-                changed_months=frag,
-                base_version=base,
+            rewrite, rows = self._rewrite_set(manifest, frag)
+            tdir = self._table_dir(table_id)
+            frame = self._read_files(
+                [
+                    os.path.join(tdir, f)
+                    for f in dict.fromkeys(f for m in rewrite for f in months[m])
+                ]
             )
-        elif self.partition_granularity == "month":
-            current = self.read_raw(table_id, version=base)
-            # every month changed -> fresh manifest, full rewrite
-            self._write_version(
-                current, table_id, changed_months=None, base_version=base
-            )
-        else:
-            current = self.read_raw(table_id, version=base)
-            self._write_version(
-                current.coalesce(files_per_partition),
-                table_id,
-                changed_months=None,
-                base_version=base,
-            )
-        return len(self._version_files(table_id, (base or 0) + 1))
+        self._write_version(
+            frame,
+            table_id,
+            changed_months=rewrite,
+            base_version=base,
+            rows=rows,
+        )
+        return len(self._version_files(table_id, base + 1))
 
     def payload_columns(
         self, table_id: str, version: int | None = None
@@ -1077,7 +1145,11 @@ class ParquetFeatureStore:
         payload = [c for c in widened.columns if c not in SCD2_COLUMNS]
         evolved = widened.withColumn("checksum", row_checksum(payload))
         self._write_version(
-            evolved, table_id, changed_months=None, base_version=base
+            evolved,
+            table_id,
+            changed_months=None,
+            base_version=base,
+            rows=self._manifest_rows(self._committed(table_id, base)),
         )
 
     def update_snapshot(
@@ -1140,8 +1212,8 @@ class ParquetFeatureStore:
         giving per-``slice_ts`` snapshot isolation
         (``R/DiseasystoreBase.R:533-537`` keying).
 
-        ``written_range=(start_date, end_date)`` (partitioned tables
-        only) declares that ``data`` is a range-scoped update: it is
+        ``written_range=(start_date, end_date)`` declares that
+        ``data`` is a range-scoped update: it is
         the complete intended snapshot of every row whose validity
         OVERLAPS ``[start_date, end_date]`` (the engine's compute
         contract), and says nothing about rows outside the range.
@@ -1220,9 +1292,6 @@ class ParquetFeatureStore:
             "checksum", row_checksum(data.columns)
         ).dropDuplicates(["checksum"])
 
-        if written_range is not None and self.partition_granularity != "month":
-            written_range = None  # scoping is a partitioned-layout feature
-
         if base is None:
             new_table = incoming.withColumns(
                 {
@@ -1249,13 +1318,11 @@ class ParquetFeatureStore:
     ) -> None:
         """Insert rows not already current at ``ts``; never close
         anything. Replay-idempotent: a re-merged batch matches on
-        checksum and inserts nothing (the version bump is skipped)."""
-        manifest = (
-            self._committed(table_id, base)
-            if self.partition_granularity == "month"
-            else {}
-        )
-        partitioned = "months" in manifest
+        checksum and inserts nothing (the version bump is skipped).
+        Only the months receiving a row are rewritten, closed over the
+        packed bins they share; a base in the retired flat layout is
+        rewritten whole, which migrates it."""
+        manifest = self._committed(table_id, base)
         existing = self.read_raw(table_id, version=base)
         is_current = _valid_at(ts)
         inserted = incoming.join(
@@ -1269,18 +1336,7 @@ class ParquetFeatureStore:
             }
         ).select(*existing.columns)
 
-        if not partitioned:
-            if inserted.isEmpty():
-                return
-            self._write_version(
-                existing.unionByName(inserted),
-                table_id,
-                changed_months=None,
-                base_version=base,
-            )
-            return
-
-        month_of = _month_key(F.col("valid_from"))
+        month_of = _month_key(existing.columns)
         inserted = inserted.cache()
         try:
             per_month = {
@@ -1291,12 +1347,13 @@ class ParquetFeatureStore:
             }
             if not per_month:
                 return
-            rewrite, n = self._rewrite_set(manifest, per_month)
-            new_parts = existing.where(month_of.isin(rewrite)).unionByName(
-                inserted
-            )
+            if "months" in manifest:
+                rewrite, n = self._rewrite_set(manifest, per_month)
+                existing = existing.where(month_of.isin(rewrite))
+            else:
+                rewrite, n = None, self._manifest_rows(manifest)
             self._write_version(
-                new_parts,
+                existing.unionByName(inserted),
                 table_id,
                 changed_months=rewrite,
                 base_version=base,
@@ -1330,11 +1387,11 @@ class ParquetFeatureStore:
         later month's row is a clip-contract violation, which the
         unscoped fallback below catches.
 
-        On the month layout only the changed months — closed over the
-        packed bins they share (``_rewrite_set``) — are rewritten. A
-        flat-layout base under a month store takes the same merge,
-        scope included, but rewrites every row: the migration write,
-        month-partitioned from then on."""
+        Only the changed months — closed over the packed bins they
+        share (``_rewrite_set``) — are rewritten. A base in the
+        retired flat layout takes the same merge, scope included, but
+        rewrites every row: the migration write.
+        """
         existing = self.read_raw(
             table_id,
             max_valid_from=written_range[1] if written_range else None,
@@ -1351,37 +1408,6 @@ class ParquetFeatureStore:
         incoming_rows = incoming.select(
             "checksum", F.struct(*payload).alias("__in")
         )
-
-        if self.partition_granularity != "month":
-            # Flat: the whole table is rewritten anyway, so the join
-            # carries full rows and the non-current rows ∪ the merged
-            # rows are one write.
-            joined = (
-                existing.where(is_current)
-                .withColumn("__ex", F.lit(True))
-                .join(incoming_rows, "checksum", "full_outer")
-            )
-            inserted = F.col("__ex").isNull()
-            exprs = {
-                c: F.when(inserted, F.col("__in")[c]).otherwise(F.col(c))
-                for c in payload
-            }
-            exprs["from_ts"] = F.when(inserted, ts_lit).otherwise(
-                F.col("from_ts")
-            )
-            exprs["until_ts"] = F.when(
-                F.col("__in").isNull(), ts_lit
-            ).otherwise(F.col("until_ts"))
-            merged = joined.select(
-                *[exprs.get(c, F.col(c)).alias(c) for c in existing.columns]
-            )
-            self._write_version(
-                existing.where(~is_current).unionByName(merged),
-                table_id,
-                changed_months=None,
-                base_version=base,
-            )
-            return
 
         manifest = self._committed(table_id, base)
         migrating = "months" not in manifest
@@ -1430,7 +1456,7 @@ class ParquetFeatureStore:
         changes = (
             current.select(
                 "checksum",
-                _month_key(F.col("valid_from")).alias("__m"),
+                _month_key(existing.columns).alias("__m"),
                 in_scope.alias("__s"),
             )
             .join(incoming_rows, "checksum", "full_outer")
@@ -1440,7 +1466,7 @@ class ParquetFeatureStore:
             .select(
                 "checksum",
                 F.coalesce(
-                    "__m", _month_key(F.col("__in.valid_from"))
+                    "__m", _month_key(payload, "__in.")
                 ).alias("__m"),
                 "__in",
             )
@@ -1466,13 +1492,14 @@ class ParquetFeatureStore:
                 # any input, just without the pruning.
                 return self._merge_existing(incoming, table_id, ts, None, base)
 
-            rewrite, rows = None, None
-            if not migrating:
+            if migrating:
+                rewrite, rows = None, self._manifest_rows(manifest)
+            else:
                 rewrite, rows = self._rewrite_set(manifest, changed_months)
                 existing = existing.where(
-                    _month_key(F.col("valid_from")).isin(rewrite)
+                    _month_key(existing.columns).isin(rewrite)
                 )
-                rows += sum(inserted_per_month.values())
+            rows += sum(inserted_per_month.values())
             closed_keys = changes.where(F.col("__in").isNull()).select(
                 "checksum", F.lit(True).alias("__c")
             )
@@ -1504,9 +1531,9 @@ class ParquetFeatureStore:
             if written_range is not None:
                 incoming.unpersist()
 
-    #: at or below this row count a month-scoped rewrite is written as
-    #: one packed bin (one file per ``__vc`` cluster) instead of one
-    #: directory per month: a small write is bound by file and
+    #: at or below this row count a write is one packed bin (one file
+    #: per ``__vc`` cluster, listed under each of its months) instead
+    #: of one directory per month: a small write is bound by file and
     #: directory creation, and its readers by files opened. Above it,
     #: months keep their own files, so month pruning stays exact where
     #: it saves real scan work. A one-month revision of a packed table
@@ -1530,28 +1557,35 @@ class ParquetFeatureStore:
         """Write a new immutable segment directory and commit the
         version by putting its MANIFEST marker.
 
-        Partitioned mode with ``changed_months``: ``new_table`` holds
-        only the changed months' rows; the manifest carries the
-        previous version's file references forward for every other
-        month — zero data I/O for unchanged months (no links, no
-        copies; the Iceberg pattern). Commit cost is therefore
-        O(changed months), independent of the table's total span.
-        ``changed_months`` must be closed over shared files
-        (``_rewrite_set``): a carried month that shares a file with a
-        rewritten one raises before anything is written, since the new
-        manifest would read that file's rows twice or drop them.
+        With ``changed_months``, ``new_table`` holds only the changed
+        months' rows; the manifest carries the previous version's file
+        references forward for every other month — zero data I/O for
+        unchanged months (no links, no copies; the Iceberg pattern).
+        Commit cost is therefore O(changed months), independent of the
+        table's total span. ``changed_months`` must be closed over
+        shared files (``_rewrite_set``): a carried month that shares a
+        file with a rewritten one raises before anything is written,
+        since the new manifest would read that file's rows twice or
+        drop them. Without ``changed_months`` the version is
+        ``new_table`` alone.
 
-        ``rows`` is the row count of ``new_table`` when the caller
-        knows it without a job. A month-scoped rewrite of at most
-        ``_PACK_MAX_ROWS`` rows is written as one packed bin — one file
-        per ``__vc`` cluster, listed under every one of
-        ``changed_months`` — instead of one directory per month: at
-        that size the write is bound by file creation, not bytes.
+        The write is sized to its rows (``_PACK_MAX_ROWS``). ``rows``
+        is the row count of ``new_table`` when the caller knows it
+        without a job: a larger write goes per month, a smaller one is
+        one packed bin shuffled into one task, listed under every one
+        of ``changed_months`` or, on an unscoped write, under every
+        month its footers' ``valid_from`` range spans. A cold write
+        (``rows`` None) is not counted first: it writes one bin in the
+        frame's own partitioning, takes its rows and months from the
+        footers read below, and only a bin above the constant (or one
+        whose footers cannot bound ``valid_from``) is re-laid out per
+        month from the files just written, whose segment is then
+        removed.
 
         Every file the write creates gets its stats record from one
         read of its footer; carried-forward files inherit theirs from
         the base manifest. A footer that cannot be read fails the
-        attempt before the commit, and the attempt's segment is
+        attempt before the commit, and the attempt's segments are
         removed.
 
         The segment name carries a per-attempt token so two writers
@@ -1577,10 +1611,8 @@ class ParquetFeatureStore:
         files (that would require a commit of N+2 or later to have
         already happened, which would have made our put lose)."""
         version = (base_version or 0) + 1
-        dirname = f"_v{version}-{uuid.uuid4().hex[:8]}"
         tdir = self._table_dir(table_id)
-        out_dir = os.path.join(tdir, dirname)
-        base = None
+        base, carried = None, {}
         if changed_months is not None and base_version is not None:
             base = self._manifest_of(table_id, base_version)
             if base is None:
@@ -1602,28 +1634,55 @@ class ParquetFeatureStore:
                     f"table {table_id}: rewriting months {changed_months}"
                     " would leave carried months referencing rewritten files"
                 )
-        pack = (
-            changed_months is not None
-            and rows is not None
-            and rows <= self._PACK_MAX_ROWS
-        )
+
+        segments: list[str] = []  # every segment dir this attempt made
+
+        def segment(frame: DataFrame, per_month: bool, cold: bool):
+            segments.append(f"_v{version}-{uuid.uuid4().hex[:8]}")
+            return self._write_segment(
+                frame, tdir, segments[-1], per_month, cold
+            )
 
         try:
-            body = self._write_segment(
-                new_table, tdir, dirname, changed_months if pack else None
-            )
-            if base is not None:
-                body["months"] = carried | body["months"]
+            per_month = rows is not None and rows > self._PACK_MAX_ROWS
+            written = segment(new_table, per_month, rows is None)
+            footers = {}
+            if not per_month:
+                footers = {
+                    r: pq.read_metadata(os.path.join(tdir, r)) for r in written
+                }
+                months = changed_months
+                if months is None:
+                    months = _bin_months(footers.values())
+                    n = sum(md.num_rows for md in footers.values())
+                    if months is None or n > self._PACK_MAX_ROWS:
+                        first = os.path.join(tdir, segments[-1])
+                        footers, months = {}, None
+                        written = segment(
+                            self._read_files(
+                                [os.path.join(tdir, r) for r in written]
+                            ),
+                            True,
+                            False,
+                        )
+                        shutil.rmtree(first)
+                if months is not None:
+                    written = {m: written for m in months}
             inherited = base["file_stats"] if base is not None else {}
+            body = {"months": carried | written}
             file_stats = {
                 r: inherited[r]
                 if r in inherited
-                else _file_record(pq.read_metadata(os.path.join(tdir, r)))
+                else _file_record(
+                    footers[r]
+                    if r in footers
+                    else pq.read_metadata(os.path.join(tdir, r))
+                )
                 for r in self._manifest_refs(body)
             }
             manifest = {
                 "version": version,
-                "dir": dirname,
+                "dir": segments[-1],
                 **body,
                 "file_stats": file_stats,
             }
@@ -1635,12 +1694,13 @@ class ParquetFeatureStore:
             if table_stats is not None:
                 manifest["table_stats"] = table_stats
         except BaseException:
-            shutil.rmtree(out_dir, ignore_errors=True)
+            for d in segments:
+                shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
             raise
         try:
             self._commit_version(table_id, version, manifest)
         except CommitConflictError:
-            shutil.rmtree(out_dir, ignore_errors=True)
+            shutil.rmtree(os.path.join(tdir, segments[-1]), ignore_errors=True)
             raise
 
     def _write_segment(
@@ -1648,91 +1708,82 @@ class ParquetFeatureStore:
         new_table: DataFrame,
         tdir: str,
         dirname: str,
-        pack_months: list[str] | None = None,
-    ) -> dict:
+        per_month: bool,
+        cold: bool,
+    ) -> dict[str, list[str]] | list[str]:
         """Write ``new_table`` into the new segment directory
-        ``dirname`` and list the files it created:
-        ``{"months": {month: [relpath, ...]}}`` on the month layout,
-        ``{"files": [relpath, ...]}`` on the flat one. With
-        ``pack_months`` the rows are written as one packed bin and
-        every one of those months lists all of its files."""
+        ``dirname`` and list the files it created: per month
+        (``{month: [relpath, ...]}``) when ``per_month``, else as one
+        packed bin (``[relpath, ...]``). ``cold`` marks the cold
+        write's first pass, a bin of open rows only."""
         out_dir = os.path.join(tdir, dirname)
-        if self.partition_granularity == "month":
+        frame, part_cols = new_table, []
+        if per_month:
+            frame = frame.withColumn(PARTITION_COL, _month_key(frame.columns))
+            part_cols.append(PARTITION_COL)
+        # Second partition level — the TRANSACTION axis: rows already
+        # closed (until_ts set) cluster into their own files
+        # (``__vc=c``) apart from the live rows (``__vc=o``), so a
+        # month's ever-growing bitemporal history never shares a file
+        # with its current snapshot. Each all-closed file's record
+        # carries its max(until_ts), and ``get_table(slice_ts)`` drops
+        # files whose every row closed at-or-before the slice BEFORE
+        # Spark ever lists them — a current-slice read scans O(live
+        # rows), not O(history). Still one shuffle: each task writes
+        # into both subdirs.
+        if cold:
+            # Every row of a cold write is open: the first pass goes
+            # straight into the open cluster in the frame's own
+            # partitioning, with no shuffle and no sort.
+            out_dir = os.path.join(out_dir, f"{TXN_CLUSTER_COL}=o")
+        else:
+            frame = frame.withColumn(
+                TXN_CLUSTER_COL,
+                F.when(F.col("until_ts").isNotNull(), F.lit("c")).otherwise(
+                    F.lit("o")
+                ),
+            )
+            part_cols.append(TXN_CLUSTER_COL)
             # One shuffle on the partition key -> one file per month
             # instead of (upstream partitions x months) tiny files; a
-            # packed bin shuffles into one task -> one file per
+            # known small bin shuffles into one task -> one file per
             # cluster. A giant month is split by
             # ``max_records_per_file``.
-            partitioned, part_cols = new_table, []
-            if pack_months is None:
-                partitioned = partitioned.withColumn(
-                    PARTITION_COL,
-                    F.date_format(F.col("valid_from"), "yyyy-MM"),
-                )
-                part_cols.append(PARTITION_COL)
-            # Second partition level — the TRANSACTION axis: rows
-            # already closed (until_ts set) cluster into their own
-            # files (``__vc=c``) apart from the live rows (``__vc=o``),
-            # so a month's ever-growing bitemporal history never
-            # shares a file with its current snapshot. Each all-closed
-            # file's record carries its max(until_ts), and
-            # ``get_table(slice_ts)`` drops files whose every row
-            # closed at-or-before the slice BEFORE Spark ever lists
-            # them — a current-slice read scans O(live rows), not
-            # O(history). Still one shuffle: each task writes into
-            # both subdirs.
-            if "until_ts" in partitioned.columns:
-                partitioned = partitioned.withColumn(
-                    TXN_CLUSTER_COL,
-                    F.when(F.col("until_ts").isNotNull(), F.lit("c"))
-                    .otherwise(F.lit("o")),
-                )
-                part_cols.append(TXN_CLUSTER_COL)
-            # Sorting by valid_until (open rows last) tightens parquet
-            # row-group min/max stats so the scoped merge's
-            # close-candidate predicate (valid_until > range_start OR
-            # NULL) skips row groups of long-closed rows; until_ts
-            # tightens them inside closed files.
-            sort_cols = [F.col(c) for c in part_cols[:1]] + [
-                F.col(c).asc_nulls_last()
-                for c in ("valid_until", "until_ts")
-                if c in partitioned.columns
-            ]
-            partitioned = (
-                partitioned.repartition(1)
-                if pack_months is not None
-                else partitioned.repartition(PARTITION_COL)
-            ).sortWithinPartitions(*sort_cols)
-            writer = partitioned.write.partitionBy(*part_cols).mode(
-                "overwrite"
+            frame = (
+                frame.repartition(PARTITION_COL)
+                if per_month
+                else frame.repartition(1)
             )
-            if self.max_records_per_file is not None:
-                writer = writer.option(
-                    "maxRecordsPerFile", str(self.max_records_per_file)
-                )
-            writer.parquet(out_dir)
-            self._scrub_job_droppings(out_dir)
-            if pack_months is None:
-                return {"months": self._segment_months(tdir, dirname)}
-            files = self._segment_files(tdir, out_dir)
-            return {"months": {m: files for m in pack_months}}
-        writer = new_table.write.mode("overwrite")
+        # Sorting by valid_until (open rows last) tightens parquet
+        # row-group min/max stats so the scoped merge's close-candidate
+        # predicate (valid_until > range_start OR NULL) skips row
+        # groups of long-closed rows; until_ts tightens them inside
+        # closed files. A bin is not sorted: at most _PACK_MAX_ROWS
+        # rows are one row group per file, which a sort cannot split.
+        if per_month:
+            frame = frame.sortWithinPartitions(
+                PARTITION_COL,
+                *[
+                    F.col(c).asc_nulls_last()
+                    for c in ("valid_until", "until_ts")
+                    if c in frame.columns
+                ],
+            )
+        writer = frame.write.partitionBy(*part_cols).mode("overwrite")
         if self.max_records_per_file is not None:
-            # Same file-size knob as the partitioned branch — a
-            # flat table is exactly the case where one coalesced
-            # multi-GB file would otherwise slip through.
             writer = writer.option(
                 "maxRecordsPerFile", str(self.max_records_per_file)
             )
         writer.parquet(out_dir)
+        if per_month:
+            self._scrub_job_droppings(out_dir)
+            return self._segment_months(tdir, dirname)
+        if not self._segment_files(tdir, out_dir):
+            # An empty frame: partitionBy wrote no file, so write the
+            # one empty file that carries the table's schema.
+            new_table.write.mode("overwrite").parquet(out_dir)
         self._scrub_job_droppings(out_dir)
-        return {
-            "files": sorted(
-                f"{dirname}/{f}"
-                for f in os.listdir(out_dir)
-                if f.endswith(".parquet")
-            )
-        }
+        return self._segment_files(tdir, out_dir)
 
     @staticmethod
     def _scrub_job_droppings(out_dir: str) -> None:

@@ -43,13 +43,16 @@ def test_filter_and_projection_reach_parquet_scan(spark):
     assert "o_custkey" in read_schema and "o_totalprice" not in read_schema
 
 
-def test_scd2_partitioned_snapshot_read_prunes_months(spark, tmp_path):
+def test_scd2_partitioned_snapshot_read_prunes_months(
+    spark, tmp_path, monkeypatch
+):
     """get_table(max_valid_from=...) on the month-partitioned layout
     prunes at the MANIFEST: the file list handed to the scan never
     contains the pruned months — strictly earlier than Catalyst
     partition pruning (no listing, no footer read, no filter)."""
     from diseasystore_spark.storage.scd2 import ParquetFeatureStore
 
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     be = ParquetFeatureStore(
         spark, str(tmp_path / "s"), partition_granularity="month"
     )

@@ -352,15 +352,19 @@ def test_prune_history_crash_fails_loud(spark, store_root, monkeypatch):
 
 
 def test_compact_preserves_every_snapshot(spark, store_root):
-    """compact() is a pure physical re-layout: file count drops to
-    the requested bound and every slice_ts snapshot is identical
-    before and after; written as a new immutable version (old one
-    untouched)."""
+    """compact() is a pure physical re-layout: a fragmented packed bin
+    is re-packed into one file per transaction cluster (not unpacked),
+    every slice_ts snapshot is identical before and after, and it is
+    written as a new immutable version (old one untouched); a second
+    compact is a no-op. It takes no file-count argument."""
     import os
 
     import pytest
 
-    be = ParquetFeatureStore(spark, store_root)
+    from diseasystore_spark.storage.scd2 import NULL_MONTH
+
+    # the file-size knob splits every write into one-row files
+    be = ParquetFeatureStore(spark, store_root, max_records_per_file=1)
     t1, t2, t3 = T(2024, 1, 1), T(2024, 2, 1), T(2024, 3, 1)
     be.update_snapshot(
         _df(spark, [("a", 1.0), ("b", 2.0)]).repartition(8), "ds.t", t1
@@ -371,24 +375,28 @@ def test_compact_preserves_every_snapshot(spark, store_root):
     be.update_snapshot(
         _df(spark, [("a", 5.0), ("b", 9.0)]).repartition(8), "ds.t", t3
     )
+    be.max_records_per_file = None
 
     def snap(ts):
         return {(r["key_id"], r["v"]) for r in be.get_table("ds.t", ts).collect()}
 
     before = {ts: snap(ts) for ts in (t1, t2, t3)}
     v_before = be._current_version("ds.t")
+    assert len(be._version_files("ds.t", v_before)) == 4
 
-    n_files = be.compact("ds.t", files_per_partition=1)
-    assert n_files == 1
+    n_files = be.compact("ds.t")
+    assert n_files == 2  # one closed-rows file, one open-rows file
     assert be._current_version("ds.t") == v_before + 1
+    months = be._manifest_of("ds.t", v_before + 1)["months"]
+    assert list(months) == [NULL_MONTH]  # no valid_from: one bin
     # old version directory untouched (readers mid-flight unaffected)
     assert os.path.isdir(be._version_dir("ds.t", v_before))
     assert {ts: snap(ts) for ts in (t1, t2, t3)} == before
 
-    with pytest.raises(ValueError, match="positive"):
-        be.compact("ds.t", files_per_partition=0)
-
-
+    assert be.compact("ds.t") == n_files
+    assert be._current_version("ds.t") == v_before + 1
+    with pytest.raises(TypeError):
+        be.compact("ds.t", files_per_partition=1)
 
 
 def test_snapshot_diff_single_scan_semantics(spark, store_root):

@@ -5,6 +5,7 @@ rewrites, unchanged partitions carried forward by MANIFEST REFERENCE
 from __future__ import annotations
 
 import datetime
+import json
 import os
 
 import pytest
@@ -45,7 +46,8 @@ ROWS_V1 = [
 ]
 
 
-def test_partitioned_layout_and_semantics(spark, pstore):
+def test_partitioned_layout_and_semantics(spark, pstore, monkeypatch):
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     t1, t2 = T(2024, 1, 1), T(2024, 1, 2)
     pstore.update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
     m1 = pstore._manifest_of("ds.t", 1)["months"]
@@ -95,7 +97,8 @@ def test_noop_merge_skips_version(spark, pstore):
     assert pstore._current_version("ds.t") == 1  # nothing changed
 
 
-def test_partition_pruned_snapshot_read(spark, pstore):
+def test_partition_pruned_snapshot_read(spark, pstore, monkeypatch):
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     t1 = T(2024, 1, 1)
     pstore.update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
     pruned = pstore.get_table("ds.t", t1, max_valid_from=D(2020, 2, 28))
@@ -118,12 +121,15 @@ def test_partitioned_survives_gc(spark, pstore):
     assert snap == {"a": 6.0, "b": 2.0, "c": 3.0}
 
 
-def test_file_level_gc_keeps_shared_files_deletes_dead_ones(spark, pstore):
+def test_file_level_gc_keeps_shared_files_deletes_dead_ones(
+    spark, pstore, monkeypatch
+):
     """The GC unit is the FILE, not the version directory: when v1's
     marker falls out of keep-2, v1's rewritten-month files die but its
     never-rewritten months' files — still referenced by the current
     manifest — must survive in place. (A directory-granularity GC
     would corrupt every carried-forward reference.)"""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     ts = [T(2024, 1, i + 1) for i in range(4)]
     rows = ROWS_V1
     pstore.update_snapshot(_df(spark, rows), "ds.t", ts[0])  # v1
@@ -151,11 +157,12 @@ def test_file_level_gc_keeps_shared_files_deletes_dead_ones(spark, pstore):
     assert snap == {"a": 6.0, "b": 2.0, "c": 3.0}
 
 
-def test_scoped_merge_carries_later_months_forward(spark, pstore):
+def test_scoped_merge_carries_later_months_forward(spark, pstore, monkeypatch):
     """A ``written_range``-scoped merge never reads or rewrites months
     after the range: their rows survive untouched (carried forward by
     manifest reference) even though they are absent from the incoming
     frame."""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     t1, t2 = T(2024, 1, 1), T(2024, 1, 2)
     pstore.update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
 
@@ -248,13 +255,14 @@ def test_scoped_merge_noop_skips_version(spark, pstore):
 
 
 def test_compact_partitioned_is_partial_and_content_preserving(
-    spark, pstore
+    spark, pstore, monkeypatch
 ):
     """Month-partitioned compaction is PARTIAL via the manifest: only
     months holding more than one file are read and rewritten (to one
     file each); already-compact months are carried forward by
     reference; a fully-compact table is a version-bump-free NO-OP;
     every snapshot is bit-identical throughout."""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     t1, t2 = T(2024, 1, 1), T(2024, 2, 1)
     # the file-size knob splits months across files -> fragmentation
     pstore.max_records_per_file = 10
@@ -326,12 +334,15 @@ def test_compact_partitioned_is_partial_and_content_preserving(
     assert {ts: snap(ts) for ts in (t1, t2)} == before
 
 
-def test_scoped_merge_read_never_touches_later_month_files(spark, pstore):
+def test_scoped_merge_read_never_touches_later_month_files(
+    spark, pstore, monkeypatch
+):
     """Execution-level proof (not plan-string matching) that the
     range-scoped merge's read side prunes months after the written
     range: input_file_name() over the max_valid_from-pruned read
     lists ONLY files of months at-or-before the bound — the parquet
     scan for a June backfill physically never opens July+ files."""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     from pyspark.sql import functions as F
 
     pstore.update_snapshot(_df(spark, ROWS_V1), "ds.t", T(2024, 1, 1))
@@ -347,12 +358,15 @@ def test_scoped_merge_read_never_touches_later_month_files(spark, pstore):
     ), files
 
 
-def test_null_valid_from_month_survives_scoped_merges(spark, pstore):
+def test_null_valid_from_month_survives_scoped_merges(
+    spark, pstore, monkeypatch
+):
     """NULL valid_from rows live in the NULL_MONTH manifest segment;
     scoped merges must key them as that segment (a raw date_format
     month would be Python None: unsortable against string months and
     never matching the manifest key — the carried rows would vanish
     silently)."""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     from diseasystore_spark.storage.scd2 import NULL_MONTH
 
     t1, t2, t3 = T(2024, 1, 1), T(2024, 1, 2), T(2024, 1, 3)
@@ -618,7 +632,9 @@ def test_compact_sweep_is_metadata_only_and_stable_under_knob_churn(
     assert ("k0", 9.0) in snap and len(snap) == 42
 
 
-def test_scoped_merge_never_touches_out_of_range_rows(spark, pstore):
+def test_scoped_merge_never_touches_out_of_range_rows(
+    spark, pstore, monkeypatch
+):
     """Round-10 closure scoping: a scoped merge compares ONLY rows
     overlapping the declared range. (a) A backfill at a NEW slice_ts
     must not close rows entirely before the range (the reference
@@ -626,6 +642,7 @@ def test_scoped_merge_never_touches_out_of_range_rows(spark, pstore):
     close candidates) and must rewrite only the range's months.
     (b) Out-of-scope current rows sharing a CHANGED month with the
     range (sub-month update) must be carried into the rewrite."""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     t1, t2 = T(2024, 1, 1), T(2024, 2, 1)
     rows = [
         ("jan_a", 1.0, D(2020, 1, 5), D(2020, 1, 8)),    # before range
@@ -697,12 +714,15 @@ def test_scoped_merge_never_touches_out_of_range_rows(spark, pstore):
     assert pstore._current_version("ds.t") == v2
 
 
-def test_min_valid_until_prunes_closed_months_at_manifest(spark, pstore):
+def test_min_valid_until_prunes_closed_months_at_manifest(
+    spark, pstore, monkeypatch
+):
     """Round-10 lower-bound pruning: write-time month_stats (max
     valid_until + open flag, from the same parquet footers the
     row-count cache reads) let an overlap-clipped snapshot read skip
     months whose every row closed before the window — a narrow study
     period reads O(window + open months), not O(history)."""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     from pyspark.sql import functions as F
 
     t1 = T(2024, 1, 1)
@@ -973,7 +993,7 @@ def _assert_manifest_stats_sound(pstore, table_id):
             assert ms[month]["max_until"] == iso_max(vu_month), month
 
 
-def test_prune_history_keeps_manifest_stats_sound(spark, pstore):
+def test_prune_history_keeps_manifest_stats_sound(spark, pstore, monkeypatch):
     """VERDICT r10 item 6: prune_history physically drops long-closed
     rows, which can change a month's max(valid_until), its max
     (until_ts) and its file layout — every manifest stats family must
@@ -981,6 +1001,7 @@ def test_prune_history_keeps_manifest_stats_sound(spark, pstore):
     or pruning decisions would be made against stale bounds. Churn:
     write / revise / prune / compact / revise again, asserting the
     footer-recomputed invariant and snapshot identity at every step."""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     t = [T(2024, 1, d) for d in (1, 2, 3, 4, 5)]
     rows1 = [
         ("a", 1.0, D(2020, 1, 5), D(2020, 1, 31)),
@@ -1055,10 +1076,13 @@ def test_duplicate_incoming_rows_open_one_row(spark, pstore):
     ]
 
 
-def test_empty_range_snapshot_closes_only_in_scope_rows(spark, pstore):
+def test_empty_range_snapshot_closes_only_in_scope_rows(
+    spark, pstore, monkeypatch
+):
     """An empty snapshot of a range closes exactly the current rows
     overlapping the range; the range's month is rewritten and every
     other month keeps its manifest references."""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     t1, t2 = T(2024, 1, 1), T(2024, 1, 2)
     rows = [
         ("jan", 1.0, D(2020, 1, 10), D(2020, 1, 20)),      # before range
@@ -1201,8 +1225,51 @@ def test_write_version_refuses_to_split_a_packed_bin(spark, pstore):
     assert pstore._current_version("ds.t") == v
 
 
+def _flat_base(spark, store, rows, ts):
+    """Commit ``rows`` at ``ts`` as version 1 of ``ds.t`` in the retired
+    flat layout, by hand (no code writes it any more): one segment of
+    plain parquet files and a marker listing them as ``files``, with
+    their ``file_stats`` records."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from diseasystore_spark.storage.scd2 import _file_record, row_checksum
+
+    df = _df(spark, rows)
+    tdir = store._table_dir("ds.t")
+    df.withColumns(
+        {
+            "checksum": row_checksum(df.columns),
+            "from_ts": F.lit(ts).cast("timestamp"),
+            "until_ts": F.lit(None).cast("timestamp"),
+        }
+    ).write.parquet(os.path.join(tdir, "_v1-flat"))
+    parts = sorted(
+        f"_v1-flat/{f}"
+        for f in os.listdir(os.path.join(tdir, "_v1-flat"))
+        if f.endswith(".parquet")
+    )
+    marker = {
+        "version": 1,
+        "dir": "_v1-flat",
+        "files": parts,
+        "file_stats": {
+            p: _file_record(pq.read_metadata(os.path.join(tdir, p)))
+            for p in parts
+        },
+    }
+    store.commit_backend.put(
+        os.path.join(store._commits_dir("ds.t"), "1.json"),
+        json.dumps(marker).encode(),
+    )
+
+
 @pytest.mark.parametrize("violating", [False, True])
-def test_scoped_update_is_layout_independent(spark, pstore, tmp_path, violating):
+def test_scoped_update_is_layout_independent(
+    spark, pstore, tmp_path, monkeypatch, violating
+):
     """A range-scoped update gives the same snapshots whatever layout
     holds its base: a flat table (the migration write), per-month
     files or one packed bin. In range, only in-scope rows close; an
@@ -1221,8 +1288,10 @@ def test_scoped_update_is_layout_independent(spark, pstore, tmp_path, violating)
         )
 
     t0, t1, t2 = T(2024, 1, 1), T(2024, 1, 2), T(2024, 1, 3)
-    store("flat", None).update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
+    _flat_base(spark, store("flat", None), ROWS_V1, t1)
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
     pstore.update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
+    monkeypatch.undo()
     packed = store("packed", "month")
     _packed(spark, packed, ROWS_V1, t0, t1)
     bases = {"flat": store("flat", "month"), "month": pstore, "packed": packed}
@@ -1250,3 +1319,227 @@ def test_scoped_update_is_layout_independent(spark, pstore, tmp_path, violating)
     )
     flat = bases["flat"]
     assert "months" in flat._manifest_of("ds.t", flat._current_version("ds.t"))
+
+
+def test_append_only_on_a_flat_base_migrates_it(spark, tmp_path):
+    """A table written in the retired flat layout (the q158 stream
+    store of an older release) migrates on its first append: the new
+    version lists months, only the batch's new checksums are inserted,
+    every earlier snapshot survives, and a replay inserts nothing."""
+    pstore = ParquetFeatureStore(spark, str(tmp_path / "s"))
+    t1, t2 = T(2024, 1, 1), T(2024, 1, 2)
+    _flat_base(spark, pstore, ROWS_V1, t1)
+    assert "files" in pstore._manifest_of("ds.t", 1)
+    batch = [ROWS_V1[0], ("d", 4.0, D(2020, 2, 12), None)]
+    pstore.update_snapshot(_df(spark, batch), "ds.t", t2, close_absent=False)
+    man = pstore._manifest_of("ds.t", 2)
+    assert "months" in man and "files" not in man
+    _assert_manifest_stats_sound(pstore, "ds.t")
+    assert _each_row_once(pstore) == 4
+    snap = {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", t2).collect()}
+    assert snap == {"a": 1.0, "b": 2.0, "c": 3.0, "d": 4.0}
+    snap1 = {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", t1).collect()}
+    assert snap1 == {"a": 1.0, "b": 2.0, "c": 3.0}
+    pstore.update_snapshot(_df(spark, batch), "ds.t", t2, close_absent=False)
+    assert pstore._current_version("ds.t") == 2
+
+
+def _dummy(spark, n):
+    """bench.py's baseline feature frame: ``32 * n`` cars, one every
+    other day back from 2024-06-01, each valid for two days."""
+    from pyspark.sql import functions as F
+
+    return (
+        spark.range(1, 32 * n + 1)
+        .select(
+            F.concat(F.lit("car_"), F.col("id")).alias("key_car"),
+            ((F.col("id") % 3) * 2 + 4.0).alias("n_cyl"),
+            F.date_sub(
+                F.lit(D(2024, 6, 1)), (F.col("id") * 2).cast("int")
+            ).alias("valid_from"),
+        )
+        .withColumn("valid_until", F.date_add("valid_from", 2))
+    )
+
+
+def _rows(frame):
+    return sorted(map(tuple, frame.collect()))
+
+
+#: Spark jobs the retired flat layout's cold write of ``_dummy(spark,
+#: 10)`` started in the test session (measured before it was retired;
+#: the month layout's per-month cold write started 3)
+_FLAT_COLD_WRITE_JOBS = 2
+
+
+def test_small_cold_write_is_one_bin_listed_under_every_month(
+    spark, tmp_path, monkeypatch
+):
+    """A cold write of at most ``_PACK_MAX_ROWS`` rows spanning many
+    months is one packed bin: no month directory, one file list under
+    every month its ``valid_from`` range spans, no more Spark jobs than
+    the flat layout's cold write, and the same snapshots as the
+    per-month layout."""
+    frame = _dummy(spark, 10)
+    store = ParquetFeatureStore(spark, str(tmp_path / "packed"))
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    job = scheduler.nextJobId()
+    store.update_snapshot(frame, "ds.t", T(2024, 6, 1))
+    assert scheduler.nextJobId() - job <= _FLAT_COLD_WRITE_JOBS
+
+    tdir = store._table_dir("ds.t")
+    assert not [d for d, _s, _f in os.walk(tdir) if f"{PARTITION_COL}=" in d]
+    man = store._manifest_of("ds.t", 1)
+    refs = store._manifest_refs(man)
+    want = sorted(
+        {
+            (D(2024, 6, 1) - datetime.timedelta(days=2 * i)).strftime("%Y-%m")
+            for i in range(1, 321)
+        }
+    )
+    assert sorted(man["months"]) == want and len(want) == 22
+    assert all(fs == refs for fs in man["months"].values())
+    # on disk the bin's file list is stored once, and each month names it
+    raw = json.loads(
+        store.commit_backend.get(os.path.join(store._commits_dir("ds.t"), "1.json"))
+    )
+    assert raw["bins"] == [refs]
+    assert raw["months"] == {m: 0 for m in want}
+
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
+    per_month = ParquetFeatureStore(spark, str(tmp_path / "per_month"))
+    per_month.update_snapshot(frame, "ds.t", T(2024, 6, 1))
+    # a bin is read whole when any of its months is kept, a superset
+    # the caller's clip narrows (as get_feature's does)
+    for cut in (None, D(2023, 1, 31)):
+        got, ref = (
+            st.get_table("ds.t", T(2024, 6, 2), max_valid_from=cut).where(
+                "true" if cut is None else f"valid_from <= '{cut}'"
+            )
+            for st in (store, per_month)
+        )
+        assert _rows(got) == _rows(ref) and _rows(got)
+    assert _rows(store.get_table("ds.t", T(2024, 6, 2))) == _rows(frame)
+    assert store.get_table("ds.t", T(2024, 5, 31)).count() == 0
+
+
+def test_cold_write_above_the_constant_is_laid_out_per_month(
+    spark, tmp_path, monkeypatch
+):
+    """A cold write of more than ``_PACK_MAX_ROWS`` rows is re-laid out
+    per month from its first pass, and the first pass's files are
+    removed: every parquet file under the table is one the manifest
+    lists, each under its own month."""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 100)
+    pstore = ParquetFeatureStore(spark, str(tmp_path / "s"))
+    frame = _dummy(spark, 10)
+    pstore.update_snapshot(frame, "ds.t", T(2024, 6, 1))
+    man = pstore._manifest_of("ds.t", 1)
+    tdir = pstore._table_dir("ds.t")
+    assert [e for e in os.listdir(tdir) if e.startswith("_v")] == [man["dir"]]
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), tdir)
+        for d, _s, names in os.walk(tdir)
+        for f in names
+        if f.endswith(".parquet")
+    }
+    assert on_disk == set(pstore._manifest_refs(man))
+    assert len(man["months"]) == 22
+    for m, fs in man["months"].items():
+        assert all(f"/{PARTITION_COL}={m}/" in f for f in fs), (m, fs)
+    _assert_manifest_stats_sound(pstore, "ds.t")
+    assert _rows(pstore.get_table("ds.t", T(2024, 6, 2))) == _rows(frame)
+
+
+def test_table_without_valid_from_round_trips_per_month(
+    spark, tmp_path, monkeypatch
+):
+    """A table without ``valid_from`` keeps every row in NULL_MONTH,
+    through the per-month path too: cold write, merge and append."""
+    from diseasystore_spark.storage.scd2 import NULL_MONTH
+
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
+    pstore = ParquetFeatureStore(spark, str(tmp_path / "s"))
+    t1, t2, t3 = T(2024, 1, 1), T(2024, 1, 2), T(2024, 1, 3)
+
+    def df(rows):
+        return spark.createDataFrame(rows, "key_id string, v double")
+
+    for v, (rows, ts, close) in enumerate(
+        [
+            ([("a", 1.0), ("b", 2.0)], t1, True),
+            ([("a", 1.0), ("c", 3.0)], t2, True),
+            ([("d", 4.0)], t3, False),
+        ],
+        start=1,
+    ):
+        pstore.update_snapshot(df(rows), "ds.t", ts, close_absent=close)
+        months = pstore._manifest_of("ds.t", v)["months"]
+        assert list(months) == [NULL_MONTH]
+        assert all(f"/{PARTITION_COL}={NULL_MONTH}/" in f for f in months[NULL_MONTH])
+
+    def snap(ts):
+        return {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", ts).collect()}
+
+    assert snap(t1) == {"a": 1.0, "b": 2.0}
+    assert snap(t2) == {"a": 1.0, "c": 3.0}
+    assert snap(t3) == {"a": 1.0, "c": 3.0, "d": 4.0}
+
+
+def test_marker_stores_each_packed_bin_once():
+    """A file list shared by several months is written once, under
+    ``bins``; a month's own list and a flat ``files`` list are written
+    as they are, and decoding restores the manifest."""
+    from diseasystore_spark.storage.scd2 import _decode_manifest, _encode_manifest
+
+    bin_a, bin_b = ["_v2-a/__vc=o/p0.parquet"], ["_v3-b/__vc=c/p0.parquet"]
+    man = {
+        "version": 3,
+        "dir": "_v3-b",
+        "months": {
+            "2020-01": bin_a,
+            "2020-02": bin_a,
+            "2020-03": ["_v1-c/__vm=2020-03/__vc=o/p0.parquet"],
+            "2020-04": bin_b,
+            "2020-05": bin_b,
+        },
+        "file_stats": {},
+    }
+    raw = json.loads(_encode_manifest(man))
+    assert raw["bins"] == [bin_a, bin_b]
+    assert raw["months"] == {
+        "2020-01": 0,
+        "2020-02": 0,
+        "2020-03": man["months"]["2020-03"],
+        "2020-04": 1,
+        "2020-05": 1,
+    }
+    assert _decode_manifest(_encode_manifest(man)) == man
+    for plain in (
+        {"months": {"2020-01": bin_a, "2020-02": bin_b}, "file_stats": {}},
+        {"files": bin_a + bin_b, "file_stats": {}},
+    ):
+        assert json.loads(_encode_manifest(plain)) == plain
+        assert _decode_manifest(_encode_manifest(plain)) == plain
+
+
+def test_bin_months_takes_only_date_valid_from(tmp_path):
+    """A bin's months come off its footers only for a DATE
+    ``valid_from``: TIMESTAMP footer values are UTC while a row's month
+    is taken in the session time zone, so such a bin yields None (and
+    the cold write lays it out per month in Spark)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from diseasystore_spark.storage.scd2 import NULL_MONTH, _bin_months
+
+    def footer(name, values, typ):
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"valid_from": pa.array(values, typ)}), path)
+        return pq.read_metadata(path)
+
+    dates = footer("d", [D(2020, 1, 31), None, D(2020, 3, 1)], pa.date32())
+    assert _bin_months([dates]) == ["2020-01", "2020-02", "2020-03", NULL_MONTH]
+    stamps = footer("t", [T(2020, 1, 31, 23), T(2020, 3, 1)], pa.timestamp("us"))
+    assert _bin_months([stamps]) is None
+    assert _bin_months([dates, stamps]) is None

@@ -453,14 +453,21 @@ def test_write_time_stats_drive_bucket_decision(spark, tmp_path):
     ds.release_cached_plans()
 
 
-def test_get_feature_narrow_window_prunes_closed_history(spark, tmp_path):
+def test_get_feature_narrow_window_prunes_closed_history(
+    spark, tmp_path, monkeypatch
+):
     """Round-10 lower-bound pruning through the ENGINE path: after a
     full-year materialization of short-lived rows, a one-month
     get_feature window hands the scanner only the months whose
     validity stats can overlap the window — history months whose
     every row closed earlier are pruned at the manifest, and the
     result is identical to clipping the full read."""
-    from diseasystore_spark.storage.scd2 import PARTITION_COL
+    from diseasystore_spark.storage.scd2 import (
+        PARTITION_COL,
+        ParquetFeatureStore,
+    )
+
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 0)
 
     def mk(start, end):
         rows = []
