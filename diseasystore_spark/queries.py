@@ -13,7 +13,10 @@ exercise individual operators as standalone DataFrame plans.
 
 from __future__ import annotations
 
+import atexit
 import datetime
+import os
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -38,13 +41,32 @@ SLICE_TS = datetime.date(2024, 1, 1)
 
 _DS_CACHE: dict[str, TpchDiseasystore] = {}
 
+#: the one directory under which every query's stores and staged
+#: files live, made on first use and removed when the interpreter
+#: that made it exits
+_SCRATCH: list[str] = []
+
+
+def _remove_scratch(root: str, pid: int) -> None:
+    if os.getpid() == pid:  # a forked child inherits the exit hook
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh directory for one query's store or staged input, under
+    the process's scratch root."""
+    if not _SCRATCH:
+        _SCRATCH.append(tempfile.mkdtemp(prefix="ds_queries_"))
+        atexit.register(_remove_scratch, _SCRATCH[0], os.getpid())
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH[0])
+
 
 def _store(spark: SparkSession, sf_dir: str) -> TpchDiseasystore:
     key = sf_dir
     if key not in _DS_CACHE:
         _DS_CACHE[key] = TpchDiseasystore(
             spark,
-            target_conn=tempfile.mkdtemp(prefix="ds_tpch_"),
+            target_conn=_scratch_dir("ds_tpch_"),
             source_conn=sf_dir,
             slice_ts=SLICE_TS,
             verbose=False,
@@ -273,7 +295,7 @@ def q31_snapshot_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     data; each slice reads back exactly its own world."""
     ds = _RevisionStore(
         spark,
-        target_conn=tempfile.mkdtemp(prefix="ds_rev_"),
+        target_conn=_scratch_dir("ds_rev_"),
         source_conn=sf_dir,
         verbose=False,
     )
@@ -4717,7 +4739,7 @@ def q100_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets from orders directly."""
     ds = _Rev2Store(
         spark,
-        target_conn=tempfile.mkdtemp(prefix="ds_rev2_"),
+        target_conn=_scratch_dir("ds_rev2_"),
         source_conn=sf_dir,
         verbose=False,
     )
@@ -8156,7 +8178,6 @@ def q158_stream_scd2_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     puts the foreachBatch ingest path (previously parity-tested only
     in pytest) under the same hash-exact gate as the batch engine."""
     import os
-    import tempfile
 
     from diseasystore_spark.storage.scd2 import ParquetFeatureStore
     from diseasystore_spark.streaming.ingest import stream_feature_updates
@@ -8166,7 +8187,7 @@ def q158_stream_scd2_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = events.where(F.col("ts").cast("date") <= F.lit(cutoff))
     b2 = events.where(F.col("ts").cast("date") > F.lit(cutoff))
 
-    root = tempfile.mkdtemp(prefix="ds_stream_ingest_")
+    root = _scratch_dir("ds_stream_ingest_")
     sdir = os.path.join(root, "in")
     os.makedirs(sdir)
     for i, half in enumerate([b1, b2]):
@@ -8670,7 +8691,6 @@ def q166_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per open day); the completed counts then join the batch
     reference shares into per-(day, bin) PSI terms, q143's smoothed
     math per window. The oracle replays the stream as plain SQL."""
-    import tempfile
     import uuid
 
     from diseasystore_spark.streaming.quantiles import (
@@ -8685,7 +8705,7 @@ def q166_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref = events.where(F.col("event_type") == "view").select("value")
     cur = events.where(F.col("event_type") == "purchase")
 
-    root = tempfile.mkdtemp(prefix="ds_stream_psi_")
+    root = _scratch_dir("ds_stream_psi_")
     cur.coalesce(1).write.mode("overwrite").parquet(root + "/in")
     stream = spark.readStream.schema(cur.schema).parquet(root + "/in")
     # One sketch pass serves both consumers of the boundary array
@@ -9121,7 +9141,6 @@ def q172_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketing recomputed by the oracle directly on the source table
     — proving pack -> unpack is the identity and membership is
     engine-portable."""
-    import tempfile
 
     from diseasystore_spark.pipeline.shard import (
         read_tar_shards,
@@ -9135,7 +9154,7 @@ def q172_tar_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.encode("text", "UTF-8").alias("payload"),
     )
-    out = tempfile.mkdtemp(prefix="ds_tar_shards_")
+    out = _scratch_dir("ds_tar_shards_")
     manifest = write_tar_shards(docs, out, n_shards=4)
     manifest.count()  # materialize the pack before reading back
     back = read_tar_shards(spark, out + "/shard-*.tar")
@@ -9180,7 +9199,6 @@ def q173_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the parquet source exactly, and the quarantine count
     must equal the injected corruption."""
     import os
-    import tempfile
 
     from diseasystore_spark.sources.jsonl import (
         read_jsonl,
@@ -9189,7 +9207,7 @@ def q173_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _read(spark, sf_dir, "documents")
-    d = os.path.join(tempfile.mkdtemp(prefix="ds_jsonl_"), "docs")
+    d = os.path.join(_scratch_dir("ds_jsonl_"), "docs")
     write_jsonl(docs, d, n_files=2)
     with open(os.path.join(d, "part-injected.json"), "w") as fh:
         fh.write("this line is not json\n")
@@ -10234,12 +10252,11 @@ def q189_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same scan machinery as parquet (column pruning + predicate
     pushdown into ORC stripe statistics)."""
     import os
-    import tempfile
 
     from diseasystore_spark.sources.orc import read_orc, write_orc
 
     docs = _read(spark, sf_dir, "documents")
-    d = os.path.join(tempfile.mkdtemp(prefix="ds_orc_"), "docs")
+    d = os.path.join(_scratch_dir("ds_orc_"), "docs")
     write_orc(docs, d, n_files=3)
     back = read_orc(
         spark,
@@ -10370,14 +10387,13 @@ def q191_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState funnel (previously parity-tested only in
     pytest) under the driver's exact gate: stream == batch == SQL."""
     import os
-    import tempfile
 
     from diseasystore_spark.streaming.stateful import funnel_stream
 
     events = _read(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     cutoff = "2024-01-15"
 
-    root = tempfile.mkdtemp(prefix="ds_stream_funnel_")
+    root = _scratch_dir("ds_stream_funnel_")
     sdir = os.path.join(root, "in")
     os.makedirs(sdir)
     # ONE pass over events writes both halves (dynamic partitioning on

@@ -74,25 +74,32 @@ without ``file_stats``) raise ``ValueError`` naming the table.
 
 Scale path: one layout, sized to the rows each write holds. Every
 version is listed per ``month(valid_from)`` (rows without one, and
-tables without the column, sit in ``NULL_MONTH``), and a merge
-rewrites only months containing a changed row — ``update_snapshot`` is
-scoped to a date range, so the rewrite is O(touched partitions), the
-same pruning a Delta ``MERGE`` on checksum would achieve. A write of at
-most ``_PACK_MAX_ROWS`` rows is one packed bin instead of one
-directory per month (Delta's bin-packing), and every month of the bin
-lists the same files (the marker stores the list once and the months
-name it, ``_encode_manifest``); the ref sets of any two months are
-therefore equal or disjoint, and a rewrite always covers every month
-sharing a file with a changed one (``_rewrite_set``). A cold write
-does not count its rows first: it writes one bin, lists it under
-every month its footers' ``valid_from`` range spans, and only a bin
-above the constant is re-laid out per month. Manifests of the retired
-flat layout (a ``files`` list) are still read, and their next write
-migrates them. The merge plan itself
-is one full outer join of the current rows with the incoming rows on
-``checksum`` that classifies every row as kept, closed or inserted
-(Delta's single-join MERGE); it shuffles only on the checksum key and
-is AQE-friendly.
+tables without the column, sit in ``NULL_MONTH``). A write of at most
+``_PACK_MAX_ROWS`` rows is one packed bin instead of one directory per
+month (Delta's bin-packing), and every month of the bin lists the same
+files (the marker stores the list once and the months name it,
+``_encode_manifest``); the ref sets of any two months are therefore
+equal or disjoint, and a rewrite always covers every month sharing a
+file with one it rewrites (``_rewrite_set``). A cold write does not
+count its rows first: it writes one bin, lists it under every month
+its footers' ``valid_from`` range spans, and only a bin above the
+constant is re-laid out per month. Manifests of the retired flat
+layout (a ``files`` list) are still read, and their next write
+migrates them.
+
+The merge plan is one full outer join of the base's rows with the
+incoming rows on ``checksum`` that classifies every row as kept,
+closed or inserted (Delta's single-join MERGE); it shuffles only on the
+checksum key and is AQE-friendly. ``update_snapshot`` is scoped to a
+date range, so a merge compares only the months up to the range's end:
+its scope. A small merge — the scope, closed over shared bins, holds at
+most ``_PACK_MAX_ROWS`` rows — rewrites that whole closure in ONE
+pass: the join's output is written as one bin, and the write's observed
+metrics decide whether it commits and which months list it. A larger
+merge first runs a census of the changed rows and rewrites only the
+months holding one (closed over shared bins), so the rewrite is
+O(touched partitions), the same pruning a Delta ``MERGE`` on checksum
+would achieve; every other month is carried forward by reference.
 
 Without the Delta jars in this environment the parquet+manifest
 layout is the honest equivalent; the class isolates all physical I/O
@@ -112,7 +119,7 @@ from collections import Counter
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -130,21 +137,33 @@ LOGS_TABLE = "logs"
 NULL_MONTH = "__HIVE_DEFAULT_PARTITION__"
 
 
-def _month_key(columns: list[str], prefix: str = "") -> Column:
+def _sql_name(name: str) -> str:
+    """``name`` as a SQL identifier that resolves as ``F.col(name)``
+    does: each dot separates a nested field."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in name.split("."))
+
+
+def _month_sql(columns: list[str], prefix: str = "") -> str:
     """The manifest month of a frame's ``valid_from`` (named
-    ``prefix + "valid_from"``). NULL lands in the NULL_MONTH segment
-    (the directory partitionBy writes it to), so the key says so too: a
-    raw ``date_format`` would be Python None — unsortable against the
-    string months, and never matching the manifest key. NULL_MONTH
-    sorts after every "yyyy-MM", so a scoped merge that changes such
-    rows takes the unscoped fallback. A table without ``valid_from``
-    keeps every row in NULL_MONTH."""
+    ``prefix + "valid_from"``), as SQL text. NULL lands in the
+    NULL_MONTH segment (the directory partitionBy writes it to), so the
+    key says so too: a raw ``date_format`` would be Python None —
+    unsortable against the string months, and never matching the
+    manifest key. NULL_MONTH sorts after every "yyyy-MM", so a scoped
+    merge that changes such rows takes the unscoped fallback. A table
+    without ``valid_from`` keeps every row in NULL_MONTH."""
     if "valid_from" not in columns:
-        return F.lit(NULL_MONTH)
-    return F.coalesce(
-        F.date_format(F.col(prefix + "valid_from"), "yyyy-MM"),
-        F.lit(NULL_MONTH),
+        return f"'{NULL_MONTH}'"
+    return (
+        f"coalesce(date_format({_sql_name(prefix + 'valid_from')}, 'yyyy-MM'),"
+        f" '{NULL_MONTH}')"
     )
+
+
+def _month_key(columns: list[str], prefix: str = "") -> Column:
+    """``_month_sql`` as a Column: one SQL expression, so one
+    ``F.expr`` call's Py4J round trips."""
+    return F.expr(_month_sql(columns, prefix))
 
 
 def _month_range(lo: str, hi: str) -> list[str]:
@@ -156,11 +175,65 @@ def _month_range(lo: str, hi: str) -> list[str]:
     return out
 
 
+def _ts_sql(ts: datetime.datetime) -> str:
+    """The SQL literal of the instant ``F.lit(ts)`` makes: a naive
+    ``ts`` is read in the Python process's local time zone, as PySpark's
+    converter reads it, and the literal is written in UTC with an
+    explicit zone, so the session time zone does not move it."""
+    micros = T.TimestampType().toInternal(ts)
+    utc = datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=micros)
+    return f"TIMESTAMP'{utc.isoformat(sep=' ')}Z'"
+
+
 def _valid_at(ts) -> Column:
-    """The rows of the snapshot at transaction time ``ts``."""
-    return (F.col("from_ts") <= F.lit(ts)) & (
-        F.col("until_ts").isNull() | (F.col("until_ts") > F.lit(ts))
+    """The rows of the snapshot at transaction time ``ts``, as one SQL
+    expression."""
+    at = _ts_sql(ts)
+    return F.expr(f"from_ts <= {at} AND (until_ts IS NULL OR until_ts > {at})")
+
+
+#: the merge join's classification (``_merge_join``): an incoming
+#: row that matched nothing opens; a match candidate that matched
+#: nothing closes when it is in the compared scope.
+_INSERTS = "checksum IS NULL"
+_CLOSES = "__k IS NULL AND __e AND __s"
+
+
+def _merge_join(
+    existing: DataFrame, incoming: DataFrame, matchable: Column, closable: Column
+) -> DataFrame:
+    """The merge's one full outer join on ``checksum``: every column of
+    ``existing`` plus ``__e`` (the row may match: ``matchable``),
+    ``__s`` (unmatched, it closes: ``closable``), ``__k`` (the incoming
+    row's checksum) and ``__in`` (its payload, a struct). Only rows
+    with ``__e`` match; checksums are unique among them (``incoming``
+    is deduplicated and only unmatched rows open), so no row is
+    duplicated."""
+    payload = [c for c in existing.columns if c not in SCD2_COLUMNS]
+    fields = ", ".join(map(_sql_name, payload))
+    return existing.withColumns({"__e": matchable, "__s": closable}).join(
+        incoming.selectExpr("checksum AS __k", f"struct({fields}) AS __in"),
+        F.expr("checksum = __k AND __e"),
+        "full_outer",
     )
+
+
+def _merged_rows(joined: DataFrame, columns: list[str], ts) -> DataFrame:
+    """The new version's rows from ``_merge_join``'s output, in
+    ``columns`` order: kept rows verbatim, closed rows with ``until_ts
+    = ts``, inserted rows open from ``ts``. One ``selectExpr`` call,
+    however wide the row."""
+    at = _ts_sql(ts)
+    bookkeeping = {
+        "checksum": "coalesce(checksum, __k)",
+        "from_ts": f"coalesce(from_ts, {at})",
+        "until_ts": f"if({_CLOSES}, {at}, until_ts)",
+    }
+    exprs = []
+    for c in columns:
+        q = _sql_name(c)
+        exprs.append(bookkeeping.get(c, f"if({_INSERTS}, __in.{q}, {q})") + f" AS {q}")
+    return joined.selectExpr(*exprs)
 
 
 def _parsed(iso: str | None, parse):
@@ -330,12 +403,16 @@ def normalize_slice_ts(
 def row_checksum(columns: list[str]) -> F.Column:
     """Deterministic row checksum over the data columns (sorted by name
     for stability), NULL-distinguishing. Mirrors SCDB's
-    ``digest_to_checksum`` role; sha256 via the JVM-side ``sha2``."""
-    parts = [
-        F.coalesce(F.col(c).cast("string"), F.lit("\x00<NULL>"))
+    ``digest_to_checksum`` role; sha256 via the JVM-side ``sha2``. One
+    SQL expression, so its Py4J round trips do not grow with the row; its
+    analyzed form is that of ``sha2(concat_ws("\\x1f", coalesce(
+    col.cast("string"), "\\x00<NULL>"), ...), 256)``, which stored
+    checksums were computed with."""
+    parts = ", ".join(
+        f"coalesce(CAST({_sql_name(c)} AS STRING), '\\u0000<NULL>')"
         for c in sorted(columns)
-    ]
-    return F.sha2(F.concat_ws("\x1f", *parts), 256)
+    )
+    return F.expr(f"sha2(concat_ws('\\u001F', {parts}), 256)")
 
 
 PARTITION_COL = "__vm"
@@ -351,10 +428,12 @@ class ParquetFeatureStore:
     """SCD2 storage in one layout: each version is listed per
     ``month(valid_from)``; a write of at most ``_PACK_MAX_ROWS`` rows is
     one packed bin listed under each of its months, a larger one has a
-    directory per month. Merges rewrite only the months whose rows
-    changed and carry the untouched months forward by MANIFEST
-    REFERENCE (no links, no copies) — the Iceberg pattern, and the
-    equivalent of a Delta MERGE touching only affected files.
+    directory per month. A merge whose scope holds at most that many
+    rows rewrites the scope as one bin in one pass; a larger one
+    rewrites only the months whose rows changed. Either way the other
+    months are carried forward by MANIFEST REFERENCE (no links, no
+    copies) — the Iceberg pattern, and the equivalent of a Delta MERGE
+    touching only affected files.
 
     ``partition_granularity`` is still accepted, ``None`` or
     ``"month"``; both mean this one layout."""
@@ -1223,16 +1302,19 @@ class ParquetFeatureStore:
         never closed — the reference reaches the same end state by
         re-including all current out-of-range rows into the compared
         frame (``R/DiseasystoreBase.R:195-212``) — and later months
-        are carried forward untouched (referenced, never scanned).
+        are carried forward untouched (referenced, never scanned)
+        unless they share a packed bin with a compared month.
         This is the scale contract of ``_compute_and_store_range``:
         every engine write is scoped to a date range, so a backfill
         into year 1 of a 10-year table neither rewrites the other 9
-        years nor (since round 10) closes-and-rewrites the months
-        before the range. If ``data`` nevertheless contains rows with
-        ``month(valid_from) > month(end_date)`` (a handler violating
-        the study-period clip contract), the violation is detected
-        from the changed-months set and the merge transparently falls
-        back to an unscoped full compare.
+        years nor closes rows outside the range, and once the compared
+        months hold more than ``_PACK_MAX_ROWS`` rows it rewrites only
+        the months it changes (``_merge_existing``). If ``data``
+        nevertheless contains rows with ``month(valid_from) >
+        month(end_date)`` (a handler violating the study-period clip
+        contract), the violation is detected from the months the
+        inserted rows reach and the merge transparently falls back to
+        an unscoped full compare.
 
         ``allow_schema_evolution=True`` widens on column mismatch:
         extra incoming columns trigger ``evolve_schema`` (NULL
@@ -1304,63 +1386,14 @@ class ParquetFeatureStore:
             )
             return
 
-        if not close_absent:
-            self._append_only(incoming, table_id, ts, base)
-            return
-        self._merge_existing(incoming, table_id, ts, written_range, base)
-
-    def _append_only(
-        self,
-        incoming: DataFrame,
-        table_id: str,
-        ts: datetime.datetime,
-        base: int,
-    ) -> None:
-        """Insert rows not already current at ``ts``; never close
-        anything. Replay-idempotent: a re-merged batch matches on
-        checksum and inserts nothing (the version bump is skipped).
-        Only the months receiving a row are rewritten, closed over the
-        packed bins they share; a base in the retired flat layout is
-        rewritten whole, which migrates it."""
-        manifest = self._committed(table_id, base)
-        existing = self.read_raw(table_id, version=base)
-        is_current = _valid_at(ts)
-        inserted = incoming.join(
-            existing.where(is_current).select("checksum"),
-            "checksum",
-            "left_anti",
-        ).withColumns(
-            {
-                "from_ts": F.lit(ts).cast("timestamp"),
-                "until_ts": F.lit(None).cast("timestamp"),
-            }
-        ).select(*existing.columns)
-
-        month_of = _month_key(existing.columns)
-        inserted = inserted.cache()
-        try:
-            per_month = {
-                r["m"]: r["n"]
-                for r in inserted.groupBy(month_of.alias("m"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            if not per_month:
-                return
-            if "months" in manifest:
-                rewrite, n = self._rewrite_set(manifest, per_month)
-                existing = existing.where(month_of.isin(rewrite))
-            else:
-                rewrite, n = None, self._manifest_rows(manifest)
-            self._write_version(
-                existing.unionByName(inserted),
-                table_id,
-                changed_months=rewrite,
-                base_version=base,
-                rows=n + sum(per_month.values()),
-            )
-        finally:
-            inserted.unpersist()
+        self._merge_existing(
+            incoming,
+            table_id,
+            ts,
+            written_range if close_absent else None,
+            base,
+            close_absent,
+        )
 
     def _merge_existing(
         self,
@@ -1369,51 +1402,59 @@ class ParquetFeatureStore:
         ts: datetime.datetime,
         written_range,
         base: int,
+        close_absent: bool = True,
     ) -> None:
-        """The checksum merge: ONE full outer join of the current rows
-        (months <= range end on a scoped merge) with ``incoming`` on
-        ``checksum`` classifies every row, as Delta's MERGE does:
+        """The checksum merge: ONE full outer join of the base's rows
+        with ``incoming`` on ``checksum`` classifies every row, as
+        Delta's MERGE does (``_merge_join``):
 
-        - in both: kept verbatim;
-        - existing only, in the compared scope: closed at ``ts``;
-        - existing only, out of scope: kept verbatim;
+        - matched: kept verbatim;
+        - existing only, current and in the compared scope: closed at
+          ``ts`` — never, in an append-only merge (``close_absent``
+          False, always unscoped);
+        - existing only, otherwise: kept verbatim;
         - incoming only: inserted, open from ``ts``.
 
-        The insert side matches against every current row the compare
-        reads, in scope or not, so an incoming row equal to an
-        out-of-scope current row is never opened twice. On a scoped
-        merge those are the current rows of months up to the range's
-        last month, plus the NULL month; an incoming row equal to a
-        later month's row is a clip-contract violation, which the
-        unscoped fallback below catches.
+        An incoming row matches only the current rows the compare
+        reads, in scope or not, so it is never opened beside an equal
+        current row. On a scoped merge those are the current rows of
+        months up to the range's last month, plus the NULL month; an
+        incoming row equal to a later month's row is a clip-contract
+        violation: inserted rows that reach past the range's last month
+        make the merge redo itself unscoped.
 
-        Only the changed months — closed over the packed bins they
-        share (``_rewrite_set``) — are rewritten. A base in the
-        retired flat layout takes the same merge, scope included, but
-        rewrites every row: the migration write.
+        The scope's months — every month up to the range's last one
+        plus the NULL month, or every month when unscoped — closed over
+        the packed bins they share (``_rewrite_set``) bound the
+        rewrite. When they hold at most ``_PACK_MAX_ROWS`` rows the
+        merge is ONE pass with no census: the join's output over the
+        whole closure is written as one bin, and the write's observed
+        metrics (``DataFrame.observe``, no extra job) say whether a row
+        closed or opened and which months the inserted rows reach. No
+        change, or a violation, removes the segment uncommitted; else
+        the bin is listed under the closure plus those months. Above
+        the constant a census of the changed rows first picks the
+        months to rewrite — the changed months closed over shared bins
+        — so a large table's untouched months are carried forward by
+        reference, and the same join writes them. Checksums determine
+        ``valid_from``, so an incoming row can match only a row of its
+        own month and the census-path write joins only the rewritten
+        months' rows on either side.
+
+        A base in the retired flat layout takes the same merge, scope
+        included, but rewrites every row: the migration write, which
+        commits even when no row changed.
         """
-        existing = self.read_raw(
-            table_id,
-            max_valid_from=written_range[1] if written_range else None,
-            version=base,
-        )
-        is_current = _valid_at(ts)
-        ts_lit = F.lit(ts).cast("timestamp")
-        payload = [c for c in existing.columns if c not in SCD2_COLUMNS]
-        if written_range is not None:
-            # Only a scoped compare can fall back (below) and read
-            # ``incoming`` a second time — usually an upstream compute
-            # handed in lazily, so keep its one evaluation.
-            incoming = incoming.cache()
-        incoming_rows = incoming.select(
-            "checksum", F.struct(*payload).alias("__in")
-        )
-
         manifest = self._committed(table_id, base)
+        end = written_range[1] if written_range is not None else None
+        existing = self.read_raw(table_id, max_valid_from=end, version=base)
+        columns = existing.columns
+        payload = [c for c in columns if c not in SCD2_COLUMNS]
         migrating = "months" not in manifest
-        current = existing.where(is_current)
-        in_scope = F.lit(True)
+        matchable, closable = _valid_at(ts), F.lit(close_absent)
+        last = None
         if written_range is not None:
+            last = end.strftime("%Y-%m")
             # Only rows whose validity OVERLAPS the declared range are
             # in the compare's scope: ``data`` is the complete snapshot
             # of range-overlapping rows (the engine compute contract),
@@ -1423,10 +1464,10 @@ class ParquetFeatureStore:
             # reaches the same end state by re-including all current
             # out-of-range rows into the compared frame
             # (R/DiseasystoreBase.R:195-212) — so a backfill at a new
-            # slice_ts neither closes nor rewrites earlier months, and
-            # out-of-scope rows of a changed month (a sub-month range
-            # update) are carried into its rewrite verbatim.
-            in_scope = (F.col("valid_from") <= F.lit(written_range[1])) & (
+            # slice_ts neither closes earlier rows nor, on a large
+            # table, rewrites earlier months, and out-of-scope rows of
+            # a rewritten month are carried into it verbatim.
+            closable = (F.col("valid_from") <= F.lit(end)) & (
                 F.col("valid_until").isNull()
                 | (F.col("valid_until") > F.lit(written_range[0]))
             )
@@ -1434,102 +1475,104 @@ class ParquetFeatureStore:
             # the range's last month holds (plus the NULL month): a
             # packed bin or a flat base also holds later months, and a
             # match there would hide a clip-violating row from the
-            # fallback below.
-            stop = (
-                written_range[1].replace(day=1) + datetime.timedelta(days=31)
-            ).replace(day=1)
-            current = current.where(
-                F.col("valid_from").isNull()
-                | (F.col("valid_from") < F.lit(stop))
+            # fallback.
+            stop = (end.replace(day=1) + datetime.timedelta(days=31)).replace(
+                day=1
+            )
+            matchable = matchable & (
+                F.col("valid_from").isNull() | (F.col("valid_from") < F.lit(stop))
             )
 
-        # The join reads only the current rows' checksum, month and
-        # scope and keeps only the changed rows: the closed rows' keys
-        # and the inserted rows, cached. One aggregation of that frame
-        # yields the changed months and the inserted rows per month;
-        # only the rewrite set is rewritten from a pruned re-read
-        # (closing the matched keys), every other month is carried
-        # forward by manifest reference. Checksums are unique among
-        # current rows (``incoming`` is deduplicated and only
-        # unmatched rows open), so the re-read's join on the closed
-        # keys adds no rows.
-        changes = (
-            current.select(
-                "checksum",
-                _month_key(existing.columns).alias("__m"),
-                in_scope.alias("__s"),
-            )
-            .join(incoming_rows, "checksum", "full_outer")
-            .where(
-                F.col("__m").isNull() | (F.col("__in").isNull() & F.col("__s"))
-            )
-            .select(
-                "checksum",
-                F.coalesce(
-                    "__m", _month_key(payload, "__in.")
-                ).alias("__m"),
-                "__in",
-            )
-            .cache()
-        )
-        try:
-            inserted_per_month = {
-                r["__m"]: r["n"]
-                for r in changes.groupBy("__m")
-                .agg(F.count("__in").alias("n"))
-                .collect()
-            }
-            changed_months = sorted(inserted_per_month)
-            if not changed_months and not migrating:
-                return  # merge is a no-op: current version already correct
+        def violates(months) -> bool:
+            return last is not None and max(months, default="") > last
 
-            if written_range is not None and changed_months and changed_months[
-                -1
-            ] > written_range[1].strftime("%Y-%m"):
-                # ``data`` reached past the declared range (clip-contract
-                # violation): the scoped compare would treat those months'
-                # surviving rows as absent. Redo unscoped — correct for
-                # any input, just without the pruning.
-                return self._merge_existing(incoming, table_id, ts, None, base)
+        if migrating:
+            rewrite, rows = None, self._manifest_rows(manifest)
+        else:
+            rewrite, rows = self._rewrite_set(
+                manifest,
+                [
+                    m
+                    for m in manifest["months"]
+                    if last is None or m == NULL_MONTH or m <= last
+                ],
+            )
 
-            if migrating:
-                rewrite, rows = None, self._manifest_rows(manifest)
-            else:
-                rewrite, rows = self._rewrite_set(manifest, changed_months)
-                existing = existing.where(
-                    _month_key(existing.columns).isin(rewrite)
-                )
-            rows += sum(inserted_per_month.values())
-            closed_keys = changes.where(F.col("__in").isNull()).select(
-                "checksum", F.lit(True).alias("__c")
+        if rows <= self._PACK_MAX_ROWS:
+            seen = Observation()
+            observed = _merge_join(existing, incoming, matchable, closable).observe(
+                seen,
+                F.expr(f"count_if({_CLOSES}) AS closed"),
+                F.expr(f"count_if({_INSERTS}) AS inserted"),
+                F.expr(
+                    f"collect_set(if({_INSERTS}, {_month_sql(payload, '__in.')},"
+                    " NULL)) AS months"
+                ),
             )
-            rewritten = (
-                existing.join(closed_keys, "checksum", "left")
-                .withColumn(
-                    "until_ts",
-                    F.when(F.col("__c") & is_current, ts_lit).otherwise(
-                        F.col("until_ts")
-                    ),
-                )
-                .drop("__c")
-            )
-            inserted = changes.where(F.col("__in").isNotNull()).select(
-                "checksum",
-                "__in.*",
-                ts_lit.alias("from_ts"),
-                F.lit(None).cast("timestamp").alias("until_ts"),
-            )
-            self._write_version(
-                rewritten.unionByName(inserted),
+
+            def settle() -> list[str] | None:
+                # Retried tasks may count a row twice, so the counts
+                # are only tested for zero.
+                got = seen.get
+                changed = got["closed"] or got["inserted"] or migrating
+                if not changed or violates(got["months"]):
+                    return None
+                return got["months"]
+
+            if not self._write_version(
+                _merged_rows(observed, columns, ts),
                 table_id,
                 changed_months=rewrite,
                 base_version=base,
-                rows=rows,
-            )
+                settle=settle,
+            ) and violates(seen.get["months"]):
+                # ``data`` reached past the declared range: the scoped
+                # compare would treat those months' surviving rows as
+                # absent. Redo unscoped (``incoming`` is recomputed) —
+                # correct for any input, just without the pruning.
+                self._merge_existing(incoming, table_id, ts, None, base)
+            return
+
+        # The census reads ``incoming`` and the write reads it again.
+        incoming.cache()
+        try:
+            census = {
+                r["__m"]: r["n"]
+                for r in _merge_join(
+                    existing.where(matchable), incoming, F.lit(True), closable
+                )
+                .where(F.expr(f"{_INSERTS} OR {_CLOSES}"))
+                .groupBy(
+                    F.expr(
+                        f"if({_INSERTS}, {_month_sql(payload, '__in.')},"
+                        f" {_month_sql(columns)})"
+                    ).alias("__m")
+                )
+                .agg(F.expr(f"count_if({_INSERTS})").alias("n"))
+                .collect()
+            }
+            fallback = violates(census)
+            if not fallback and (census or migrating):
+                changed = incoming
+                if not migrating:
+                    rewrite, rows = self._rewrite_set(manifest, census)
+                    existing = existing.where(_month_key(columns).isin(rewrite))
+                    changed = incoming.where(_month_key(payload).isin(rewrite))
+                self._write_version(
+                    _merged_rows(
+                        _merge_join(existing, changed, matchable, closable),
+                        columns,
+                        ts,
+                    ),
+                    table_id,
+                    changed_months=rewrite,
+                    base_version=base,
+                    rows=rows + sum(census.values()),
+                )
         finally:
-            changes.unpersist()
-            if written_range is not None:
-                incoming.unpersist()
+            incoming.unpersist()
+        if fallback:
+            self._merge_existing(incoming, table_id, ts, None, base)
 
     #: at or below this row count a write is one packed bin (one file
     #: per ``__vc`` cluster, listed under each of its months) instead
@@ -1553,9 +1596,10 @@ class ParquetFeatureStore:
         changed_months: list[str] | None,
         base_version: int | None,
         rows: int | None = None,
-    ) -> None:
+        settle=None,
+    ) -> bool:
         """Write a new immutable segment directory and commit the
-        version by putting its MANIFEST marker.
+        version by putting its MANIFEST marker; True when committed.
 
         With ``changed_months``, ``new_table`` holds only the changed
         months' rows; the manifest carries the previous version's file
@@ -1572,15 +1616,24 @@ class ParquetFeatureStore:
         The write is sized to its rows (``_PACK_MAX_ROWS``). ``rows``
         is the row count of ``new_table`` when the caller knows it
         without a job: a larger write goes per month, a smaller one is
-        one packed bin shuffled into one task, listed under every one
-        of ``changed_months`` or, on an unscoped write, under every
-        month its footers' ``valid_from`` range spans. A cold write
-        (``rows`` None) is not counted first: it writes one bin in the
-        frame's own partitioning, takes its rows and months from the
-        footers read below, and only a bin above the constant (or one
-        whose footers cannot bound ``valid_from``) is re-laid out per
-        month from the files just written, whose segment is then
-        removed.
+        one packed bin shuffled into one task. Without ``rows`` — a
+        cold write, or a one-pass merge — nothing is counted first:
+        the frame is written as one bin (a cold write's, all open rows,
+        in the frame's own partitioning with no shuffle), its rows are
+        taken from the footers read below, and only a bin above the
+        constant (or one whose footers cannot bound ``valid_from``,
+        when they list it) is re-laid out per month from the files
+        just written, whose segment is then removed. A bin is listed
+        under every one of ``changed_months`` and of the months
+        ``settle`` returns or, on an unscoped write, under every month
+        its footers' ``valid_from`` range spans.
+
+        ``settle``, when given, is called once the bin is written and
+        before anything is committed. It returns the months the
+        written rows reach beyond ``changed_months``, or None to
+        abandon the write: the segment is removed, nothing is
+        committed and the call returns False (a merge that changed no
+        row, or one that must be redone unscoped).
 
         Every file the write creates gets its stats record from one
         read of its footer; carried-forward files inherit theirs from
@@ -1645,27 +1698,32 @@ class ParquetFeatureStore:
 
         try:
             per_month = rows is not None and rows > self._PACK_MAX_ROWS
-            written = segment(new_table, per_month, rows is None)
+            written = segment(new_table, per_month, base_version is None)
             footers = {}
             if not per_month:
+                months = changed_months
+                if settle is not None:
+                    reached = settle()
+                    if reached is None:
+                        shutil.rmtree(os.path.join(tdir, segments[-1]))
+                        return False
+                    if months is not None:
+                        months = sorted({*months, *reached})
                 footers = {
                     r: pq.read_metadata(os.path.join(tdir, r)) for r in written
                 }
-                months = changed_months
                 if months is None:
                     months = _bin_months(footers.values())
-                    n = sum(md.num_rows for md in footers.values())
-                    if months is None or n > self._PACK_MAX_ROWS:
-                        first = os.path.join(tdir, segments[-1])
-                        footers, months = {}, None
-                        written = segment(
-                            self._read_files(
-                                [os.path.join(tdir, r) for r in written]
-                            ),
-                            True,
-                            False,
-                        )
-                        shutil.rmtree(first)
+                n = sum(md.num_rows for md in footers.values())
+                if months is None or n > self._PACK_MAX_ROWS:
+                    first = os.path.join(tdir, segments[-1])
+                    footers, months = {}, None
+                    written = segment(
+                        self._read_files([os.path.join(tdir, r) for r in written]),
+                        True,
+                        False,
+                    )
+                    shutil.rmtree(first)
                 if months is not None:
                     written = {m: written for m in months}
             inherited = base["file_stats"] if base is not None else {}
@@ -1702,6 +1760,7 @@ class ParquetFeatureStore:
         except CommitConflictError:
             shutil.rmtree(os.path.join(tdir, segments[-1]), ignore_errors=True)
             raise
+        return True
 
     def _write_segment(
         self,

@@ -53,6 +53,12 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     from diseasystore_spark.queries import ORACLES, QUERIES
+
+    unknown = sorted(only - set(QUERIES))
+    if unknown:
+        print(f"FAIL unknown query names: {', '.join(unknown)}")
+        return 2
+
     from diseasystore_spark.session import get_spark
 
     spark = get_spark("oracle-check", cpus=8)

@@ -60,3 +60,32 @@ def test_warm_q02_build_stays_under_1100_commands(spark, monkeypatch):
     commands, against ~1,550 with origin capture on."""
     n = _warm_build_commands(spark, monkeypatch, "q02_prevalence_by_nation")
     assert 0 < n <= 1100, n
+
+
+def test_scd2_update_path_expressions_are_one_command_each(spark, monkeypatch):
+    """The snapshot predicate, the row checksum and the month key sit on
+    every SCD2 update and read; each is one SQL expression, so one
+    ``F.expr`` call's few Py4J commands however wide the row (the
+    Column-built checksum sent 231 over 13 columns)."""
+    import datetime
+
+    from diseasystore_spark.storage.scd2 import _month_key, _valid_at, row_checksum
+
+    cols = [f"c{i}" for i in range(12)] + ["valid_from"]
+    ts = datetime.datetime(2024, 1, 1)
+    sent = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    for build in (lambda: _valid_at(ts), lambda: row_checksum(cols), lambda: _month_key(cols)):
+        build()  # warm: class and method lookups
+        sent[0] = 0
+        with monkeypatch.context() as m:
+            m.setattr(
+                py4j.clientserver.ClientServerConnection, "send_command", counting
+            )
+            build()
+        assert sent[0] <= 3

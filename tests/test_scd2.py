@@ -494,3 +494,32 @@ def test_snapshot_diff_random_histories_match_set_diff(spark, tmp_path):
                     ).collect()
                 }
                 assert got == want, (scenario, i, j)
+
+
+def test_row_checksum_values_are_pinned(spark):
+    """Stored checksums are merge identity: a row must keep its
+    checksum across releases, or the next merge closes and reopens
+    every stored row. These values were computed by the Column-built
+    expression ``sha2(concat_ws("\\x1f", coalesce(cast(c as string),
+    "\\x00<NULL>"), ...), 256)``; NULLs, dates, doubles, and strings
+    holding the separator or the NULL marker are covered."""
+    from diseasystore_spark.storage.scd2 import row_checksum
+
+    rows = [
+        ("a", 1.5, D(2020, 1, 10), None),
+        (None, None, None, None),
+        ("x\x1fy", -0.0, D(1999, 12, 31), D(2000, 1, 1)),
+        ("nul\x00<NULL>", 1e-7, None, D(2020, 2, 29)),
+        ("\x00<NULL>", 123456789.125, D(2020, 3, 1), None),
+    ]
+    df = spark.createDataFrame(
+        rows, "key_id string, n_x double, valid_from date, valid_until date"
+    )
+    got = [r["c"] for r in df.select(row_checksum(df.columns).alias("c")).collect()]
+    assert got == [
+        "8cd0ec4247c27aac9e940973c6601cc6f19f5c749731dd068193eb632a70a284",
+        "e18774307c64dff45e846456bb97afa0ddabb251528ab56c86d7e44482f4a1c2",
+        "e7c579c9b2bc1f09cfd3e4252917dcc73227bdb3b5f70a25c11e3f301407d838",
+        "713d49ef704c53f15b67c1d09176a8d9361760cd9fbf15986c82b9d330b095c1",
+        "e2e9aba4977fdd10008bc541a32b5a9da01c425eb6e91a8a7691181560385b78",
+    ]

@@ -1176,7 +1176,7 @@ def test_append_only_merge_on_packed_base_rewrites_whole_bin(spark, pstore):
     assert snap0 == {"a": 0.0, "b": 1.0, "c": 2.0}
 
 
-def test_compact_on_packed_base_counts_each_file_once(spark, pstore):
+def test_compact_on_packed_base_counts_each_file_once(spark, pstore, monkeypatch):
     """Under ``max_records_per_file``, compaction rewrites the
     oversized month and carries the packed bin by reference; the file
     count it returns lists the bin's files once, though two months
@@ -1184,6 +1184,10 @@ def test_compact_on_packed_base_counts_each_file_once(spark, pstore):
     t0, t1 = T(2024, 1, 1), T(2024, 1, 2)
     small = [("j", 1.0, D(2020, 1, 10), None), ("f", 2.0, D(2020, 2, 10), None)]
     bin1 = _packed(spark, pstore, small, t0, t1)
+    # The Jan/Feb bin's 4 rows exceed the constant, so the March merge
+    # takes the census path and rewrites March alone; at or below it,
+    # a merge rewrites its whole scope closure, the bin included.
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 3)
     pstore.update_snapshot(
         _df(spark, small + [(f"m{i}", 1.0, D(2020, 3, 10), None) for i in range(12)]),
         "ds.t",
@@ -1543,3 +1547,86 @@ def test_bin_months_takes_only_date_valid_from(tmp_path):
     stamps = footer("t", [T(2020, 1, 31, 23), T(2020, 3, 1)], pa.timestamp("us"))
     assert _bin_months([stamps]) is None
     assert _bin_months([dates, stamps]) is None
+
+
+def test_small_scoped_update_classifies_and_writes_in_one_pass(spark, pstore):
+    """A scoped update of a table of at most ``_PACK_MAX_ROWS`` rows runs
+    no census: one join classifies the scope closure's rows and the
+    write observes what changed, so the merge starts at most 5 Spark
+    jobs (the census merge started 9)."""
+    t1, t2 = T(2024, 1, 1), T(2024, 1, 2)
+    pstore.update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
+    revised = [ROWS_V1[0], ("b", 9.0, D(2020, 2, 10), D(2020, 2, 20))]
+    incoming = _df(spark, revised)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    job = scheduler.nextJobId()
+    pstore.update_snapshot(
+        incoming, "ds.t", t2, written_range=(D(2020, 1, 1), D(2020, 2, 28))
+    )
+    assert scheduler.nextJobId() - job <= 5
+    months = pstore._manifest_of("ds.t", 2)["months"]
+    assert sorted(months) == ["2020-01", "2020-02", "2020-03"]
+    assert len({tuple(fs) for fs in months.values()}) == 1
+    _assert_manifest_stats_sound(pstore, "ds.t")
+    snap2 = {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", t2).collect()}
+    assert snap2 == {"a": 1.0, "b": 9.0, "c": 3.0}
+    snap1 = {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", t1).collect()}
+    assert snap1 == {"a": 1.0, "b": 2.0, "c": 3.0}
+    assert _each_row_once(pstore) == 4
+
+
+def _segment_dirs(store):
+    return sorted(
+        d for d in os.listdir(store._table_dir("ds.t")) if d.startswith("_v")
+    )
+
+
+def test_abandoned_one_pass_merges_leave_no_segment(spark, pstore):
+    """A one-pass merge writes before it knows whether anything
+    changed: a no-op, and a clip-violating scoped merge that is redone
+    unscoped, remove their uncommitted segment."""
+    t1, t2 = T(2024, 1, 1), T(2024, 1, 2)
+    pstore.update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
+    before = _segment_dirs(pstore)
+
+    pstore.update_snapshot(
+        _df(spark, ROWS_V1[:2]), "ds.t", t2, written_range=(D(2020, 1, 1), D(2020, 2, 28))
+    )
+    assert pstore._current_version("ds.t") == 1
+    assert _segment_dirs(pstore) == before
+
+    violating = ROWS_V1[:2] + [("c", 9.0, D(2020, 3, 10), None)]
+    pstore.update_snapshot(
+        _df(spark, violating), "ds.t", t2, written_range=(D(2020, 1, 1), D(2020, 2, 28))
+    )
+    assert pstore._current_version("ds.t") == 2
+    live = {pstore._manifest_of("ds.t", v)["dir"] for v in (1, 2)}
+    assert set(_segment_dirs(pstore)) == live
+    snap2 = {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", t2).collect()}
+    assert snap2 == {"a": 1.0, "b": 2.0, "c": 9.0}
+
+
+def test_one_pass_bin_grown_past_the_constant_is_laid_out_per_month(
+    spark, pstore, monkeypatch
+):
+    """A one-pass merge does not know its row count before it writes:
+    a bin whose footers count more than ``_PACK_MAX_ROWS`` rows is
+    re-laid out per month, and its first pass is removed."""
+    monkeypatch.setattr(ParquetFeatureStore, "_PACK_MAX_ROWS", 4)
+    t1, t2 = T(2024, 1, 1), T(2024, 1, 2)
+    pstore.update_snapshot(_df(spark, ROWS_V1), "ds.t", t1)
+    grown = ROWS_V1[:2] + [
+        (k, 5.0, D(2020, 2, 11), None) for k in ("d", "e", "f")
+    ]
+    pstore.update_snapshot(
+        _df(spark, grown), "ds.t", t2, written_range=(D(2020, 1, 1), D(2020, 2, 28))
+    )
+    man = pstore._manifest_of("ds.t", 2)
+    assert sorted(man["months"]) == ["2020-01", "2020-02", "2020-03"]
+    for m, fs in man["months"].items():
+        assert all(f"/{PARTITION_COL}={m}/" in f for f in fs), (m, fs)
+    live = {pstore._manifest_of("ds.t", v)["dir"] for v in (1, 2)}
+    assert set(_segment_dirs(pstore)) == live
+    _assert_manifest_stats_sound(pstore, "ds.t")
+    snap2 = {r["key_id"]: r["v"] for r in pstore.get_table("ds.t", t2).collect()}
+    assert snap2 == {"a": 1.0, "b": 2.0, "c": 3.0, "d": 5.0, "e": 5.0, "f": 5.0}
