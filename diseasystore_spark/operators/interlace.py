@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 
 from diseasystore_spark.contract import key_columns
 from diseasystore_spark.functions.intervals import case_max, case_min
+from diseasystore_spark.trace import note
 
 VALIDITY = ("valid_from", "valid_until")
 
@@ -101,19 +102,20 @@ def width_from_stats(
     (:func:`resolve_bucket_days`) and the engine's write-time stats
     path (``storage/scd2.py`` persists these numbers with every
     version, so ``key_join_features`` decides with ZERO extra jobs).
+    The width and the statistics are noted on the open trace phase.
     """
-    if not n or not k:
-        return None
-    if n / k < auto_threshold:
-        return None
-    span = max(span_days, 1)
-    density = n / (k * span)  # rows per key per day
-    width = max(
-        AUTO_TARGET_PAIRS_PER_BUCKET ** 0.5 / max(density, 1e-9),
-        (avg_span or 0.0) / 4.0,
-        1.0,
-    )
-    return max(int(min(width, span)), 1)
+    width = None
+    if n and k and n / k >= auto_threshold:
+        span = max(span_days, 1)
+        density = n / (k * span)  # rows per key per day
+        width = max(
+            AUTO_TARGET_PAIRS_PER_BUCKET ** 0.5 / max(density, 1e-9),
+            (avg_span or 0.0) / 4.0,
+            1.0,
+        )
+        width = max(int(min(width, span)), 1)
+    note(bucket_days=width, n=n, k=k, span_days=span_days)
+    return width
 
 
 def resolve_bucket_days(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from diseasystore_spark.pipeline._util import spread
+from diseasystore_spark.trace import note
 
 
 def _tokens(text_col: str) -> Column:
@@ -225,6 +226,7 @@ def _jaccard_pairs_sized(
             .collect()[0]
         )
         est = int(est_row["est"] or 0)
+        note(density_guard_estimate=est)
         if est > DENSE_JACCARD_CANDIDATES:
             msg = (
                 f"jaccard_pairs: the exact shingle self-join would "
@@ -737,6 +739,7 @@ def containment_pairs(
             .collect()[0]["est"]
             or 0
         )
+        note(density_guard_estimate=est)
         if est > DENSE_JACCARD_CANDIDATES:
             msg = (
                 f"containment_pairs: the fingerprint self-join would "

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from diseasystore_spark.trace import note
+
 
 #: Edge-count threshold for :func:`pagerank_integer`'s ``"auto"``
 #: iteration strategy: above it the mirrored edge list is persisted
@@ -131,11 +133,11 @@ def pagerank_integer(
     ).localCheckpoint()
     if iteration_strategy == "auto":
         # one aggregate over the just-materialized blocks — no rescan
+        n_edges = e.count()
         iteration_strategy = (
-            "persist"
-            if e.count() > PAGERANK_PERSIST_EDGE_ROWS
-            else "checkpoint"
+            "persist" if n_edges > PAGERANK_PERSIST_EDGE_ROWS else "checkpoint"
         )
+        note(iteration_strategy=iteration_strategy, edges=n_edges)
     if iteration_strategy == "persist":
         from pyspark import StorageLevel
 

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from diseasystore_spark.pipeline._util import spread
+from diseasystore_spark.trace import note
 
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "that", "it", "for"]
 
@@ -1718,6 +1719,7 @@ def keyword_spans(
             if len(terms) >= KEYWORD_AUTOMATON_MIN_TERMS
             else "codegen"
         )
+        note(keyword_engine=engine, terms=len(terms))
     if engine == "automaton":
         return _keyword_spans_automaton(
             df, terms, id_col, text_col, case_insensitive

@@ -47,6 +47,7 @@ from diseasystore_spark.storage.scd2 import (
     ParquetFeatureStore,
     normalize_slice_ts,
 )
+from diseasystore_spark.trace import phase
 
 DateRange = tuple[datetime.date, datetime.date]
 
@@ -266,6 +267,7 @@ class Diseasystore:
         return h
 
     # -------------------------------------------------------- get_feature
+    @phase("store.get_feature")
     def get_feature(
         self,
         feature: str,
@@ -296,10 +298,10 @@ class Diseasystore:
 
         feature_loader = self.ds_map[feature]
         target_table = f"{self.target_schema}.{feature_loader}"
-
-        missing = self.determine_missing_ranges(
-            target_table, start_date, end_date, slice_ts
-        )
+        with phase("store.missing_ranges", table=target_table):
+            missing = self.determine_missing_ranges(
+                target_table, start_date, end_date, slice_ts
+            )
         if missing:
             self.backend.lock(
                 target_table,
@@ -324,17 +326,18 @@ class Diseasystore:
             finally:
                 self.backend.unlock(target_table)
 
-        out = self.handler(feature_loader).read(
-            self,
-            target_table,
-            slice_ts,
-            max_valid_from=end_date,
-            # sound because of the overlap clip right below: months
-            # whose every row closed at-or-before start_date hold
-            # nothing the clip keeps (pruned by the manifest's file
-            # stats records)
-            min_valid_until=start_date,
-        )
+        with phase("store.read"):
+            out = self.handler(feature_loader).read(
+                self,
+                target_table,
+                slice_ts,
+                max_valid_from=end_date,
+                # sound because of the overlap clip right below: months
+                # whose every row closed at-or-before start_date hold
+                # nothing the clip keeps (pruned by the manifest's file
+                # stats records)
+                min_valid_until=start_date,
+            )
         # Clip to the study period. The reference theta-joins a 1-row
         # bounds table (``:259-269``); a literal filter is semantically
         # identical and lets Catalyst push the predicate to the scan.
@@ -356,21 +359,20 @@ class Diseasystore:
         reaches by re-including the current out-of-range rows into the
         compared frame (``:195-212``), without re-reading the table on
         every write."""
-        computed = self.handler(feature_loader).compute(
-            start_date=range_start,
-            end_date=range_end,
-            slice_ts=slice_ts,
-            source_conn=self.source_conn,
-            ds=self,
-        )
+        with phase("store.compute", range=f"{range_start}..{range_end}"):
+            computed = self.handler(feature_loader).compute(
+                start_date=range_start,
+                end_date=range_end,
+                slice_ts=slice_ts,
+                source_conn=self.source_conn,
+                ds=self,
+            )
         message = f"ds-range: {range_start} - {range_end}"
         try:
-            self.backend.update_snapshot(
-                computed,
-                target_table,
-                slice_ts,
-                written_range=(range_start, range_end),
-            )
+            with phase("store.write"):
+                self.backend.update_snapshot(
+                    computed, target_table, slice_ts, (range_start, range_end)
+                )
         except Exception:
             self.backend.append_log(
                 self.target_schema, target_table, slice_ts, message, success=False
@@ -381,6 +383,7 @@ class Diseasystore:
         )
 
     # ------------------------------------------------- key_join_features
+    @phase("store.key_join")
     def key_join_features(
         self,
         observable: str,
@@ -414,10 +417,11 @@ class Diseasystore:
         # ``R/DiseasystoreBase.R:303``).
         until_date = end_date + datetime.timedelta(days=1)
 
-        observable_data = self.get_feature(observable, start_date, end_date)
-        observable_data = clamp_to_study_period(
-            observable_data, start_date, until_date
-        )
+        with phase("key_join.feature_reads", observable=observable):
+            observable_data = self.get_feature(observable, start_date, end_date)
+            observable_data = clamp_to_study_period(
+                observable_data, start_date, until_date
+            )
 
         # Warn when a *computed* stratification collides with an existing
         # column (``:331-345`` — warning, not error).
@@ -452,13 +456,14 @@ class Diseasystore:
             if any(n in self.available_observables for n in strat_exprs):
                 raise ValueError("Stratification features cannot be observables")
 
-            for feat in stratification_features:
-                if feat in observable_data.columns:
-                    continue  # already present on the observable (``:383``)
-                feat_df = self.get_feature(feat, start_date, end_date)
-                strat_data.append(
-                    clamp_to_study_period(feat_df, start_date, until_date)
-                )
+            with phase("key_join.feature_reads"):
+                for feat in stratification_features:
+                    if feat in observable_data.columns:
+                        continue  # already present on the observable (``:383``)
+                    feat_df = self.get_feature(feat, start_date, end_date)
+                    strat_data.append(
+                        clamp_to_study_period(feat_df, start_date, until_date)
+                    )
 
         # ``interlace_bucket_days`` (scoped option, default "auto")
         # governs the interlace containment joins: "auto" switches to
@@ -470,59 +475,63 @@ class Diseasystore:
         # (``storage/scd2.py:_write_stats`` — the ANALYZE analog), so
         # it costs ZERO query-time jobs; only a table missing stats
         # falls back to the one-job live probe. An int forces that
-        # width; None forces the plain sort-merge path.
-        bucket_days = diseasyoption(
-            "interlace_bucket_days", self, default="auto"
-        )
-        auto_threshold = diseasyoption(
-            "interlace_auto_threshold", self, default=2000.0
-        )
-        if bucket_days == "auto" and strat_data:
-            stats = [
-                self.backend.table_stats(
-                    f"{self.target_schema}.{ds_map[f]}"
-                )
-                for f in [observable, *stratification_features]
-            ]
-            if all(s is not None for s in stats):
-                from diseasystore_spark.operators.interlace import (
-                    width_from_stats,
-                )
-
-                bucket_days = width_from_stats(
-                    sum(s["n"] for s in stats),
-                    max(s["k"] for s in stats),
-                    max(s["span_days"] for s in stats),
-                    max(s["avg_span"] for s in stats),
-                    auto_threshold,
-                )
-        out = (
-            truncate_interlace(
-                observable_data,
-                strat_data,
-                bucket_days=bucket_days,
-                auto_threshold=auto_threshold,
+        # width; None forces the plain sort-merge path. The auto path's
+        # ``width_from_stats`` notes the width and its statistics on
+        # the open trace phase.
+        with phase("key_join.interlace"):
+            bucket_days = diseasyoption(
+                "interlace_bucket_days", self, default="auto"
             )
-            if strat_data
-            else observable_data
-        )
+            auto_threshold = diseasyoption(
+                "interlace_auto_threshold", self, default=2000.0
+            )
+            if bucket_days == "auto" and strat_data:
+                stats = [
+                    self.backend.table_stats(
+                        f"{self.target_schema}.{ds_map[f]}"
+                    )
+                    for f in [observable, *stratification_features]
+                ]
+                if all(s is not None for s in stats):
+                    from diseasystore_spark.operators.interlace import (
+                        width_from_stats,
+                    )
+
+                    bucket_days = width_from_stats(
+                        sum(s["n"] for s in stats),
+                        max(s["k"] for s in stats),
+                        max(s["span_days"] for s in stats),
+                        max(s["avg_span"] for s in stats),
+                        auto_threshold,
+                    )
+            out = (
+                truncate_interlace(
+                    observable_data,
+                    strat_data,
+                    bucket_days=bucket_days,
+                    auto_threshold=auto_threshold,
+                )
+                if strat_data
+                else observable_data
+            )
 
         # Store-specific de-double-counting hook (``:775-779`` default).
-        out = self.key_join_filter(
-            out, stratification_features, start_date, end_date
-        )
+        with phase("key_join.filter_cache"):
+            out = self.key_join_filter(
+                out, stratification_features, start_date, end_date
+            )
 
-        # Materialization point (S8): the filtered/interlaced frame is
-        # consumed three times downstream (t_add, t_remove, distinct
-        # strata) — cache it so the interlace joins run once. Mirrors
-        # the reference's ``dplyr::compute`` at ``:413/:459/:467``.
-        # The calling THREAD's previous cache is released here (its
-        # result, once collected, no longer needs it), so a long-lived
-        # store pins at most one interlaced frame per thread in
-        # executor storage — and the conformance matrix's concurrent
-        # construction cannot unpersist a sibling cell's live frame
-        # (refcounted by plan hash; cache() happens inside).
-        self._register_cache(out)
+            # Materialization point (S8): the filtered/interlaced frame is
+            # consumed three times downstream (t_add, t_remove, distinct
+            # strata) — cache it so the interlace joins run once. Mirrors
+            # the reference's ``dplyr::compute`` at ``:413/:459/:467``.
+            # The calling THREAD's previous cache is released here (its
+            # result, once collected, no longer needs it), so a long-lived
+            # store pins at most one interlaced frame per thread in
+            # executor storage — and the conformance matrix's concurrent
+            # construction cannot unpersist a sibling cell's live frame
+            # (refcounted by plan hash; cache() happens inside).
+            self._register_cache(out)
 
         # Aggregator compatibility (``:427-438``).
         aggregators = [self.handler(ds_map[observable]).key_join]
@@ -550,15 +559,16 @@ class Diseasystore:
                     f"{', '.join(self.available_stratifications)}"
                 ) from e
 
-        return delta_count_prevalence(
-            out,
-            resolved,
-            observable,
-            aggregator,
-            self.spark,
-            start_date,
-            end_date,
-        )
+        with phase("key_join.delta_count"):
+            return delta_count_prevalence(
+                out,
+                resolved,
+                observable,
+                aggregator,
+                self.spark,
+                start_date,
+                end_date,
+            )
 
     # Overridable hook (P6) — identity by default.
     def key_join_filter(

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from diseasystore_spark.trace import phase
+
 
 def read_csv_source(
     spark: SparkSession,
@@ -21,7 +23,8 @@ def read_csv_source(
         reader = reader.schema(schema)
     else:
         reader = reader.option("inferSchema", True)
-    df = reader.csv(path)
+    with phase("source.read_csv"):  # schema inference runs a job
+        df = reader.csv(path)
     if n_max is not None:
         df = df.limit(n_max)
     return df

@@ -129,6 +129,7 @@ from diseasystore_spark.storage.backends import (
     LocalCommitBackend,
     MemoryCommitBackend,
 )
+from diseasystore_spark.trace import phase
 
 LOGS_TABLE = "logs"
 
@@ -1381,19 +1382,17 @@ class ParquetFeatureStore:
                     "until_ts": F.lit(None).cast("timestamp"),
                 }
             )
-            self._write_version(
-                new_table, table_id, changed_months=None, base_version=None
-            )
+            with phase("scd2.cold_write", table=table_id):
+                self._write_version(
+                    new_table, table_id, changed_months=None, base_version=None
+                )
             return
 
-        self._merge_existing(
-            incoming,
-            table_id,
-            ts,
-            written_range if close_absent else None,
-            base,
-            close_absent,
-        )
+        scope = written_range if close_absent else None
+        with phase("scd2.merge", table=table_id, scoped=scope is not None):
+            self._merge_existing(
+                incoming, table_id, ts, scope, base, close_absent
+            )
 
     def _merge_existing(
         self,
@@ -1692,9 +1691,10 @@ class ParquetFeatureStore:
 
         def segment(frame: DataFrame, per_month: bool, cold: bool):
             segments.append(f"_v{version}-{uuid.uuid4().hex[:8]}")
-            return self._write_segment(
-                frame, tdir, segments[-1], per_month, cold
-            )
+            with phase("scd2.segment_write", per_month=per_month):
+                return self._write_segment(
+                    frame, tdir, segments[-1], per_month, cold
+                )
 
         try:
             per_month = rows is not None and rows > self._PACK_MAX_ROWS
@@ -1709,9 +1709,11 @@ class ParquetFeatureStore:
                         return False
                     if months is not None:
                         months = sorted({*months, *reached})
-                footers = {
-                    r: pq.read_metadata(os.path.join(tdir, r)) for r in written
-                }
+                with phase("scd2.footer_stats"):
+                    footers = {
+                        r: pq.read_metadata(os.path.join(tdir, r))
+                        for r in written
+                    }
                 if months is None:
                     months = _bin_months(footers.values())
                 n = sum(md.num_rows for md in footers.values())
@@ -1728,35 +1730,38 @@ class ParquetFeatureStore:
                     written = {m: written for m in months}
             inherited = base["file_stats"] if base is not None else {}
             body = {"months": carried | written}
-            file_stats = {
-                r: inherited[r]
-                if r in inherited
-                else _file_record(
-                    footers[r]
-                    if r in footers
-                    else pq.read_metadata(os.path.join(tdir, r))
+            with phase("scd2.footer_stats"):
+                file_stats = {
+                    r: inherited[r]
+                    if r in inherited
+                    else _file_record(
+                        footers[r]
+                        if r in footers
+                        else pq.read_metadata(os.path.join(tdir, r))
+                    )
+                    for r in self._manifest_refs(body)
+                }
+                table_stats = self._write_stats(
+                    [os.path.join(tdir, r) for r in file_stats],
+                    new_table.columns,
+                    sum(rec["rows"] for rec in file_stats.values()),
                 )
-                for r in self._manifest_refs(body)
-            }
             manifest = {
                 "version": version,
                 "dir": segments[-1],
                 **body,
                 "file_stats": file_stats,
             }
-            table_stats = self._write_stats(
-                [os.path.join(tdir, r) for r in file_stats],
-                new_table.columns,
-                sum(rec["rows"] for rec in file_stats.values()),
-            )
             if table_stats is not None:
                 manifest["table_stats"] = table_stats
         except BaseException:
             for d in segments:
                 shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
             raise
+        added = len(file_stats.keys() - inherited.keys())
         try:
-            self._commit_version(table_id, version, manifest)
+            with phase("scd2.commit", version=version, files_added=added):
+                self._commit_version(table_id, version, manifest)
         except CommitConflictError:
             shutil.rmtree(os.path.join(tdir, segments[-1]), ignore_errors=True)
             raise

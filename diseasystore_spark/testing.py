@@ -37,7 +37,9 @@ Checks ported (reference line citations inline):
 
 from __future__ import annotations
 
+import contextlib
 import datetime
+from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,13 +50,13 @@ from diseasystore_spark.contract import validate_feature_frame
 from diseasystore_spark.functions.intervals import overlaps_study_period
 from diseasystore_spark.plans.store import Diseasystore
 from diseasystore_spark.storage.scd2 import row_checksum
+from diseasystore_spark.trace import carry, phase
 
 
 def _sorted_checksums(df: DataFrame) -> list[str]:
-    return sorted(
-        r["checksum"]
-        for r in df.select(row_checksum(df.columns).alias("checksum")).collect()
-    )
+    with phase("conformance.checksums"):
+        rows = df.select(row_checksum(df.columns).alias("checksum")).collect()
+    return sorted(r["checksum"] for r in rows)
 
 
 def run_conformance_suite(
@@ -62,47 +64,39 @@ def run_conformance_suite(
     test_start_date: datetime.date,
     strat_samples: dict[str, Any] | None = None,
     skip_key_join: bool = False,
-    timings: dict[str, float] | None = None,
 ) -> list[str]:
     """Run the conformance checks against an initialized store.
 
     ``strat_samples`` optionally maps stratification names to the
     stratification argument used in the matrix (default: the plain
-    feature name). Returns the list of check labels that ran.
-    ``timings``, when a dict is passed, receives per-phase wall
-    seconds keyed by the check label — the profiling hook
-    ``scripts/profile_conformance.py`` uses.
+    feature name). Returns the list of check labels that ran. Each
+    check is one trace phase, ``conformance.<label>``
+    (``diseasystore_spark.trace``), its pooled workers included.
     """
-    import time as _time
+    ran: list[str] = []
 
-    _t0 = _time.perf_counter()
+    @contextlib.contextmanager
+    def check(label: str) -> Iterator[None]:
+        with phase(f"conformance.{label}"):
+            yield
+        ran.append(label)
 
-    class _TimedLabels(list):
-        def append(self, label: str) -> None:  # type: ignore[override]
-            nonlocal _t0
-            now = _time.perf_counter()
-            if timings is not None:
-                timings[label] = round(now - _t0, 3)
-            _t0 = now
-            super().append(label)
-
-    ran: list[str] = _TimedLabels()
     test_end_date = test_start_date + datetime.timedelta(days=4)
     sc = store.spark.sparkContext
     cached_before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
 
     # 1. handler well-formedness (+ min/max bounds sanity, :196-199)
-    for feature, loader in store.ds_map.items():
-        handler = store.handler(loader)
-        assert callable(handler.compute), f"{feature}: compute not callable"
-        assert callable(handler.key_join), f"{feature}: key_join not callable"
-        assert handler.get is None or callable(handler.get), (
-            f"{feature}: get not callable"
-        )
-    today = datetime.date.today()
-    for bound in (store.min_start_date, store.max_end_date):
-        assert bound is None or bound <= today, f"future store bound: {bound}"
-    ran.append("handlers-well-formed")
+    with check("handlers-well-formed"):
+        for feature, loader in store.ds_map.items():
+            handler = store.handler(loader)
+            assert callable(handler.compute), f"{feature}: compute not callable"
+            assert callable(handler.key_join), f"{feature}: key_join not callable"
+            assert handler.get is None or callable(handler.get), (
+                f"{feature}: get not callable"
+            )
+        today = datetime.date.today()
+        for bound in (store.min_start_date, store.max_end_date):
+            assert bound is None or bound <= today, f"future store bound: {bound}"
 
     # Phases 2-5 run one worker per LOADER (round 12): different
     # features of one loader share a table — the first get_feature
@@ -141,7 +135,7 @@ def run_conformance_suite(
         with ThreadPoolExecutor(
             max_workers=min(8, max(1, len(by_loader)))
         ) as pool:
-            for pairs in pool.map(_group, by_loader.items()):
+            for pairs in pool.map(carry(_group), by_loader.items()):
                 results.update(pairs)
         return [(f, results[f]) for f in store.ds_map]
 
@@ -182,23 +176,25 @@ def run_conformance_suite(
         )
         return out_of_bounds, schema, bad, got_sums, ref_sums, missing
 
-    for feature, r in _pooled_by_loader(_feature_checks):
-        out_of_bounds, schema, bad, got_sums, ref_sums, missing = r
-        assert out_of_bounds == 0, (
-            f"Feature `{feature}` returns data outside the study period."
-        )
-        for c in ("valid_from", "valid_until"):
-            assert isinstance(schema[c], T.DateType), (
-                f"Feature `{feature}` has a non-Date `{c}` column."
+    with check("golden-equality+contract+memoization"):
+        for feature, r in _pooled_by_loader(_feature_checks):
+            out_of_bounds, schema, bad, got_sums, ref_sums, missing = r
+            assert out_of_bounds == 0, (
+                f"Feature `{feature}` returns data outside the study period."
             )
-        assert bad == 0, f"Feature `{feature}` violates validity ordering."
-        assert got_sums == ref_sums, (
-            f"Feature `{feature}` mismatch between get_feature and compute."
-        )
-        assert missing == [], (
-            f"missing ranges remain for `{feature}` after computation"
-        )
-    ran.append("golden-equality+contract+memoization")
+            for c in ("valid_from", "valid_until"):
+                assert isinstance(schema[c], T.DateType), (
+                    f"Feature `{feature}` has a non-Date `{c}` column."
+                )
+            assert bad == 0, (
+                f"Feature `{feature}` violates validity ordering."
+            )
+            assert got_sums == ref_sums, (
+                f"Feature `{feature}` mismatch between get_feature and compute."
+            )
+            assert missing == [], (
+                f"missing ranges remain for `{feature}` after computation"
+            )
 
     # 5. extended range
     extended_end = test_start_date + datetime.timedelta(days=9)
@@ -215,13 +211,13 @@ def run_conformance_suite(
         ).where(overlaps_study_period(test_start_date, extended_end))
         return _sorted_checksums(got), _sorted_checksums(reference)
 
-    for feature, (got_sums, ref_sums) in _pooled_by_loader(
-        _extension_checks
-    ):
-        assert got_sums == ref_sums, (
-            f"Feature `{feature}` mismatch after range extension."
-        )
-    ran.append("extension-equality")
+    with check("extension-equality"):
+        for feature, (got_sums, ref_sums) in _pooled_by_loader(
+            _extension_checks
+        ):
+            assert got_sums == ref_sums, (
+                f"Feature `{feature}` mismatch after range extension."
+            )
 
     # 6. key_join matrix: the reference's exhaustive expand.grid sweep
     # (:545-573). Failures must be GRACEFUL — a ValueError inside the
@@ -285,54 +281,54 @@ def run_conformance_suite(
             ).first()
             return observable, strat, b, caught, None
 
-        results = []
-        if combos:
-            with _warnings.catch_warnings():
-                _warnings.simplefilter("always")
-                _warnings.showwarning = _route_warning
-                with ThreadPoolExecutor(
-                    max_workers=min(8, len(combos))
-                ) as pool:
-                    results = list(pool.map(_cell, combos))
-        for observable, strat, b, caught, err in results:
-            if err is not None:
-                assert str(err) == _AGG_MISMATCH, (
-                    f"non-graceful matrix failure for ({observable}, "
-                    f"{strat}): {err}"
-                )
-                continue
-            for message, category in caught:
-                # Interpreter noise (e.g. py4j socket
-                # ResourceWarnings) is not part of the contract —
-                # only the engine's own UserWarnings are.
-                if not issubclass(category, UserWarning):
+        with check("key-join-matrix"):
+            results = []
+            if combos:
+                with _warnings.catch_warnings():
+                    _warnings.simplefilter("always")
+                    _warnings.showwarning = _route_warning
+                    with ThreadPoolExecutor(
+                        max_workers=min(8, len(combos))
+                    ) as pool:
+                        results = list(pool.map(carry(_cell), combos))
+            for observable, strat, b, caught, err in results:
+                if err is not None:
+                    assert str(err) == _AGG_MISMATCH, (
+                        f"non-graceful matrix failure for ({observable}, "
+                        f"{strat}): {err}"
+                    )
                     continue
-                assert "Observable already stratified by" in str(
-                    message
-                ), (
-                    f"unexpected warning for ({observable}, {strat}): "
-                    f"{message}"
-                )
-            assert b["mn"] == test_start_date, (observable, strat)
-            assert b["mx"] == extended_end, (observable, strat)
-        ran.append("key-join-matrix")
+                for message, category in caught:
+                    # Interpreter noise (e.g. py4j socket
+                    # ResourceWarnings) is not part of the contract —
+                    # only the engine's own UserWarnings are.
+                    if not issubclass(category, UserWarning):
+                        continue
+                    assert "Observable already stratified by" in str(
+                        message
+                    ), (
+                        f"unexpected warning for ({observable}, {strat}): "
+                        f"{message}"
+                    )
+                assert b["mn"] == test_start_date, (observable, strat)
+                assert b["mx"] == extended_end, (observable, strat)
 
         # 8. feature-independent stratification (:583-610): constant
         # expressions become output columns with exactly those values.
         if store.available_observables:
-            out = store.key_join_features(
-                store.available_observables[0],
-                {"string": "'test'", "number": "2"},
-                test_start_date,
-                extended_end,
-            )
-            consts = (
-                out.select("string", "number").distinct().collect()
-            )
-            assert len(consts) == 1, "constant strata must be constant"
-            assert consts[0]["string"] == "test", consts
-            assert int(consts[0]["number"]) == 2, consts
-            ran.append("feature-independent-stratification")
+            with check("feature-independent-stratification"):
+                out = store.key_join_features(
+                    store.available_observables[0],
+                    {"string": "'test'", "number": "2"},
+                    test_start_date,
+                    extended_end,
+                )
+                consts = (
+                    out.select("string", "number").distinct().collect()
+                )
+                assert len(consts) == 1, "constant strata must be constant"
+                assert consts[0]["string"] == "test", consts
+                assert int(consts[0]["number"]) == 2, consts
 
         # 9. graceful failure on malformed stratifications (:614-677):
         # both the bare-name and the named-expression forms, for every
@@ -360,41 +356,40 @@ def run_conformance_suite(
             return observable, strat, None
 
         if fail_combos:
-            with ThreadPoolExecutor(
-                max_workers=min(8, len(fail_combos))
-            ) as pool:
-                for observable, strat, err in pool.map(
-                    _expect_failure, fail_combos
-                ):
-                    assert err is not None, (
-                        f"({observable}, {strat}) should have failed"
-                    )
-                    assert "Stratification could not be computed" in str(
-                        err
-                    ), (
-                        f"wrong graceful-failure message for ({observable}, "
-                        f"{strat}): {err}"
-                    )
-        if store.available_observables:
-            ran.append("graceful-failure-messages")
+            with check("graceful-failure-messages"):
+                with ThreadPoolExecutor(
+                    max_workers=min(8, len(fail_combos))
+                ) as pool:
+                    for observable, strat, err in pool.map(
+                        carry(_expect_failure), fail_combos
+                    ):
+                        assert err is not None, (
+                            f"({observable}, {strat}) should have failed"
+                        )
+                        assert "Stratification could not be computed" in (
+                            str(err)
+                        ), (
+                            "wrong graceful-failure message for "
+                            f"({observable}, {strat}): {err}"
+                        )
 
     # 7. cached-plan hygiene (the reference's temp-table leak check,
     # :157-161): everything the suite persisted must be releasable —
     # only caches that existed before the suite may remain.
-    store.release_cached_plans()
-    cached_after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    leaked = cached_after - cached_before
-    if leaked:
-        # Grace for asynchronous block removal (unpersist of plans
-        # this store does not own — e.g. a query's localCheckpoint
-        # being GC'd — completes off-thread): a REAL leak survives
-        # the re-check.
-        import time as _time
-
-        _time.sleep(2.0)
+    with check("cached-plan-hygiene"):
+        store.release_cached_plans()
         cached_after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
         leaked = cached_after - cached_before
-    assert not leaked, f"conformance suite leaked cached plans: {leaked}"
-    ran.append("cached-plan-hygiene")
+        if leaked:
+            # Grace for asynchronous block removal (unpersist of plans
+            # this store does not own — e.g. a query's localCheckpoint
+            # being GC'd — completes off-thread): a REAL leak survives
+            # the re-check.
+            import time as _time
+
+            _time.sleep(2.0)
+            cached_after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+            leaked = cached_after - cached_before
+        assert not leaked, f"conformance suite leaked cached plans: {leaked}"
 
     return ran

@@ -17,7 +17,9 @@ Three timed phases:
 Also verifies (hard facts, not timings): after the scoped merge every
 untouched month's manifest entry is the SAME file reference list as
 the previous version's (zero bytes rewritten), and the changed
-month's is not.
+month's is not. Each timed phase runs in a trace scope
+(``diseasystore_spark.trace``); ``<phase>_phases`` maps each engine
+phase path under it to its summed wall seconds and Spark jobs.
 
 Usage: python scripts/bench_scd2_merge.py [rows] [out_json]
 """
@@ -37,6 +39,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from diseasystore_spark import trace  # noqa: E402
+
 T = datetime.datetime
 D = datetime.date
 
@@ -44,6 +48,14 @@ D = datetime.date
 def month_refs(store, tid: str, version: int) -> dict[str, set[str]]:
     manifest = store._manifest_of(tid, version)
     return {m: set(fs) for m, fs in manifest["months"].items()}
+
+
+def phases(records: list[trace.Record]) -> dict[str, list]:
+    out: dict[str, list] = {}
+    for r in records:
+        wall, jobs = out.get(r.path, (0.0, 0))
+        out[r.path] = [round(wall + r.wall_s, 2), jobs + r.jobs]
+    return out
 
 
 def main() -> None:
@@ -87,9 +99,11 @@ def main() -> None:
 
     out: dict[str, object] = {"rows": n_rows, "months": 24}
 
-    t0 = time.perf_counter()
-    store.update_snapshot(frame(None), tid, T(2024, 1, 1))
-    out["initial_write_s"] = round(time.perf_counter() - t0, 2)
+    with trace.collect() as records:
+        t0 = time.perf_counter()
+        store.update_snapshot(frame(None), tid, T(2024, 1, 1))
+        out["initial_write_s"] = round(time.perf_counter() - t0, 2)
+    out["initial_write_phases"] = phases(records)
     v1_refs = month_refs(store, tid, 1)
 
     # scoped: June 2020 (__m == 5) rows revised. The written_range
@@ -100,12 +114,14 @@ def main() -> None:
     # partition may be rewritten; months 7-24 must be carried forward
     # by reference without being read at all.
     june = frame(5).where(F.col("valid_from") <= F.lit(D(2020, 6, 30)))
-    t0 = time.perf_counter()
-    store.update_snapshot(
-        june, tid, T(2024, 2, 1),
-        written_range=(D(2020, 1, 1), D(2020, 6, 30)),
-    )
-    out["scoped_merge_s"] = round(time.perf_counter() - t0, 2)
+    with trace.collect() as records:
+        t0 = time.perf_counter()
+        store.update_snapshot(
+            june, tid, T(2024, 2, 1),
+            written_range=(D(2020, 1, 1), D(2020, 6, 30)),
+        )
+        out["scoped_merge_s"] = round(time.perf_counter() - t0, 2)
+    out["scoped_merge_phases"] = phases(records)
     v2_refs = month_refs(store, tid, 2)
 
     untouched = [m for m in v1_refs if m != "2020-06"]
@@ -119,9 +135,11 @@ def main() -> None:
     assert v2_refs["2020-06"] != v1_refs["2020-06"]
 
     # unscoped: the same change shape as a full-table snapshot
-    t0 = time.perf_counter()
-    store.update_snapshot(frame(11), tid, T(2024, 3, 1))
-    out["unscoped_merge_s"] = round(time.perf_counter() - t0, 2)
+    with trace.collect() as records:
+        t0 = time.perf_counter()
+        store.update_snapshot(frame(11), tid, T(2024, 3, 1))
+        out["unscoped_merge_s"] = round(time.perf_counter() - t0, 2)
+    out["unscoped_merge_phases"] = phases(records)
 
     out["scoped_speedup"] = round(
         out["unscoped_merge_s"] / out["scoped_merge_s"], 2
