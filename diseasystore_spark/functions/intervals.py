@@ -17,6 +17,19 @@ import datetime
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _lit_sql(v: datetime.date) -> str:
+    """The SQL literal of ``F.lit(v)``: a DATE for a date; for a
+    datetime the instant PySpark's converter reads (a naive one in the
+    Python process's local time zone), written in UTC with an explicit
+    zone so the session time zone does not move it."""
+    if not isinstance(v, datetime.datetime):
+        return f"DATE'{v.isoformat()}'"
+    micros = T.TimestampType().toInternal(v)
+    utc = datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=micros)
+    return f"TIMESTAMP'{utc.isoformat(sep=' ')}Z'"
 
 
 def case_max(a: Column, b: Column) -> Column:
@@ -44,6 +57,11 @@ def overlaps_study_period(
     Expressed as a plain filter (the reference used a 1-row join only
     for SQLite date-affinity reasons); Catalyst pushes it to the scan.
     """
+    if isinstance(start_date, datetime.date) and isinstance(end_date, datetime.date):
+        start, end = _lit_sql(start_date), _lit_sql(end_date)
+        return F.expr(
+            f"valid_from <= {end} AND (valid_until > {start} OR valid_until IS NULL)"
+        )
     start = F.lit(start_date) if isinstance(start_date, datetime.date) else start_date
     end = F.lit(end_date) if isinstance(end_date, datetime.date) else end_date
     return (F.col("valid_from") <= end) & (
@@ -69,10 +87,15 @@ def clamp_to_study_period(
     fidelity; literals are the idiomatic (and pushdown-friendly) Spark
     equivalent.
     """
-    start, until = F.lit(start_date), F.lit(until_date)
+    start, until = _lit_sql(start_date), _lit_sql(until_date)
     return df.withColumns(
         {
-            "valid_from": case_max(F.col("valid_from"), start),
-            "valid_until": F.coalesce(case_min(F.col("valid_until"), until), until),
+            "valid_from": F.expr(
+                f"CASE WHEN valid_from >= {start} THEN valid_from ELSE {start} END"
+            ),
+            "valid_until": F.expr(
+                f"coalesce(CASE WHEN valid_until <= {until} THEN valid_until "
+                f"ELSE {until} END, {until})"
+            ),
         }
     )

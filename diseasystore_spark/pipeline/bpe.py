@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from diseasystore_spark.pipeline._util import tokens_sql
+
 __all__ = ["bpe_train", "bpe_encode", "word_frequencies"]
 
 _EOW = "</w>"
@@ -49,15 +51,9 @@ def word_frequencies(
 ) -> DataFrame:
     """Distinct-word frequency table: (word, freq). One corpus scan,
     one map-side-combinable shuffle; the output is vocabulary-sized."""
+    words = tokens_sql(text_col, drop_empty=True)
     return (
-        df.select(
-            F.explode(
-                F.filter(
-                    F.split(F.trim(F.col(text_col)), r"\s+"),
-                    lambda w: w != "",
-                )
-            ).alias("word")
-        )
+        df.select(F.expr(f"explode({words}) AS word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )

@@ -30,12 +30,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from diseasystore_spark.pipeline._util import spread
+from diseasystore_spark.pipeline._util import gram_key, ngrams_sql, spread, tokens_sql
 from diseasystore_spark.trace import note
-
-
-def _tokens(text_col: str) -> Column:
-    return F.split(F.trim(F.col(text_col)), r"\s+")
 
 
 #: Modulus for the portable double-hash family: the Mersenne prime
@@ -43,31 +39,6 @@ def _tokens(text_col: str) -> Column:
 #: max(a + 15b) < 2^35, so the arithmetic never overflows a 64-bit
 #: signed integer in any engine.
 _PORTABLE_P = 2147483647
-
-
-def _ngram_sql(text_col: str, n: int) -> str:
-    """SQL-string form of the word n-gram shingle expression."""
-    toks = f"split(trim({text_col}), '\\\\s+')"
-    if n == 1:
-        return toks
-    # size(w) < n must yield []: sequence(1, 0) is DESCENDING ([1, 0])
-    # in Spark, and slice(w, 0, n) throws — guard, don't clamp.
-    return (
-        f"flatten(transform(array({toks}), w -> "
-        f"if(size(w) < {n}, cast(array() as array<string>), "
-        f"transform(sequence(1, size(w) - {n - 1}), "
-        f"i -> concat_ws(' ', slice(w, i, {n}))))))"
-    )
-
-
-def word_ngrams(text_col: str, n: int) -> Column:
-    """Word n-gram shingles as an array column (JVM-side lambda).
-
-    Tokenization happens once per row: the token array is bound as a
-    lambda variable via a single-element ``transform`` + ``flatten``
-    so codegen does not re-split the text per n-gram position.
-    """
-    return F.expr(_ngram_sql(text_col, n))
 
 
 def exact_dup_groups(
@@ -93,13 +64,9 @@ def _shingle_rows(
     ``.distinct()`` after it would shuffle the whole exploded shingle
     table (~50x the corpus row count) for a result that is by
     construction already unique per document."""
-    df = spread(df)
-    return (
-        df.select(
-            F.col(id_col),
-            F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("shingle"),
-        )
-        .where(F.col("shingle") != "")
+    grams = ngrams_sql(text_col, n, distinct=True, drop_empty=True)
+    return spread(df).select(
+        F.col(id_col), F.expr(f"explode({grams}) AS shingle")
     )
 
 
@@ -190,8 +157,7 @@ def _jaccard_pairs_sized(
     sel = [
         F.col(id_col),
         F.expr(
-            f"transform(array_remove(array_distinct("
-            f"{_ngram_sql(text_col, n)}), ''), s -> xxhash64(s))"
+            ngrams_sql(text_col, n, distinct=True, drop_empty=True, key="xxhash64")
         ).alias("_sh"),
     ]
     if df_weight_col is not None:
@@ -339,7 +305,7 @@ def minhash_signatures(
     ex = df.select(
         F.col(id_col),
         F.expr(
-            f"explode(array_remove(array_distinct({_ngram_sql(text_col, n)}), ''))"
+            f"explode({ngrams_sql(text_col, n, distinct=True, drop_empty=True)})"
         ).alias("_s"),
     )
     # Each signature is ONE SQL expression: Column calls cost a Py4J
@@ -799,10 +765,8 @@ def benchmark_ngram_keys(
     ``localCheckpoint`` it) when screening many batches/streams
     against the same benchmark; pass via ``benchmark_keys``. The
     ``n``/``portable`` settings must match the screening call."""
-    key_sql = "md5(g)" if portable else "xxhash64(g)"
-    grams = (
-        f"transform(filter(array_distinct({_ngram_sql(text_col, n)}), "
-        f"g -> g != ''), g -> {key_sql})"
+    grams = ngrams_sql(
+        text_col, n, distinct=True, drop_empty=True, key=gram_key(portable)
     )
     return (
         spread(benchmark)
@@ -849,10 +813,8 @@ def ngram_decontaminate(
     streaming path (``stream_decontaminate_against_benchmark``)."""
     if (benchmark is None) == (benchmark_keys is None):
         raise ValueError("pass exactly one of benchmark or benchmark_keys")
-    key_sql = "md5(g)" if portable else "xxhash64(g)"
-    grams = (
-        f"transform(filter(array_distinct({_ngram_sql(text_col, n)}), "
-        f"g -> g != ''), g -> {key_sql})"
+    grams = ngrams_sql(
+        text_col, n, distinct=True, drop_empty=True, key=gram_key(portable)
     )
     bench_keys = (
         benchmark_keys
@@ -912,10 +874,8 @@ def contamination_fraction(
     frames), not a shuffle."""
     if (benchmark is None) == (benchmark_keys is None):
         raise ValueError("pass exactly one of benchmark or benchmark_keys")
-    key_sql = "md5(g)" if portable else "xxhash64(g)"
-    grams = (
-        f"transform(filter(array_distinct({_ngram_sql(text_col, n)}), "
-        f"g -> g != ''), g -> {key_sql})"
+    grams = ngrams_sql(
+        text_col, n, distinct=True, drop_empty=True, key=gram_key(portable)
     )
     bench_keys = (
         benchmark_keys
@@ -1015,11 +975,8 @@ def simhash64(
         spread(df)
         .select(
             F.col(id_col),
-            F.explode(
-                F.split(F.trim(F.col(text_col)), r"\s+")
-            ).alias("_t"),
+            F.expr(f"explode({tokens_sql(text_col, drop_empty=True)}) AS _t"),
         )
-        .where(F.col("_t") != "")
         .select(F.col(id_col), F.expr(tok_hash).alias("_h"))
     )
     packed = []
@@ -1463,21 +1420,19 @@ def contamination_spans(
     broadcasts; the per-doc rollup is min + count."""
     if (benchmark is None) == (benchmark_keys is None):
         raise ValueError("pass exactly one of benchmark or benchmark_keys")
-    key_fn = F.md5 if portable else F.xxhash64
     bench_keys = (
         benchmark_keys
         if benchmark_keys is not None
         else benchmark_ngram_keys(benchmark, id_col, text_col, n, portable)
     )
-    grams = _ngram_sql(text_col, n)
     positioned = (
         spread(df)
         .select(
             F.col(id_col),
-            F.posexplode(F.expr(grams)).alias("__pos", "__g"),
+            F.posexplode(F.expr(ngrams_sql(text_col, n))).alias("__pos", "__g"),
         )
         .where(F.col("__g") != "")
-        .select(id_col, "__pos", key_fn(F.col("__g")).alias("__k"))
+        .selectExpr(id_col, "__pos", f"{gram_key(portable)}(__g) AS __k")
     )
     return (
         positioned.join(F.broadcast(bench_keys), "__k")
@@ -2080,16 +2035,13 @@ def duplicate_spans(
     partitioned, never global. No pair join anywhere: cost is linear
     in corpus token count.
     """
-    key_fn = F.md5 if portable else F.xxhash64
     positioned = (
         spread(df)
         .select(
             F.col(id_col),
-            F.posexplode(F.expr(_ngram_sql(text_col, n))).alias(
-                "__pos", "__g"
-            ),
+            F.posexplode(F.expr(ngrams_sql(text_col, n))).alias("__pos", "__g"),
         )
-        .select(id_col, "__pos", key_fn(F.col("__g")).alias("__k"))
+        .selectExpr(id_col, "__pos", f"{gram_key(portable)}(__g) AS __k")
     )
     dup_keys = (
         positioned.groupBy("__k")
@@ -2165,7 +2117,7 @@ def excise_duplicate_spans(
     )
     toks = df.select(
         F.col(id_col),
-        F.expr(f"split(trim({text_col}), '\\\\s+')").alias("__w"),
+        F.expr(tokens_sql(text_col)).alias("__w"),
     )
     joined = toks.join(per_doc, id_col, "left")
     kept = F.expr(
@@ -2292,7 +2244,7 @@ def source_overlap_matrix(
         df.where(F.col(text_col).isNotNull() & F.col(group_col).isNotNull())
         .select(
             F.col(group_col).alias("__s"),
-            F.explode(word_ngrams(text_col, n)).alias("__g"),
+            F.expr(f"explode({ngrams_sql(text_col, n)}) AS __g"),
         )
         .distinct()
     )
@@ -2453,9 +2405,8 @@ def source_overlap_minhash(
         df.where(F.col(text_col).isNotNull() & F.col(group_col).isNotNull())
         .select(
             F.col(group_col).alias("__s"),
-            F.explode(word_ngrams(text_col, n)).alias("__g"),
+            F.expr(f"explode({ngrams_sql(text_col, n, drop_empty=True)}) AS __g"),
         )
-        .where(F.col("__g") != "")
     )
     ab = grams.select(
         "__s",

@@ -31,8 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from diseasystore_spark.pipeline._util import spread
-from diseasystore_spark.pipeline.dedup import _ngram_sql
+from diseasystore_spark.pipeline._util import ngrams_sql, spread
 
 
 def hashed_ngram_features(
@@ -87,7 +86,7 @@ def _bucket_rows(
     # the bucket projection and the map-side partial aggregate in one
     # codegen pipeline, so nothing wider than a bigint crosses any
     # exchange, exactly as before.
-    grams = F.expr(f"filter({_ngram_sql(text_col, n)}, g -> g != '')")
+    grams = F.expr(ngrams_sql(text_col, n, drop_empty=True))
     return (
         spread(df)
         .select(F.col(id_col), F.explode(grams).alias("g"))

@@ -114,12 +114,9 @@ def bloom_build_ngrams(
     """
     if m <= 0 or k <= 0:
         raise ValueError("m and k must be positive")
-    from diseasystore_spark.pipeline._util import spread
-    from diseasystore_spark.pipeline.dedup import _ngram_sql
+    from diseasystore_spark.pipeline._util import ngrams_sql, spread
 
-    grams = (
-        f"filter(array_distinct({_ngram_sql(text_col, n)}), g -> g != '')"
-    )
+    grams = ngrams_sql(text_col, n, distinct=True, drop_empty=True)
     ab = (
         spread(df)
         .select(
@@ -185,17 +182,14 @@ def bloom_decontaminate(
     """
     if (benchmark is None) == (bloom is None):
         raise ValueError("pass exactly one of benchmark or bloom")
-    from diseasystore_spark.pipeline._util import spread
-    from diseasystore_spark.pipeline.dedup import _ngram_sql
+    from diseasystore_spark.pipeline._util import ngrams_sql, spread
 
     filt = (
         bloom
         if bloom is not None
         else bloom_build_ngrams(benchmark, text_col, n, m, k)
     )
-    grams = (
-        f"filter(array_distinct({_ngram_sql(text_col, n)}), g -> g != '')"
-    )
+    grams = ngrams_sql(text_col, n, distinct=True, drop_empty=True)
     probe = (
         f"forall(sequence(0, k - 1), i -> "
         f"(shiftright(coalesce(element_at(bloom, (s.a + i * s.b) % m DIV 64),"
@@ -251,16 +245,11 @@ def cms_build_tokens(
     depth*width partials."""
     if depth <= 0 or width <= 0:
         raise ValueError("depth and width must be positive")
-    from diseasystore_spark.pipeline._util import spread
+    from diseasystore_spark.pipeline._util import spread, tokens_sql
 
     toks = (
         spread(df)
-        .select(
-            F.explode(
-                F.expr(f"filter(split(trim({text_col}), '\\\\s+'), "
-                       "t -> t != '')")
-            ).alias("__t")
-        )
+        .select(F.expr(f"explode({tokens_sql(text_col, drop_empty=True)}) AS __t"))
         .select(F.expr(_ab_struct_sql("__t")).alias("__ab"))
     )
     return (

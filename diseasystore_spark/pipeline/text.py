@@ -11,7 +11,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from diseasystore_spark.pipeline._util import spread
+from diseasystore_spark.pipeline._util import (
+    ngram_window_sql,
+    ngrams_sql,
+    spread,
+    tokens_sql,
+)
 from diseasystore_spark.trace import note
 
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "that", "it", "for"]
@@ -27,15 +32,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def _tokens(text_col: str) -> Column:
-    return F.split(F.trim(F.col(text_col)), r"\s+")
-
-
-def _count_in(tokens: Column, words: list[str]) -> Column:
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(tokens, lambda t: F.array_contains(arr, t)))
-
-
 def _sql_in_list(words: list[str]) -> str:
     return ",".join("'" + w.replace("'", "\\'") + "'" for w in words)
 
@@ -43,7 +39,7 @@ def _sql_in_list(words: list[str]) -> str:
 def token_stats_struct(text_col: str) -> Column:
     """Every token-derived counter in ONE pass over ONE tokenization:
     the token array is bound once as a lambda variable (the
-    ``_ngram_sql`` single-element ``transform`` binding trick), and
+    ``ngrams_sql`` single-element ``transform`` binding trick), and
     each membership count is an int-accumulator ``aggregate`` with an
     ``IN``-set test — no per-token array allocation, no re-split.
 
@@ -72,7 +68,7 @@ def token_stats_struct(text_col: str) -> Column:
             f"({_sql_in_list(LANG_MARKERS[lang])}), 1, 0)) AS c_{lang}"
         )
     return F.expr(
-        f"element_at(transform(array(split(trim({text_col}), '\\\\s+')), "
+        f"element_at(transform(array({tokens_sql(text_col)}), "
         f"w -> struct({', '.join(fields)})), 1)"
     )
 
@@ -197,8 +193,6 @@ def repetition_stats(
     Zero shuffle: every statistic is a per-ROW array-lambda over the
     n-gram array (top count is an O(distinct x total) nested lambda —
     fine for documents, the per-row work is bounded by doc length)."""
-    from diseasystore_spark.pipeline.dedup import _ngram_sql
-
     cols: list[Column] = [F.col(id_col)]
     guards = []
     for n in ns:
@@ -222,10 +216,7 @@ def repetition_stats(
     with_ng = spread(df).select(
         F.col(id_col),
         F.col(text_col),
-        *[
-            F.expr(_ngram_sql(text_col, n)).alias(f"__ng{n}")
-            for n in ns
-        ],
+        *[F.expr(ngrams_sql(text_col, n)).alias(f"__ng{n}") for n in ns],
     )
     out = with_ng
     for g in guards:
@@ -250,7 +241,7 @@ def term_frequencies(
     the Generate operator re-evaluates the tokenization lambda per
     OUTPUT row (once per token, not once per document) — measured
     10x on the sf1 corpus (32 s -> 3.4 s for the tf frame)."""
-    tk = F.filter(_tokens(text_col), lambda t: t != F.lit(""))
+    tk = F.expr(tokens_sql(text_col, drop_empty=True))
     base = df.select(F.col(id_col), tk.alias("__toks")).select(
         F.col(id_col),
         F.size("__toks").alias("dl"),
@@ -344,7 +335,7 @@ def bm25_top_terms(
     # tf feeds the df aggregate AND the scoring join; recompute beats
     # materialization here (see tfidf_top_terms).
     tf = term_frequencies(df, id_col, text_col)
-    tk = F.filter(_tokens(text_col), lambda t: t != F.lit(""))
+    tk = F.expr(tokens_sql(text_col, drop_empty=True))
     stats = df.select(F.size(tk).alias("dl")).agg(
         F.count(F.lit(1)).alias("__n"),
         F.sum(F.when(F.col("dl") > 0, F.col("dl"))).alias("__s"),
@@ -530,7 +521,7 @@ def chunk_documents(
     """
     toks = df.select(
         F.col(id_col),
-        F.posexplode(_tokens(text_col)).alias("__pos", "__tok"),
+        F.posexplode(F.expr(tokens_sql(text_col))).alias("__pos", "__tok"),
     ).where(F.col("__tok") != "")
     w = Window.partitionBy(id_col).orderBy("__pos")
     start = F.coalesce(
@@ -794,7 +785,7 @@ def tokenize_to_ids(
     toks = df.select(
         F.col(id_col),
         F.posexplode(
-            F.filter(_tokens(text_col), lambda t: t != F.lit(""))
+            F.expr(tokens_sql(text_col, drop_empty=True))
         ).alias("pos", "term"),
     )
     return toks.join(ranked, "term", "left").select(
@@ -1261,7 +1252,7 @@ def gopher_quality_filter(
         "OR x LIKE '%...', 1, 0)) AS ellipsis_lines)"
     )
     stats = F.expr(
-        f"element_at(transform(array(split(trim({text_col}), '\\\\s+')), "
+        f"element_at(transform(array({tokens_sql(text_col)}), "
         f"w -> element_at(transform(array(split({text_col}, '\\n')), "
         f"l -> {counters}), 1)), 1)"
     )
@@ -1337,7 +1328,7 @@ def c4_clean(
     work, whole-stage codegen, zero shuffles, zero Python.
     """
     keep_line = (
-        f"size(split(trim(x), '\\\\s+')) >= {min_line_words} "
+        f"size({tokens_sql('x')}) >= {min_line_words} "
         f"AND x rlike '[.!?][\"\\']?$' "
         f"AND NOT lower(x) rlike 'javascript'"
     )
@@ -1489,7 +1480,7 @@ def bigram_pmi(
     """
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    tk = F.filter(_tokens(text_col), lambda t: t != F.lit(""))
+    tk = F.expr(tokens_sql(text_col, drop_empty=True))
     toks = df.select(tk.alias("__toks"))
     uni = (
         toks.select(F.explode("__toks").alias("w"))
@@ -1576,8 +1567,6 @@ def corpus_ngram_diversity(
     distinct for ``sketch.hll_build(..., [group_col])`` and take the
     estimate — the metric is a monitoring ratio, not a key.
     """
-    from diseasystore_spark.pipeline.dedup import _ngram_sql
-
     if not ns:
         raise ValueError("ns must name at least one n-gram order")
     parts = []
@@ -1586,8 +1575,8 @@ def corpus_ngram_diversity(
             raise ValueError("n-gram orders must be >= 1")
         grams = df.select(
             F.col(group_col),
-            F.explode(F.expr(_ngram_sql(text_col, n))).alias("__g"),
-        ).where(F.col("__g") != "")
+            F.expr(f"explode({ngrams_sql(text_col, n, drop_empty=True)}) AS __g"),
+        )
         parts.append(
             grams.groupBy(group_col).agg(
                 F.lit(n).cast("int").alias("n"),
@@ -1932,7 +1921,7 @@ def bigram_lm_scores(
     train = train_df if train_df is not None else df
 
     def transitions(frame: DataFrame) -> DataFrame:
-        toks = F.filter(_tokens(text_col), lambda t: t != F.lit(""))
+        toks = F.expr(tokens_sql(text_col, drop_empty=True))
         base = frame.where(F.col(text_col).isNotNull()).select(
             F.col(id_col), F.posexplode(toks).alias("__i", "__w")
         )
@@ -1947,7 +1936,7 @@ def bigram_lm_scores(
         train.where(F.col(text_col).isNotNull())
         .select(
             F.explode(
-                F.filter(_tokens(text_col), lambda t: t != F.lit(""))
+                F.expr(tokens_sql(text_col, drop_empty=True))
             ).alias("__w")
         )
         .groupBy("__w")
@@ -2210,13 +2199,7 @@ def gopher_repetition_filter(
     )
 
     def grams_sorted(n: int) -> str:
-        # sequence(1, 0) is DESCENDING in Spark -> guard short docs
-        return (
-            f"array_sort(IF(size(w) >= {n}, "
-            f"transform(sequence(1, size(w) - {n} + 1), "
-            f"i -> array_join(slice(w, i, {n}), ' ')), "
-            "array()))"
-        )
+        return f"array_sort({ngram_window_sql('w', n)})"
 
     def excess_fold(arr: str) -> str:
         # arr is SORTED: excess occurrences are adjacent-equal pairs.
@@ -2270,7 +2253,7 @@ def gopher_repetition_filter(
     )
     # bind the token array w and the raw text t exactly once each
     stats = F.expr(
-        f"element_at(transform(array(split(trim(__t), '\\\\s+')), w -> "
+        f"element_at(transform(array({tokens_sql('__t')}), w -> "
         f"element_at(transform(array(__t), t -> {counters}), 1)), 1)"
     )
     g = base.select(

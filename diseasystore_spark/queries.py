@@ -31,6 +31,7 @@ from diseasystore_spark.functions.intervals import (
 )
 from diseasystore_spark.operators.aggregators import key_join_sum
 from diseasystore_spark.operators.interlace import interlace, truncate_interlace
+from diseasystore_spark.pipeline._util import tokens_sql
 from diseasystore_spark.plans.feature_handler import FeatureHandler
 from diseasystore_spark.plans.store import Diseasystore
 from diseasystore_spark.stores.tpch import TpchDiseasystore
@@ -1065,7 +1066,7 @@ def q22_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
     return docs.select(
         "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("ws_tokens"),
+        F.expr(f"size({tokens_sql('text')})").alias("ws_tokens"),
         F.regexp_count(F.col("text"), F.lit(pattern)).alias("bpeish_tokens"),
     )
 
@@ -1816,8 +1817,8 @@ def q45_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary, never the token stream."""
     docs = _read(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
-    ).where(F.col("token") != "")
+        F.expr(f"explode({tokens_sql('text', drop_empty=True)}) AS token")
+    )
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     # orderBy + limit compiles to TakeOrderedAndProject — each task
     # keeps its own top-25 and only those reach the driver-side merge;
@@ -4254,7 +4255,7 @@ def q90_cms_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     true_counts = (
         docs.select(
             F.explode(
-                F.expr("filter(split(trim(text), '\\\\s+'), t -> t != '')")
+                F.expr(tokens_sql("text", drop_empty=True))
             ).alias("term")
         )
         .groupBy("term")
@@ -5115,7 +5116,7 @@ def q105_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tok = _read(spark, sf_dir, "documents").select(
         "lang",
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
+        F.expr(f"size({tokens_sql('text')})")
         .cast("double")
         .alias("n_tokens"),
     )
@@ -5156,7 +5157,7 @@ def q106_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
+        F.expr(f"size({tokens_sql('text')})")
         .cast("double")
         .alias("n_tokens"),
     )
@@ -6940,7 +6941,7 @@ def q138_hll_distinct_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "source",
         F.explode(
-            F.expr(r"filter(split(trim(text), '\\s+'), t -> t != '')")
+            F.expr(tokens_sql("text", drop_empty=True))
         ).alias("token"),
     )
     est = hll_estimate(
@@ -7650,9 +7651,8 @@ def q148_annotator_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read(spark, sf_dir, "documents").select(
         (F.col("n_chars") >= 400).alias("long_doc"),
-        (
-            F.size(F.expr(r"filter(split(trim(text), '\\s+'), t -> t != '')"))
-            >= 60
+        F.expr(
+            f"size({tokens_sql('text', drop_empty=True)}) >= 60"
         ).alias("many_tokens"),
     )
     return annotator_agreement(docs, "long_doc", "many_tokens")
@@ -7799,9 +7799,8 @@ def q150_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.least(F.col("n_chars"), F.lit(1000)) / F.lit(1000.0)).alias(
             "score"
         ),
-        (
-            F.size(F.expr(r"filter(split(trim(text), '\\s+'), t -> t != '')"))
-            >= 60
+        F.expr(
+            f"size({tokens_sql('text', drop_empty=True)}) >= 60"
         ).alias("label"),
     )
     return calibration_bins(docs, "score", "label", n_bins=10)
@@ -7841,9 +7840,8 @@ def q151_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.least(F.col("n_chars"), F.lit(1000)) / F.lit(1000.0)).alias(
             "score"
         ),
-        (
-            F.size(F.expr(r"filter(split(trim(text), '\\s+'), t -> t != '')"))
-            >= 60
+        F.expr(
+            f"size({tokens_sql('text', drop_empty=True)}) >= 60"
         ).alias("label"),
     )
     return roc_auc(docs, "score", "label")
@@ -8270,7 +8268,7 @@ def q159_spearman_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers), quantized frames bound every window (q151 pattern)."""
     from diseasystore_spark.operators.stats import spearman_rho
 
-    toks = F.expr(r"filter(split(trim(text), '\\s+'), t -> t != '')")
+    toks = F.expr(tokens_sql("text", drop_empty=True))
     docs = _read(spark, sf_dir, "documents").select(
         (F.least(F.col("n_chars"), F.lit(1000)) / F.lit(1000.0)).alias(
             "score_len"
@@ -8338,9 +8336,8 @@ def q160_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.least(F.col("n_chars"), F.lit(1000)) / F.lit(1000.0)).alias(
             "score"
         ),
-        (
-            F.size(F.expr(r"filter(split(trim(text), '\\s+'), t -> t != '')"))
-            >= 60
+        F.expr(
+            f"size({tokens_sql('text', drop_empty=True)}) >= 60"
         ).alias("label"),
     )
     return ks_statistic(docs, "score", "label")
@@ -8397,9 +8394,8 @@ def q161_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.least(F.col("n_chars"), F.lit(1000)) / F.lit(1000.0)).alias(
             "score"
         ),
-        (
-            F.size(F.expr(r"filter(split(trim(text), '\\s+'), t -> t != '')"))
-            >= 60
+        F.expr(
+            f"size({tokens_sql('text', drop_empty=True)}) >= 60"
         ).alias("label"),
     )
     return average_precision(docs, "score", "label").withColumn(
@@ -8455,7 +8451,7 @@ def q162_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor divisions, never a float sum."""
     from diseasystore_spark.pipeline.validate import krippendorff_alpha
 
-    toks = F.expr(r"filter(split(trim(text), '\\s+'), t -> t != '')")
+    toks = F.expr(tokens_sql("text", drop_empty=True))
     docs = _read(spark, sf_dir, "documents").select(
         "doc_id",
         (F.col("n_chars") >= 300).alias("lf_len"),
@@ -9385,9 +9381,8 @@ def q176_roc_auc_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.least(F.col("n_chars"), F.lit(1000)) / F.lit(1000.0)).alias(
             "score"
         ),
-        (
-            F.size(F.expr(r"filter(split(trim(text), '\\s+'), t -> t != '')"))
-            >= 60
+        F.expr(
+            f"size({tokens_sql('text', drop_empty=True)}) >= 60"
         ).alias("label"),
     )
     return roc_auc_by_group(docs, "score", "label", ["lang"])

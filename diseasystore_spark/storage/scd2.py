@@ -124,6 +124,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from diseasystore_spark.contract import SCD2_COLUMNS
+from diseasystore_spark.functions.intervals import _lit_sql
 from diseasystore_spark.storage.backends import (
     CommitBackend,
     LocalCommitBackend,
@@ -176,20 +177,10 @@ def _month_range(lo: str, hi: str) -> list[str]:
     return out
 
 
-def _ts_sql(ts: datetime.datetime) -> str:
-    """The SQL literal of the instant ``F.lit(ts)`` makes: a naive
-    ``ts`` is read in the Python process's local time zone, as PySpark's
-    converter reads it, and the literal is written in UTC with an
-    explicit zone, so the session time zone does not move it."""
-    micros = T.TimestampType().toInternal(ts)
-    utc = datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=micros)
-    return f"TIMESTAMP'{utc.isoformat(sep=' ')}Z'"
-
-
 def _valid_at(ts) -> Column:
     """The rows of the snapshot at transaction time ``ts``, as one SQL
     expression."""
-    at = _ts_sql(ts)
+    at = _lit_sql(ts)
     return F.expr(f"from_ts <= {at} AND (until_ts IS NULL OR until_ts > {at})")
 
 
@@ -224,7 +215,7 @@ def _merged_rows(joined: DataFrame, columns: list[str], ts) -> DataFrame:
     ``columns`` order: kept rows verbatim, closed rows with ``until_ts
     = ts``, inserted rows open from ``ts``. One ``selectExpr`` call,
     however wide the row."""
-    at = _ts_sql(ts)
+    at = _lit_sql(ts)
     bookkeeping = {
         "checksum": "coalesce(checksum, __k)",
         "from_ts": f"coalesce(from_ts, {at})",
@@ -471,6 +462,9 @@ class ParquetFeatureStore:
                 else LocalCommitBackend()
             )
         self.commit_backend = commit_backend
+        #: log dir -> {file name: its rows}; log files are immutable and
+        #: uuid-named, so a name read once never needs reading again
+        self._log_tables: dict[str, dict[str, pa.Table]] = {}
         os.makedirs(root, exist_ok=True)
 
     # ------------------------------------------------------------- paths
@@ -2036,22 +2030,36 @@ class ParquetFeatureStore:
             },
             schema=self._LOG_ARROW_SCHEMA,
         )
-        pq.write_table(table, os.path.join(ldir, f"{uuid.uuid4().hex}.parquet"))
+        self._write_log_file(ldir, table)
+
+    @staticmethod
+    def _write_log_file(ldir: str, table: pa.Table) -> None:
+        # written under a name the reader skips, then renamed: a
+        # concurrent read never opens a partly written log file
+        path = os.path.join(ldir, f"{uuid.uuid4().hex}.parquet")
+        pq.write_table(table, path + ".tmp")
+        os.replace(path + ".tmp", path)
 
     def read_logs_pandas(self, schema: str) -> pd.DataFrame:
+        """The schema's log rows. Lists the log dir on every call but
+        reads only files not read before; a name that is gone (deleted
+        or rewritten under a new name) is forgotten. The cache is replaced,
+        never mutated, so concurrent callers each see a whole one."""
         ldir = self._logs_dir(schema)
-        files = (
-            [
-                os.path.join(ldir, f)
-                for f in os.listdir(ldir)
-                if f.endswith(".parquet")
-            ]
+        names = (
+            [f for f in os.listdir(ldir) if f.endswith(".parquet")]
             if os.path.isdir(ldir)
             else []
         )
-        if not files:
+        seen = self._log_tables.get(ldir, {})
+        tables = {
+            f: seen[f] if f in seen else pq.read_table(os.path.join(ldir, f))
+            for f in names
+        }
+        self._log_tables[ldir] = tables
+        if not tables:
             return self._LOG_ARROW_SCHEMA.empty_table().to_pandas()
-        return pa.concat_tables(pq.read_table(f) for f in files).to_pandas()
+        return pa.concat_tables(tables.values()).to_pandas()
 
     def read_logs(self, schema: str) -> DataFrame:
         """Logs as a Spark DataFrame (for relational consumers)."""
@@ -2070,11 +2078,11 @@ class ParquetFeatureStore:
         shutil.rmtree(ldir, ignore_errors=True)
         if len(keep):
             os.makedirs(ldir, exist_ok=True)
-            pq.write_table(
+            self._write_log_file(
+                ldir,
                 pa.Table.from_pandas(
                     keep, schema=self._LOG_ARROW_SCHEMA, preserve_index=False
                 ),
-                os.path.join(ldir, f"{uuid.uuid4().hex}.parquet"),
             )
 
     # -------------------------------------------------------------- locks

@@ -89,3 +89,75 @@ def test_scd2_update_path_expressions_are_one_command_each(spark, monkeypatch):
             )
             build()
         assert sent[0] <= 3
+
+
+def test_study_period_clamps_are_one_expression_each(spark, monkeypatch):
+    """The study-period overlap filter and clamp sit on every
+    ``get_feature`` and ``key_join_features`` (q02 builds them three
+    times). With date bounds each bound expression is one SQL expression
+    whose analyzed plan equals the Column form's (built from the public
+    ``case_max``/``case_min``): the Column forms sent 24 and 48 commands."""
+    import datetime
+    import re
+
+    from pyspark.sql import functions as F
+
+    from diseasystore_spark.functions.intervals import (
+        case_max,
+        case_min,
+        clamp_to_study_period,
+        overlaps_study_period,
+    )
+
+    df = spark.sql(
+        "SELECT 1 AS k, DATE'2020-01-05' AS valid_from, "
+        "CAST(NULL AS DATE) AS valid_until"
+    )
+
+    def column_clamp(a, b):
+        a, b = F.lit(a), F.lit(b)
+        return df.withColumns(
+            {
+                "valid_from": case_max(F.col("valid_from"), a),
+                "valid_until": F.coalesce(case_min(F.col("valid_until"), b), b),
+            }
+        )
+
+    def column_overlaps(a, b):
+        return df.where(
+            (F.col("valid_from") <= F.lit(b))
+            & ((F.col("valid_until") > F.lit(a)) | F.col("valid_until").isNull())
+        )
+
+    def analyzed(frame):
+        return re.sub(r"#\d+L?", "", frame._jdf.queryExecution().analyzed().toString())
+
+    for a, b in (
+        (datetime.date(2020, 1, 1), datetime.date(2020, 2, 1)),
+        (datetime.datetime(2020, 1, 1, 5), datetime.datetime(2020, 2, 1)),
+    ):
+        assert analyzed(clamp_to_study_period(df, a, b)) == analyzed(column_clamp(a, b))
+        assert analyzed(df.where(overlaps_study_period(a, b))) == analyzed(
+            column_overlaps(a, b)
+        )
+
+    a, b = datetime.date(2020, 1, 1), datetime.date(2020, 2, 1)
+    sent = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    for build, cap in (
+        (lambda: overlaps_study_period(a, b), 3),
+        (lambda: clamp_to_study_period(df, a, b), 20),
+    ):
+        build()
+        sent[0] = 0
+        with monkeypatch.context() as m:
+            m.setattr(
+                py4j.clientserver.ClientServerConnection, "send_command", counting
+            )
+            build()
+        assert sent[0] <= cap, sent[0]

@@ -4,6 +4,9 @@ hyperplane ANN) are validated against their exact counterparts."""
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -202,15 +205,76 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
     assert not missed, f"LSH missed high-similarity pairs: {missed}"
 
 
+def _xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as a signed 64-bit integer: Spark's ``xxhash64``
+    of a string (its default seed is 42)."""
+    p1, p2, p3 = 11400714785074694791, 14029467366897019727, 1609587929392839161
+    p4, p5, m = 9650029242287828579, 2870177450012600261, (1 << 64) - 1
+
+    def rotl(x, r):
+        return ((x << r) | (x >> (64 - r))) & m
+
+    def rnd(acc, lane):
+        return rotl((acc + lane * p2) & m, 31) * p1 & m
+
+    def word(i, width):
+        return int.from_bytes(data[i : i + width], "little")
+
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + p1 + p2) & m, (seed + p2) & m, seed, (seed - p1) & m]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = rnd(v[j], word(i, 8))
+                i += 8
+        h = (rotl(v[0], 1) + rotl(v[1], 7) + rotl(v[2], 12) + rotl(v[3], 18)) & m
+        for x in v:
+            h = ((h ^ rnd(0, x)) * p1 + p4) & m
+    else:
+        h = (seed + p5) & m
+    h = (h + n) & m
+    while i + 8 <= n:
+        h = (rotl(h ^ rnd(0, word(i, 8)), 27) * p1 + p4) & m
+        i += 8
+    if i + 4 <= n:
+        h = (rotl(h ^ (word(i, 4) * p1 & m), 23) * p2 + p3) & m
+        i += 4
+    while i < n:
+        h = rotl(h ^ (data[i] * p5 & m), 11) * p1 & m
+        i += 1
+    h = (h ^ (h >> 33)) * p2 & m
+    h = (h ^ (h >> 29)) * p3 & m
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def _py_ngrams(text, n, distinct=False, drop_empty=False, key=None):
+    """Pure-Python reference of the builder's rule: split the
+    space-trimmed text on ASCII whitespace runs, n-grams joined by one
+    space, none for a text shorter than n tokens."""
+    if text is None:
+        return None
+    toks = re.split(r"\s+", text.strip(" "), flags=re.ASCII)
+    grams = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+    if distinct:
+        grams = list(dict.fromkeys(grams))
+    if drop_empty:
+        grams = [g for g in grams if g != ""]
+    if key == "md5":
+        grams = [hashlib.md5(g.encode()).hexdigest() for g in grams]
+    elif key == "xxhash64":
+        grams = [_xxhash64(g.encode()) for g in grams]
+    return grams
+
+
 def test_shingles_short_docs(spark):
     """Docs shorter than n tokens must yield zero shingles, not crash:
     Spark's sequence(1, 0) is DESCENDING, so an unguarded position
-    sequence feeds slice() a start of 0 (regression test)."""
-    from diseasystore_spark.pipeline.dedup import (
-        jaccard_pairs,
-        minhash_signatures,
-        word_ngrams,
-    )
+    sequence feeds slice() a start of 0 (regression test). The builder
+    matches a pure-Python reference on whitespace edge cases, checked
+    in one Spark job."""
+    from diseasystore_spark.pipeline._util import ngrams_sql, tokens_sql
+    from diseasystore_spark.pipeline.dedup import jaccard_pairs, minhash_signatures
 
     df = spark.createDataFrame(
         [
@@ -222,9 +286,38 @@ def test_shingles_short_docs(spark):
         ],
         "doc_id bigint, text string",
     )
+    texts = [
+        "\tone two three\n",
+        "  one\t\ttwo\n three  one two ",
+        "\n",
+        " \t ",
+        "",
+        None,
+        "a a a a b a a",
+        "x",
+        "long words wrap past thirty two bytes " * 3,
+    ]
+    edge = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    cases = [
+        (n, distinct, drop_empty, key)
+        for n in (1, 2, 3, 4)
+        for distinct in (False, True)
+        for drop_empty in (False, True)
+        for key in (None, "md5", "xxhash64")
+    ]
+    cols = [F.expr(tokens_sql("text", drop_empty=d)) for d in (False, True)]
+    cols += [F.expr(ngrams_sql("text", *case)) for case in cases]
+    got = {r[0]: list(r[1:]) for r in edge.select("i", *cols).collect()}
+    for i, text in enumerate(texts):
+        want = [_py_ngrams(text, 1, drop_empty=d) for d in (False, True)]
+        want += [_py_ngrams(text, *case) for case in cases]
+        assert got[i] == want, (text, [
+            (c, g, w) for c, g, w in zip([0, 0, *cases], got[i], want) if g != w
+        ])
+
     grams = {
         r["doc_id"]: r["g"]
-        for r in df.select("doc_id", word_ngrams("text", 3).alias("g")).collect()
+        for r in df.select("doc_id", F.expr(ngrams_sql("text", 3)).alias("g")).collect()
     }
     assert grams[1] == [] and grams[2] == [] and grams[3] == []
     assert grams[4] == ["one two three", "two three four"]

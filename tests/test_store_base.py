@@ -168,6 +168,70 @@ def test_drop_diseasystore_pattern(store):
     assert be.list_tables("ds") == []
 
 
+def test_read_logs_reads_each_log_file_once(store, monkeypatch):
+    """Log files are immutable and uuid-named, so a store reads each one
+    once: a repeat read opens no file, an append makes the next read
+    open one, and a ``delete_logs_for`` rewrite is picked up by name."""
+    import pyarrow.parquet as pq
+
+    be = store.backend
+    reads = []
+    read_table = pq.read_table
+
+    def counting(path, *args, **kwargs):
+        reads.append(path)
+        return read_table(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+    ts = datetime.datetime(2024, 6, 1)
+    be.append_log("ds", "ds.dummy_cyl", ts, "a", True)
+    be.append_log("ds", "ds.dummy_vs", ts, "b", True)
+    assert sorted(be.read_logs_pandas("ds")["message"]) == ["a", "b"]
+    assert len(reads) == 2
+    reads.clear()
+    assert sorted(be.read_logs_pandas("ds")["message"]) == ["a", "b"]
+    assert reads == []
+    be.append_log("ds", "ds.dummy_vs", ts, "c", True)
+    assert sorted(be.read_logs_pandas("ds")["message"]) == ["a", "b", "c"]
+    assert len(reads) == 1
+    be.delete_logs_for("ds", ["ds.dummy_cyl"])
+    reads.clear()
+    logs = be.read_logs_pandas("ds")
+    assert sorted(logs["message"]) == ["b", "c"] and set(logs["table"]) == {"dummy_vs"}
+    assert len(reads) == 1
+    fresh = type(be)(be.spark, be.root).read_logs_pandas("ds")
+    assert sorted(fresh["message"]) == ["b", "c"]
+    be.delete_logs_for("ds", ["ds.dummy_vs"])
+    assert be.read_logs_pandas("ds").empty
+
+
+def test_read_logs_under_concurrent_appends(store):
+    """Threads appending and reading one schema's log through one store
+    (as the conformance matrix's workers do) each see every row they
+    appended, whatever the interleaving of the cached reads."""
+    import concurrent.futures
+    import sys
+
+    be = store.backend
+    ts = datetime.datetime(2024, 6, 1)
+
+    def worker(i):
+        for j in range(10):
+            be.append_log("ds", f"ds.t{i}", ts, f"{i}-{j}", True)
+            seen = set(be.read_logs_pandas("ds")["message"])
+            assert {f"{i}-{k}" for k in range(j + 1)} <= seen
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with concurrent.futures.ThreadPoolExecutor(8) as pool:
+            for f in [pool.submit(worker, i) for i in range(8)]:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(be.read_logs_pandas("ds")) == 80
+
+
 def test_slice_ts_type_polymorphism(spark, tmp_path):
     """The engine accepts Date / datetime / ISO strings for slice_ts
     and treats equal instants as the same slice, including mixed types
